@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may
+run on). Prints ONE JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "pages_per_sec": ...}
@@ -772,7 +773,9 @@ def run_scaling(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from crawl4ai_spark.session import default_cores
+
+    cpus = default_cores()
     if os.environ.get("SPARK_GRAFT_BENCH_MODE") == "extract_scale":
         rep = int(os.environ.get("SPARK_GRAFT_REPLICATE", "8"))
         print(json.dumps(run_extract_scale(sf_dir, cpus, rep)))

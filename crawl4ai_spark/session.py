@@ -26,6 +26,16 @@ def _warehouse_dir() -> str:
     return os.path.join(tempfile.gettempdir(), f"c4ai_spark_warehouse_{uid}")
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "crawl4ai_spark",
     cores: int | None = None,
@@ -33,7 +43,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(8, cores * 2)
     # the pre-warmed worker daemon (worker_daemon.py) must be importable in

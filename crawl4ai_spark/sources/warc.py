@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 
 _CRLF = b"\r\n"
 _GZIP_MAGIC = b"\x1f\x8b"
+# compressed bytes handed to zlib per call while gunzipping a member
+_GUNZIP_WINDOW = 1 << 14
 
 RECORD_SCHEMA = (
     "segment string, url string, warc_ts timestamp, record_type string, "
@@ -72,7 +74,7 @@ def build_warc_record(
         else:
             head = (
                 f"GET {url} HTTP/1.1\r\nHost: placeholder\r\n\r\n"
-            ).encode("ascii")
+            ).encode("utf-8")
         block = head + payload
         ctype = f"application/http; msgtype={record_type}"
     else:
@@ -91,7 +93,9 @@ def build_warc_record(
         f"Content-Length: {len(block)}".encode("ascii"),
     ]
     if url is not None:
-        headers.insert(2, f"WARC-Target-URI: {url}".encode("ascii"))
+        # WARC 1.1 allows UTF-8 header values; real crawl output has
+        # non-ASCII URLs, and _header_str reads them back unchanged
+        headers.insert(2, f"WARC-Target-URI: {url}".encode("utf-8"))
     return _CRLF.join(headers) + _CRLF * 2 + block + _CRLF * 2
 
 
@@ -107,6 +111,15 @@ def build_warc_bytes(
         raw = build_warc_record(record_type, url, date, payload)
         out.append(gzip.compress(raw) if per_record_gzip else raw)
     return b"".join(out)
+
+
+def _header_str(raw: bytes) -> str:
+    """A header value as text: UTF-8 (what WARC 1.1 and this module's
+    writer use), else latin-1, which decodes any byte string."""
+    try:
+        return raw.decode("utf-8")
+    except UnicodeDecodeError:
+        return raw.decode("latin-1")
 
 
 def _parse_http_response(block: bytes) -> tuple[int | None, str | None, bytes]:
@@ -130,7 +143,7 @@ def _parse_http_response(block: bytes) -> tuple[int | None, str | None, bytes]:
     for ln in lines[1:]:
         k, _, v = ln.partition(b":")
         if k.strip().lower() == b"content-type":
-            ctype = v.strip().decode("latin-1")
+            ctype = _header_str(v.strip())
     return status, ctype, body
 
 
@@ -155,11 +168,20 @@ def _gunzip_members(
     import zlib
 
     out = bytearray()
+    view = memoryview(data)
     pos, n = 0, len(data)
     while pos < n:
+        # feed the member in bounded windows: slicing the REST of the
+        # segment per member (and the unused_data that mirrors it) would
+        # copy O(members x segment bytes) — quadratic on a CC segment
         d = zlib.decompressobj(wbits=31)
+        parts = []
+        end = pos
         try:
-            chunk = d.decompress(data[pos:])
+            while not d.eof and end < n:
+                window = view[end:end + _GUNZIP_WINDOW]
+                parts.append(d.decompress(window))
+                end += len(window)
         except zlib.error as e:
             if strict:
                 raise ValueError(
@@ -173,7 +195,8 @@ def _gunzip_members(
                     "before the member's end-of-stream marker"
                 )
             return bytes(out)
-        end = n - len(d.unused_data)
+        end -= len(d.unused_data)
+        chunk = b"".join(parts)
         if members is not None:
             members.append((len(out), len(chunk), pos, end - pos))
         out += chunk
@@ -233,11 +256,11 @@ def parse_warc_stream(
         for ln in data[pos:head_end].split(_CRLF)[1:]:
             if ln[:1] in (b" ", b"\t") and last_key is not None:
                 # LWS-folded continuation of the previous header value
-                headers[last_key] += " " + ln.strip().decode("latin-1")
+                headers[last_key] += " " + _header_str(ln.strip())
                 continue
             k, _, v = ln.partition(b":")
             last_key = k.strip().lower().decode("latin-1")
-            headers[last_key] = v.strip().decode("latin-1")
+            headers[last_key] = _header_str(v.strip())
         try:
             length = int(headers["content-length"])
         except (KeyError, ValueError):

@@ -46,3 +46,14 @@ def test_package_zip_from_zipimport_returns_archive(tmp_path):
     )
     assert out.stdout.strip() == str(shipped)  # the archive IS the artifact
     assert zipfile.ZipFile(shipped).namelist()  # and it was not clobbered
+
+
+def test_default_cores_follow_cpu_affinity(monkeypatch):
+    """Without SPARK_GRAFT_CPUS, sessions size ``local[N]`` to the CPUs
+    this process may run on, not to a fixed 32-core box."""
+    from crawl4ai_spark.session import default_cores
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3

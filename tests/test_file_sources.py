@@ -328,14 +328,15 @@ def test_warc_roundtrip_property():
     build_warc_bytes -> parse_warc_stream byte-exactly, in both layouts —
     arbitrary binary payloads (CRLFs, fake WARC headers, gzip magic
     inside bodies must not confuse the framing), every record type, and
-    offset ranges that re-parse to the same record."""
-    from hypothesis import given, settings
+    offset ranges that re-parse to the same record. URLs include
+    non-ASCII characters, which the writer stores as UTF-8."""
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from crawl4ai_spark.sources.warc import build_warc_bytes, parse_warc_stream
 
     url_chars = st.text(
-        alphabet="abcdefghijklmnopqrstuvwxyz0123456789/.-_?&=%~",
+        alphabet="abcdefghijklmnopqrstuvwxyz0123456789/.-_?&=%~éß漢字ü",
         min_size=1, max_size=40,
     )
     record = st.tuples(
@@ -348,6 +349,10 @@ def test_warc_roundtrip_property():
     )
 
     @given(st.lists(record, max_size=8), st.booleans())
+    @example([("response", "https://fuzz.example/ünï/漢字?q=é",
+               "2024-01-01T00:00:07Z", b"x"),
+              ("request", "https://fuzz.example/straße",
+               "2024-01-01T00:00:08Z", b"")], True)
     @settings(max_examples=150, deadline=None)
     def check(recs, gz):
         data = build_warc_bytes(recs, per_record_gzip=gz)
@@ -366,6 +371,42 @@ def test_warc_roundtrip_property():
             assert len(again) == 1 and again[0]["payload"] == payload
 
     check()
+
+
+def test_gunzip_many_members_records_and_offsets():
+    """A per-record-gzip segment of several thousand members — some
+    larger than the gunzip window — parses to the same records as its
+    plain twin, and every record's offset/length is exactly its own
+    compressed member's byte range."""
+    import gzip as _gzip
+    import random
+
+    from crawl4ai_spark.sources.warc import (
+        build_warc_bytes,
+        build_warc_record,
+        parse_warc_stream,
+    )
+
+    rng = random.Random(11)
+    recs = []
+    for i in range(3000):
+        size = 40_000 if i % 500 == 7 else rng.randint(0, 600)
+        recs.append((
+            "response" if i % 3 else "warcinfo",
+            f"https://m{i % 37}.example/p{i}",
+            "2024-01-01T00:00:00Z",
+            rng.randbytes(size),
+        ))
+    members = [_gzip.compress(build_warc_record(*r)) for r in recs]
+    data = b"".join(members)
+    plain = list(parse_warc_stream(build_warc_bytes(recs)))
+    out = list(parse_warc_stream(data, with_offsets=True))
+    assert len(out) == len(plain) == len(recs)
+    offset = 0
+    for member, p, r in zip(members, plain, out):
+        assert (r["offset"], r["length"]) == (offset, len(member))
+        assert {k: r[k] for k in p} == p
+        offset += len(member)
 
 
 def test_cdx_whole_stream_gzip_not_seekable(spark, tmp_path):

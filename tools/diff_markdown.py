@@ -13,7 +13,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/tools")
 
-from ref_markdown import reference_markdown  # noqa: E402
+from ref_markdown import reference_markdown, require_reference  # noqa: E402
 
 from crawl4ai_spark.html.markdown import generate_markdown_parts  # noqa: E402
 from crawl4ai_spark.html.md_fixtures import FIXTURE_BASE, FIXTURES  # noqa: E402
@@ -47,6 +47,7 @@ def _fuzz_docs(n: int):
 
 
 def main() -> int:
+    require_reference()
     verbose = "--verbose" in sys.argv
     n_fuzz = 0
     if "--fuzz" in sys.argv:

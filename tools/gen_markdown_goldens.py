@@ -21,7 +21,7 @@ sys.path.insert(0, "/root/repo")
 sys.path.insert(0, "/root/repo/tools")
 
 import duckdb  # noqa: E402
-from ref_markdown import reference_markdown  # noqa: E402
+from ref_markdown import reference_markdown, require_reference  # noqa: E402
 
 from crawl4ai_spark.html.md_fixtures import FIXTURE_BASE, FIXTURES  # noqa: E402
 from crawl4ai_spark.sources.synthetic import pages_sql  # noqa: E402
@@ -35,6 +35,7 @@ def _md5(s: str) -> str:
 
 
 def main() -> None:
+    require_reference()
     goldens = []
     for i, html in enumerate(FIXTURES):
         raw, cited, refs = reference_markdown(html, FIXTURE_BASE)
