@@ -30,6 +30,11 @@ caller knows about (input size, k):
 
 The order must be a TOTAL order (include a unique tie-break column) — all
 call sites order on a unique url/tiebreak last.
+
+Pass the tightest row bound you know as ``k``: ``min(k, input rows)``
+keeps exactly the rows ``k`` keeps, and the regime is picked from ``k``
+alone, so a configuration ceiling (``max_pages=10**9``) passed as ``k``
+sends a small input through the multi-job ``range_rank``.
 """
 
 from __future__ import annotations

@@ -30,11 +30,16 @@ One iteration =
                                 iteration number in the manifest is the
                                 resume point.
 
-Job budget per iteration: ONE fetch+extract job (which also materializes
-the ranked slice — the rank needs no count job of its own because the
-frontier row count rides in the snapshot manifest and upper-bounds every
-sizing decision), ONE discover+dedup job, plus the 3 concurrent snapshot
-writes; a capacity re-rank adds one job only in the over-budget case.
+Job budget per iteration: ONE count job on the cached ranked slice (it
+materializes the cache the fetch job would otherwise fill, and its exact
+row count sizes the Python stages, picks the probe broadcast and takes
+the empty-slice exit before robots and fetch run), ONE fetch+extract job,
+ONE discover+dedup job, plus the 3 concurrent snapshot writes; a capacity
+re-rank adds one job only in the over-budget case. The frontier row count
+rides in the snapshot manifest, so the rank itself needs no count: it
+picks the window regime and clamps the rank budget to
+min(frontier, budget), and the distributed ``range_rank`` (several jobs)
+runs only when that bound exceeds ``ranking.LARGE_K_ROWS``.
 
 Determinism: every ordering is a rank over (depth, score, warc_ts) /
 (score, depth, warc_ts) per the north rule; duplicate discoveries collapse
@@ -551,11 +556,9 @@ class CrawlRun:
         # 1. politeness budget per host, then global rank + iteration
         #    budget. The frontier row count from the manifest picks the
         #    window regime (plain below salt_bypass_rows, salted two-pass
-        #    above) and upper-bounds every sizing decision below — so the
-        #    ranked slice needs NO count job of its own; it materializes
-        #    inside the fetch+extract job and the exact selected count
-        #    falls out of that job's counters (n_results). With
-        #    adaptive_politeness the budget is per-host:
+        #    above) and bounds the rank budget; the ranked slice is then
+        #    counted once and that exact count sizes the later stages.
+        #    With adaptive_politeness the budget is per-host:
         #    floor(iteration_window / current_delay) from the host_state
         #    table (P1+P2), else a uniform constant.
         small = n_frontier <= cfg.salt_bypass_rows
@@ -591,20 +594,31 @@ class CrawlRun:
                 salt=cfg.salt, small_input=small,
             )
         global_budget = min(remaining, cfg.iteration_budget or remaining)
+        # the ranked input holds at most n_frontier rows, so this bound
+        # keeps exactly the rows global_budget keeps — and a 10^9
+        # max_pages does not route a small frontier through the
+        # distributed range rank (ranking.LARGE_K_ROWS)
         selected = priority_rank(
-            budgeted, mode=cfg.mode, budget=global_budget, tiebreak="warc_ts_hint",
-            small_input=small,
+            budgeted, mode=cfg.mode, budget=min(n_frontier, global_budget),
+            tiebreak="warc_ts_hint", small_input=small,
         )
         selected = self._cache(selected.drop("warc_ts_hint", "sort_depth"))
-        # upper bound on the slice size — exact count comes back with the
-        # fetch counters
-        ub_selected = min(n_frontier, global_budget)
-        # partitions for the Python-UDF stages: track the slice size, not
-        # spark.sql.shuffle.partitions — a page costs ~10-30 ms of Python
-        # and workers are reused after first spawn, so ~16 pages/partition
-        # keeps the extract stage wide without per-task overhead dominating
+        # the fetch job would materialize this cache anyway; counting it
+        # first sizes every later stage from the rows the slice holds
+        n_selected = selected.count()
+        if n_selected == 0:
+            # defensive: a ≥1-per-host budget on a non-empty frontier always
+            # selects rows, so this only fires on a degenerate config;
+            # nothing was committed, so the snapshot state is untouched
+            selected.unpersist()
+            return {"done": True, "reason": "budget_zero"}
+        # partitions for the Python-UDF stages (extract, then URL
+        # normalization over the results cache): ~16 pages per task, capped
+        # at 4 tasks per core — a page costs ~10-30 ms of Python against a
+        # fixed ~60-80 ms per task, so more tasks pay that fixed cost more
+        # often and fewer leave cores idle
         par = self.spark.sparkContext.defaultParallelism
-        nparts = max(1, min(par * 4, (ub_selected + 15) // 16))
+        nparts = max(1, min(par * 4, (n_selected + 15) // 16))
 
         # 2. robots gate (fail-open; blocked → 403 results, not retried)
         if cfg.check_robots and self.robots is not None:
@@ -620,13 +634,12 @@ class CrawlRun:
         #    pages table never broadcasts and the whole corpus would
         #    shuffle. Instead: semi-join the corpus down to the slice's
         #    rows (broadcasting only the narrow url list, and only while
-        #    the slice is provably small — the manifest row count and the
-        #    iteration budget upper-bound it without a count job), then a
-        #    small⟕small left join recovers the misses as NULL page rows.
+        #    the counted slice is small), then a small⟕small left join
+        #    recovers the misses as NULL page rows.
         #    One pages-scan node in the plan; above the broadcast threshold
         #    both joins degrade to shuffles and AQE picks the strategy.
         probe = allowed.select("url")
-        if ub_selected <= cfg.broadcast_frontier_max:
+        if n_selected <= cfg.broadcast_frontier_max:
             probe = F.broadcast(probe)
         relevant = self.pages.join(probe, on="url", how="left_semi")
         #    The pages table is caller-supplied and may hold SEVERAL
@@ -643,11 +656,10 @@ class CrawlRun:
         if not cfg.pages_unique:
             relevant = latest_capture(relevant, "url")
         fetched = allowed.join(relevant, on="url", how="left")
-        # the broadcast-join output keeps the pages table's partitioning, so
-        # the extract UDF is already wide; an explicit repartition (a full
-        # extra exchange stage) only pays for itself when the slice is big
-        # enough that per-page Python time dominates stage overhead
-        if ub_selected > 4 * 16 * par:
+        # the join output keeps the pages side's shuffle partitioning
+        # (spark.sql.shuffle.partitions, mostly empty tasks for a small
+        # slice); pin the extract stage to the slice-sized width instead
+        if nparts > 1:
             fetched = fetched.repartition(nparts)
         fetched = fetched.withColumn(
             "status_code", F.when(F.col("html").isNotNull(), 200).otherwise(404)
@@ -709,15 +721,19 @@ class CrawlRun:
         n_results = sum(r["urls_in"] for r in fetch_parts)
         n_fetched = sum(r["fetched"] or 0 for r in fetch_parts)
         n_blocked = sum(r["robots_blocked"] or 0 for r in fetch_parts)
-        n_selected = n_results  # every selected row becomes a result row
         t = _lap("fetch_extract", t)
-        if n_selected == 0:
-            # defensive: a ≥1-per-host budget on a non-empty frontier always
-            # selects rows, so this only fires on a degenerate config;
-            # nothing was committed, so the snapshot state is untouched
-            for df in (selected, gated, results):
-                df.unpersist()
-            return {"done": True, "reason": "budget_zero"}
+        # the fetch slice is deduped to 1 row/url (pages_unique contract),
+        # so every selected row becomes exactly one result row; any other
+        # count means the manifest counters are about to corrupt — fail
+        # loud BEFORE the lineage commit below, or a retried iteration
+        # would double-append its lineage rows (a real raise, not an
+        # assert: this guard must survive python -O)
+        if n_results != n_selected:
+            raise RuntimeError(
+                f"fetch fan-out: n_results={n_results} but "
+                f"n_selected={n_selected} — pages table has duplicate urls "
+                "but pages_unique=True was set?"
+            )
 
         # P2: evolve per-host delays from this iteration's statuses
         # (merge_host_state: first-seen hosts enter at base delay, hit
@@ -870,18 +886,6 @@ class CrawlRun:
         t = _lap("discover_dedup", t)
 
         n_deferred = n_frontier - n_selected
-        # the fetch slice is deduped to 1 row/url (pages_unique contract),
-        # so every selected row becomes exactly one result row; a negative
-        # here means the manifest counters are about to corrupt — fail loud
-        # BEFORE the lineage commit below, or a retried iteration would
-        # double-append its lineage rows (a real raise, not an assert: this
-        # guard must survive python -O)
-        if n_deferred < 0:
-            raise RuntimeError(
-                f"fetch fan-out: n_results={n_results} exceeds "
-                f"n_frontier={n_frontier} — pages table has duplicate urls "
-                "but pages_unique=True was set?"
-            )
 
         # 7. per-partition lineage + commit. Two row kinds per iteration:
         # 'fetch' rows carry per-partition urls-in/fetched/blocked of the
@@ -931,12 +935,16 @@ class CrawlRun:
             )
             next_frontier = deferred.unionByName(new_urls)
 
+        # sized like the other snapshot writes; the partial filter build
+        # below reads the same coalesced plan, so a dozen new keys cost one
+        # Python task and one bitset, not one per candidate-cache partition
+        # (the filter merge is placement-independent, so the bits match)
         seen_append = seen_src.select(
             "url_norm",
             F.xxhash64("url_norm").alias("url_hash"),
             "depth",
             F.lit(iteration + 1).alias("first_iter"),
-        )
+        ).coalesce(_parts(n_seen_add))
         if self._seen_filter is not None and n_seen_add:
             # incremental filter maintenance: fold ONLY this iteration's
             # new keys into the in-memory filter (a partial build over the
@@ -977,9 +985,7 @@ class CrawlRun:
                 pool.submit(
                     self.t_results.stage, results.coalesce(_parts(n_results))
                 ),
-                pool.submit(
-                    self.t_seen.stage, seen_append.coalesce(_parts(n_seen_add))
-                ),
+                pool.submit(self.t_seen.stage, seen_append),
                 pool.submit(
                     self.t_frontier.stage,
                     next_frontier.coalesce(_parts(n_deferred + n_new)),

@@ -512,7 +512,10 @@ def surt_key(url: str | None) -> str | None:
     'https://sub.Example.com/A/b?q=1' → 'com,example,sub)/a/b?q=1'.
     Groups every page of a site (and its subdomains) into one
     lexicographic range, which is what makes a sorted CDX index
-    range-scannable by domain."""
+    range-scannable by domain. The #fragment is dropped (it never
+    reaches the server, so two captures differing only there are one
+    resource), and a bracketed IPv6 literal stays whole:
+    'http://[2001:db8::1]:8080/x' → '[2001:db8::1]:8080)/x'."""
     if url is None:
         return None
     u = url.strip().lower()
@@ -520,6 +523,7 @@ def surt_key(url: str | None) -> str | None:
         if u.startswith(scheme):
             u = u[len(scheme):]
             break
+    u = u.partition("#")[0]
     # the authority ends at the first '/' OR '?' — a query with no path
     # ('example.com?q=1') must not leak into the host part, or the key
     # sorts outside its domain's lexicographic range
@@ -532,13 +536,19 @@ def surt_key(url: str | None) -> str | None:
     if not rest.startswith("/"):
         rest = "/" + rest
     # default ports dropped, explicit ones kept AFTER the reversed host
-    # so all of a site's captures share the 'com,example' prefix
-    h, _, p = host.rpartition(":")
+    # so all of a site's captures share the 'com,example' prefix; an
+    # IPv6 literal's own colons sit inside its brackets, so the port is
+    # only looked for after the closing ']'
+    ipv6 = host.startswith("[") and "]" in host
+    tail = host[host.index("]") + 1:] if ipv6 else host
+    h, _, p = tail.rpartition(":")
     port = ""
-    if p.isdigit() and h:
-        host = h
+    if p.isdigit() and (h or ipv6):
+        host = host[: -len(p) - 1]
         if p not in ("80", "443"):
             port = ":" + p
+    if ipv6:
+        return host + port + ")" + rest
     host = host.removeprefix("www.")
     return ",".join(reversed(host.split("."))) + port + ")" + rest
 
@@ -604,13 +614,23 @@ def cdx_index(
 
 
 def _local_path(segment: str) -> str:
-    """binaryFile paths come back URI-form (file:/... or file:///...);
-    open() wants the plain path."""
+    """binaryFile paths come back as file:/... (or file:///...) followed
+    by the path exactly as on disk — NOT percent-encoded: a directory
+    named 'a b' arrives as 'file:/.../a b', and one literally named
+    'a%20b' as 'file:/.../a%20b', so decoding would open the wrong file.
+    open() wants the plain path. Any other scheme (hdfs:, s3a:, ...) is
+    refused: the seek reads go through the local filesystem only."""
     if segment.startswith("file:"):
         p = segment[len("file:"):]
         while p.startswith("//"):
             p = p[1:]
         return p
+    scheme, sep, _ = segment.partition(":")
+    if sep and "/" not in scheme:
+        raise ValueError(
+            f"records_from_cdx reads segments from the local filesystem "
+            f"only; cannot open {scheme}: segment {segment!r}"
+        )
     return segment
 
 
@@ -623,7 +643,12 @@ def records_from_cdx(
     instead of a 100 TB scan. Ranges are grouped per segment
     (repartition on the segment column) so each task opens its file
     once; rows whose offset is NULL (whole-stream-gzip segments, not
-    seekable) are skipped. Returns the ``warc_records`` schema."""
+    seekable) are skipped. Returns the ``warc_records`` schema.
+
+    Segments must be on the local filesystem (plain paths or ``file:``
+    URIs, as ``cdx_index`` over a local glob records them): the tasks
+    seek with ``open()``, so an ``hdfs:``/``s3a:`` segment raises a
+    ``ValueError`` when the fetch runs."""
     import pandas as pd
 
     sel = cdx.select("segment", "offset", "length").filter(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawl4ai_spark.plans.extract import extract_pages
@@ -297,6 +298,18 @@ def test_cdx_index_and_random_access(spark, tmp_path):
     # default ports drop; explicit ports sort after the reversed host
     assert surt_key("https://example.com:443/x") == "com,example)/x"
     assert surt_key("https://example.com:8080/x") == "com,example:8080)/x"
+    # the fragment never reaches the server: dropped, and it ends the
+    # authority like '/' and '?' do
+    assert surt_key("https://example.com/a#sec") == "com,example)/a"
+    assert surt_key("https://example.com#top") == "com,example)/"
+    assert surt_key("https://example.com?q=1#f") == "com,example)/?q=1"
+    assert surt_key("https://example.com#f/x?y") == "com,example)/"
+    # a bracketed IPv6 literal is one label: not reversed on '.', and its
+    # own colons are not a port
+    assert surt_key("http://[2001:DB8::1]/x") == "[2001:db8::1])/x"
+    assert surt_key("http://[2001:db8::1]:8080/x") == "[2001:db8::1]:8080)/x"
+    assert surt_key("https://[::1]:443?q") == "[::1])/?q"
+    assert surt_key("http://[::ffff:1.2.3.4]/") == "[::ffff:1.2.3.4])/"
 
     (tmp_path / "a.warc.gz").write_bytes(
         build_warc_bytes(_mk_records(4, tag="gz"), per_record_gzip=True)
@@ -321,6 +334,42 @@ def test_cdx_index_and_random_access(spark, tmp_path):
         assert bytes(r.payload) == bytes(full[r.url].payload)
         assert r.warc_ts == full[r.url].warc_ts
         assert r.http_status == full[r.url].http_status
+
+
+def test_records_from_cdx_local_paths(spark, tmp_path):
+    """binaryFile reports a segment as 'file:' + the path as on disk, not
+    percent-encoded, so the seek read must open it undecoded: a directory
+    with a space and one literally named with '%20' both round-trip. A
+    non-local scheme is refused by name."""
+    from crawl4ai_spark.sources.warc import (
+        _local_path,
+        build_warc_bytes,
+        cdx_index,
+        records_from_cdx,
+        warc_records,
+    )
+
+    for name in ("crawl segments", "crawl%20segments"):
+        seg_dir = tmp_path / name
+        seg_dir.mkdir()
+        (seg_dir / "a.warc.gz").write_bytes(
+            build_warc_bytes(_mk_records(3, tag="sp"), per_record_gzip=True)
+        )
+        glob = str(seg_dir / "*.warc.gz")
+        cdx = cdx_index(spark, glob)
+        assert all(f"/{name}/" in r.segment for r in cdx.collect())
+        got = {r.url: bytes(r.payload)
+               for r in records_from_cdx(spark, cdx).collect()}
+        want = {r.url: bytes(r.payload)
+                for r in warc_records(spark, glob).collect()}
+        assert got == want and len(got) == 3
+
+    assert _local_path("file:///data/a%20b/x.warc") == "/data/a%20b/x.warc"
+    assert _local_path("file:/data/x.warc") == "/data/x.warc"
+    assert _local_path("/data/a b/x.warc") == "/data/a b/x.warc"
+    for uri in ("hdfs://nn:8020/seg/x.warc.gz", "s3a://bucket/x.warc.gz"):
+        with pytest.raises(ValueError, match="local filesystem"):
+            _local_path(uri)
 
 
 def test_warc_roundtrip_property():
