@@ -30,6 +30,8 @@ import string
 import urllib.parse
 from html.parser import HTMLParser
 
+from crawl4ai_spark.html.parser import VOID_TAGS, Node
+
 # The converter buffers non-breaking spaces with an in-band sentinel so they
 # survive whitespace collapsing, then rewrites them at the end. The sentinel
 # string itself is part of the observable behavior (a literal occurrence in
@@ -63,6 +65,9 @@ _BSLASH_BEFORE_MD = re.compile(r"(\\)(?=[%s])" % re.escape(r"\`*_{}[]()#+-.!"))
 _MD_CHARS_ALL = re.compile(r"([`\*_{}\[\]\(\)#!])")
 # chars escaped inside link/image constructs
 _MD_CHARS_LINK = re.compile(r"([\\\[\]\(\)])")
+
+# the characters the serializer writes as entity references in text
+_MARKUP_CHAR = re.compile(r"([&<>])")
 
 _HEADING_LEVEL = {"h1": 1, "h2": 2, "h3": 3, "h4": 4, "h5": 5, "h6": 6}
 
@@ -236,11 +241,58 @@ class MarkdownEmitter(HTMLParser):
         self.feed(doc)
         self.feed("")
         self.close()
+        return self._finish()
+
+    def _finish(self) -> str:
         self._queue_break()
         self._emit("", force="end")
         text = "".join(self._chunks)
         self._chunks = []
         return text.replace(_NBSP_TOKEN, " ")
+
+    # ------------------------------------------------------------- replay
+
+    def replay(self, nodes: list[Node]) -> None:
+        """The second event source next to ``feed``: delivers exactly the
+        events ``HTMLParser(convert_charrefs=False)`` delivers for the
+        serialization of ``nodes`` (text escaped with ``quote=False``).
+        A start tag per element, an end tag unless it is void; adjacent
+        text siblings serialize as one run, so they are merged; text is
+        split at ``&``, ``<`` and ``>``, which the serialization writes as
+        ``&amp;``, ``&lt;`` and ``&gt;`` entity references. ``script`` and
+        ``style`` text is CDATA to the tokenizer: one data event, as is."""
+        text = None
+        for node in nodes:
+            tag = node.tag
+            if tag == "#text":
+                t = node.attrs["text"]
+                text = t if text is None else text + t
+                continue
+            if text is not None:
+                self._replay_text(text)
+                text = None
+            self._dispatch(tag, node.attrs, True)
+            if tag in VOID_TAGS:
+                continue
+            if tag == "script" or tag == "style":
+                cdata = "".join(c.attrs["text"] for c in node.children if c.is_text)
+                if cdata:
+                    self._data(cdata, from_entity=False)
+            else:
+                self.replay(node.children)
+            self._dispatch(tag, {}, False)
+        if text is not None:
+            self._replay_text(text)
+
+    def _replay_text(self, text: str) -> None:
+        if "&" not in text and "<" not in text and ">" not in text:
+            self._data(text, from_entity=False)
+            return
+        for i, part in enumerate(_MARKUP_CHAR.split(text)):
+            if i & 1:
+                self._data(part, from_entity=True)  # &amp; &lt; &gt; decoded
+            elif part:
+                self._data(part, from_entity=False)
 
     # ------------------------------------------------------------- parsing
 
@@ -628,6 +680,16 @@ def html_to_markdown(doc: str, base_url: str = "") -> str:
     return raw.replace("    ```", "```")
 
 
+def tree_to_markdown(nodes: list[Node], base_url: str = "") -> str:
+    """``html_to_markdown`` of the serialization of ``nodes``, walked
+    instead of tokenized: equal to
+    ``html_to_markdown("".join(n.serialize() for n in nodes), base_url)``
+    for any nodes that serialization would parse back into."""
+    emitter = MarkdownEmitter(base_url=base_url)
+    emitter.replay(nodes)
+    return emitter._finish().replace("    ```", "```")
+
+
 # citation scanner: the exact link shape the generator rewrites
 # (spec: markdown_generation_strategy.py:12 LINK_PATTERN)
 _CITE_LINK = re.compile(r'!?\[([^\]]+)\]\(([^)]+?)(?:\s+"([^"]*)")?\)')
@@ -687,3 +749,4 @@ def generate_markdown_parts(doc: str, base_url: str = "") -> tuple[str, str, str
     raw = html_to_markdown(doc, base_url)
     cited, refs = links_to_citations(raw, base_url)
     return raw, cited, refs
+

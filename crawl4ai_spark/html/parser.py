@@ -9,6 +9,13 @@ extraction with whitespace collapsing.
 
 This code runs ONLY inside Arrow pandas UDFs (one Python call per page, many
 pages per Arrow batch) — never per-row Python UDFs.
+
+The extract kernel (``plans.extract.extract_page``) tokenizes a page once:
+scrape parses it into this tree and normalizes the cleaned tree into what
+``parse_html(cleaned_html)`` would build; markdown, pruning and fit
+markdown then walk that tree. The string functions (``scrape_page``,
+``generate_markdown_parts``, ``prune_fit_html``, ``html_to_markdown``)
+re-parse their input and are the reference the kernel is tested against.
 """
 
 from __future__ import annotations

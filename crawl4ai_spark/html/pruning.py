@@ -231,15 +231,22 @@ def prune_content_blocks(
     body (non-empty text), serialized."""
     if not html or not isinstance(html, str):
         return []
-    root = parse_html(html)
+    blocks = prune_tree(parse_html(html), threshold, threshold_type, min_word_threshold)
+    return [b.serialize() for b in blocks]
+
+
+def prune_tree(
+    root: Node,
+    threshold: float = 0.48,
+    threshold_type: str = "fixed",
+    min_word_threshold: int | None = None,
+) -> list[Node]:
+    """``prune_content_blocks`` on a parsed tree, pruned in place: the
+    surviving top-level element blocks of the body (non-empty text)."""
     root.remove_tags(*EXCLUDED_TAGS)
     body = root.find("body") or root
     _prune_tree(body, threshold, threshold_type, min_word_threshold)
-    return [
-        c.serialize()
-        for c in body.children
-        if not c.is_text and _text_concat(c)
-    ]
+    return [c for c in body.children if not c.is_text and _text_concat(c)]
 
 
 def prune_fit_html(
@@ -253,3 +260,17 @@ def prune_fit_html(
     blocks = prune_content_blocks(html, threshold, threshold_type, min_word_threshold)
     fit_html = "\n".join(f"<div>{b}</div>" for b in blocks)
     return blocks, fit_html
+
+
+def fit_nodes(blocks: list[Node]) -> list[Node]:
+    """The node list ``fit_html`` serializes from: each block inside a
+    <div>, a "\n" text run between blocks. The blocks keep their parents;
+    the wrappers only borrow them."""
+    out: list[Node] = []
+    for b in blocks:
+        if out:
+            out.append(Node("#text", {"text": "\n"}))
+        wrapper = Node("div")
+        wrapper.children.append(b)
+        out.append(wrapper)
+    return out

@@ -12,6 +12,7 @@ Pure function of (html, url) — safe to run inside an Arrow pandas UDF.
 from __future__ import annotations
 
 import re
+from html import escape
 from urllib.parse import urlparse
 
 from crawl4ai_spark.functions.urlnorm import (
@@ -319,6 +320,61 @@ def _flatten_same_tag(node: Node) -> None:
             c.parent = node
 
 
+def _squeeze(s: str) -> str:
+    """The cleaned_html whitespace squeeze (one left-to-right pass each)."""
+    return s.replace("\n\n", "\n").replace("  ", " ")
+
+
+def _normalize_cleaned(body: Node) -> Node | None:
+    """Rewrite ``body`` in place into the tree ``parse_html(cleaned_html)``
+    builds: a detached ``#root`` whose adjacent text runs are merged, whose
+    text runs and attribute values carry the squeeze, whose first and last
+    top-level runs carry the ``strip``, and whose ``script``/``style`` text
+    is the escaped form the tokenizer reads back as CDATA. The squeeze and
+    the strip never reach across a tag, so applying them per run equals
+    applying them to the serialized string.
+
+    Returns None when the tree cannot stand for cleaned_html: a tag name
+    ending in a Unicode space ('b\xa0') is read back from ``</b\xa0>`` as
+    the end tag 'b', which re-nests what follows."""
+    replayable = True
+    body.tag = "#root"
+    body.attrs = {}
+    if body.parent is not None:
+        body.parent.children.remove(body)
+        body.parent = None
+    for el in body.iter():
+        merged: list[Node] = []
+        prev = None
+        for c in el.children:
+            if c.tag != "#text":
+                merged.append(c)
+                prev = None
+            elif prev is None:
+                merged.append(c)
+                prev = c
+            else:
+                prev.attrs["text"] += c.attrs["text"]
+        el.children = merged
+        if el.tag[-1].isspace():
+            replayable = False
+        cdata = el.tag == "script" or el.tag == "style"
+        for c in merged:
+            if c.tag == "#text":
+                t = _squeeze(c.attrs["text"])
+                c.attrs["text"] = escape(t, quote=False) if cdata else t
+        for k, v in el.attrs.items():
+            if v and ("\n\n" in v or "  " in v):
+                el.attrs[k] = _squeeze(v)
+    kids = body.children
+    if kids and kids[0].tag == "#text":
+        kids[0].attrs["text"] = kids[0].attrs["text"].lstrip()
+    if kids and kids[-1].tag == "#text":
+        kids[-1].attrs["text"] = kids[-1].attrs["text"].rstrip()
+    body.children = [c for c in kids if c.tag != "#text" or c.attrs["text"]]
+    return body if replayable else None
+
+
 class _ScrapeState:
     __slots__ = ("url", "base_domain", "page_context", "internal", "external",
                  "media_av", "opts")
@@ -460,7 +516,29 @@ def _walk_element(el: Node, st: _ScrapeState) -> bool:
     return keep
 
 
-def scrape_page(
+def scrape_page(html: str, url: str, *args, **kwargs) -> dict:
+    """Full scrape of one page → dict matching SCRAPE_RESULT_STRUCT.
+
+    Config surface mirrors the reference's ``WebScrapingStrategy._scrap``
+    (content_scraping_strategy.py:845-1097): excluded_tags / CSS-selector
+    removal, attribute whitelist (IMPORTANT_ATTRS + keep_attrs), word-count
+    pruning, link/image exclusion knobs, nested same-tag flattening, base64
+    image stripping. ``prune_attrs=False`` preserves all attributes (useful
+    when a downstream class-aware filter runs on cleaned_html)."""
+    return _scrape(html, url, *args, **kwargs)[0]
+
+
+def _scrape_tree(html: str, url: str, **kwargs) -> tuple[dict, Node | None]:
+    """(scrape dict, tree): ``scrape_page`` plus its cleaned tree,
+    normalized in place into the ``#root`` that ``parse_html(cleaned_html)``
+    would build, so later stages can walk it instead of tokenizing
+    ``cleaned_html`` again. The tree is None for the rare page it cannot
+    stand for (see ``_normalize_cleaned``)."""
+    scraped, body = _scrape(html, url, **kwargs)
+    return scraped, _normalize_cleaned(body)
+
+
+def _scrape(
     html: str,
     url: str,
     table_score_threshold: int = 7,
@@ -478,15 +556,8 @@ def scrape_page(
     exclude_all_images: bool = False,
     remove_forms: bool = False,
     only_text: bool = False,
-) -> dict:
-    """Full scrape of one page → dict matching SCRAPE_RESULT_STRUCT.
-
-    Config surface mirrors the reference's ``WebScrapingStrategy._scrap``
-    (content_scraping_strategy.py:845-1097): excluded_tags / CSS-selector
-    removal, attribute whitelist (IMPORTANT_ATTRS + keep_attrs), word-count
-    pruning, link/image exclusion knobs, nested same-tag flattening, base64
-    image stripping. ``prune_attrs=False`` preserves all attributes (useful
-    when a downstream class-aware filter runs on cleaned_html)."""
+) -> tuple[dict, Node]:
+    """(scrape dict, body): the body node is what cleaned_html serializes."""
     try:
         root = parse_html(html or "")
     except Exception:
@@ -578,10 +649,9 @@ def scrape_page(
         src = img.attrs.get("src") or ""
         if _BASE64_IMG.match(src):
             img.attrs["src"] = _BASE64_IMG.sub("", src)
-    cleaned_html = body.serialize_children().strip()
     # final whitespace squeeze, mirroring the reference's cleanup pass
     # (spec content_scraping_strategy.py:1089)
-    cleaned_html = cleaned_html.replace("\n\n", "\n").replace("  ", " ")
+    cleaned_html = _squeeze(body.serialize_children().strip())
     text = body.text(separator=" ")
 
     return {
@@ -593,4 +663,4 @@ def scrape_page(
         "metadata": metadata,
         "lang": lang,
         "success": True,
-    }
+    }, body

@@ -7,6 +7,10 @@ as ONE select over Arrow pandas UDFs. Each UDF call receives a whole Arrow
 batch of pages (spark.sql.execution.arrow.maxRecordsPerBatch), so Python
 overhead amortizes across pages; all orchestration stays in Catalyst.
 
+The fused UDF's per-page kernel, ``extract_page``, tokenizes a page once;
+the string functions it replaces (``scrape_page`` + ``_markdown_dict``) are
+the reference it equals field for field, and what the goldens and oracles run.
+
 Scale notes: the UDFs are CPU-bound and embarrassingly parallel — they scale
 linearly with cores and need no shuffle. The only shuffle in the whole
 extraction job is whatever partitioning the caller chose upstream.
@@ -19,9 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crawl4ai_spark.html.markdown import generate_markdown_parts, html_to_markdown
-from crawl4ai_spark.html.pruning import prune_fit_html
-from crawl4ai_spark.html.scrape import scrape_page
+from crawl4ai_spark.html.markdown import (
+    generate_markdown_parts,
+    html_to_markdown,
+    links_to_citations,
+    tree_to_markdown,
+)
+from crawl4ai_spark.html.pruning import fit_nodes, prune_fit_html, prune_tree
+from crawl4ai_spark.html.scrape import _scrape_tree, scrape_page
 from crawl4ai_spark.schema import (
     EXTRACT_RESULT_STRUCT,
     MARKDOWN_RESULT_STRUCT,
@@ -38,26 +47,35 @@ _EMPTY_MARKDOWN = {
 }
 
 
-def _markdown_dict(
-    cleaned_html: str, url: str, fit_filter: str = "pruning", **fit_kwargs
-) -> dict:
-    """The generator pipeline per page. ``fit_filter`` picks the content
-    filter feeding fit_markdown — 'pruning' (PruningContentFilter
-    restatement, the common default), 'bm25' (the full BM25 filter; accepts
-    user_query/bm25_threshold/use_stemming kwargs), or None (reference
-    default: no filter, empty fit output)."""
-    raw, cited, refs = generate_markdown_parts(cleaned_html, url or "")
+def _decode(h):
+    """Page bytes (the WARC/fetch columns are binary) → str."""
+    if isinstance(h, (bytes, bytearray)):
+        return bytes(h).decode("utf-8", errors="replace")
+    return h
+
+
+def _fit_html(cleaned_html: str, fit_filter: str | None, fit_kwargs: dict) -> str:
+    """fit_html for ``fit_filter``: 'pruning' (PruningContentFilter, the
+    common default), 'bm25' (accepts user_query/bm25_threshold/use_stemming
+    kwargs), or None (reference default: empty fit output)."""
     if fit_filter == "pruning":
-        _, fit_html = prune_fit_html(cleaned_html, **fit_kwargs)
-    elif fit_filter == "bm25":
+        return prune_fit_html(cleaned_html, **fit_kwargs)[1]
+    if fit_filter == "bm25":
         from crawl4ai_spark.html.bm25_filter import bm25_filter_content
 
         blocks = bm25_filter_content(cleaned_html, **fit_kwargs)
-        fit_html = "\n".join(f"<div>{b}</div>" for b in blocks)
-    elif fit_filter is None:
-        fit_html = ""
-    else:
-        raise ValueError(f"unknown fit_filter: {fit_filter!r}")
+        return "\n".join(f"<div>{b}</div>" for b in blocks)
+    if fit_filter is None:
+        return ""
+    raise ValueError(f"unknown fit_filter: {fit_filter!r}")
+
+
+def _markdown_dict(
+    cleaned_html: str, url: str, fit_filter: str = "pruning", **fit_kwargs
+) -> dict:
+    """The generator pipeline per page over the cleaned_html string."""
+    raw, cited, refs = generate_markdown_parts(cleaned_html, url or "")
+    fit_html = _fit_html(cleaned_html, fit_filter, fit_kwargs)
     return {
         "raw_markdown": raw,
         "markdown_with_citations": cited,
@@ -67,29 +85,79 @@ def _markdown_dict(
     }
 
 
-@F.pandas_udf(SCRAPE_RESULT_STRUCT)
-def scrape_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    """html may be binary (bytes) or string."""
-    rows = []
-    for h, u in zip(html, url):
-        if h is None:
-            rows.append(dict(_EMPTY_SCRAPE))
-            continue
-        if isinstance(h, (bytes, bytearray)):
-            h = bytes(h).decode("utf-8", errors="replace")
-        rows.append(scrape_page(h, u or ""))
-    return pd.DataFrame(rows)
+def extract_page(
+    html: str, url: str, fit_filter: str | None = "pruning", **fit_kwargs
+) -> dict:
+    """The per-page extract kernel: markdown, pruning (in place) and fit
+    markdown walk scrape's tree. 'bm25', and a page ``_scrape_tree`` has no
+    tree for, read the cleaned_html string instead."""
+    url = url or ""
+    scraped, root = _scrape_tree(html, url)
+    cleaned = scraped["cleaned_html"]
+    if root is None:
+        return {**scraped, **_markdown_dict(cleaned, url, fit_filter, **fit_kwargs)}
+    raw = tree_to_markdown(root.children, url)
+    cited, refs = links_to_citations(raw, url)
+    if fit_filter == "pruning":
+        nodes = fit_nodes(prune_tree(root, **fit_kwargs))
+        fit_html = "".join(n.serialize() for n in nodes)
+        fit_md = tree_to_markdown(nodes, url) if nodes else ""
+    else:
+        fit_html = _fit_html(cleaned, fit_filter, fit_kwargs)
+        fit_md = html_to_markdown(fit_html, url) if fit_html else ""
+    return {
+        **scraped,
+        "raw_markdown": raw,
+        "markdown_with_citations": cited,
+        "references_markdown": refs,
+        "fit_markdown": fit_md,
+        "fit_html": fit_html,
+    }
+
+
+def make_scrape_udf(**scrape_kwargs):
+    """Scrape UDF with the full config surface (excluded_tags,
+    excluded_selector, keep_attrs, word_count_threshold, exclusion knobs —
+    see html.scrape.scrape_page) baked in. html may be binary or string."""
+
+    @F.pandas_udf(SCRAPE_RESULT_STRUCT)
+    def scrape(html: pd.Series, url: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame([
+            dict(_EMPTY_SCRAPE) if h is None
+            else scrape_page(_decode(h), u or "", **scrape_kwargs)
+            for h, u in zip(html, url)
+        ])
+
+    return scrape
+
+
+def make_extract_udf(fit_filter: str | None = "pruning", **fit_kwargs):
+    """Fused scrape + markdown UDF — the hot path — with a configurable fit
+    content filter ('pruning' | 'bm25' | None — the reference's pluggable
+    content_filter). One Python call and one Arrow round trip per batch;
+    the intermediate cleaned_html never crosses the JVM boundary."""
+
+    @F.pandas_udf(EXTRACT_RESULT_STRUCT)
+    def extract(html: pd.Series, url: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame([
+            {**_EMPTY_SCRAPE, **_EMPTY_MARKDOWN} if h is None
+            else extract_page(_decode(h), u, fit_filter, **fit_kwargs)
+            for h, u in zip(html, url)
+        ])
+
+    return extract
+
+
+scrape_udf = make_scrape_udf()
+extract_udf = make_extract_udf()
 
 
 @F.pandas_udf(MARKDOWN_RESULT_STRUCT)
 def markdown_udf(cleaned_html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    rows = []
-    for h, u in zip(cleaned_html, url):
-        if h is None:
-            rows.append(dict(_EMPTY_MARKDOWN))
-            continue
-        rows.append(_markdown_dict(h, u))
-    return pd.DataFrame(rows)
+    return pd.DataFrame([
+        dict(_EMPTY_MARKDOWN) if h is None else _markdown_dict(h, u)
+        for h, u in zip(cleaned_html, url)
+    ])
 
 
 _BM25_CHUNKS_STRUCT = T.ArrayType(
@@ -118,26 +186,6 @@ def bm25_chunks_udf(html: pd.Series) -> pd.Series:
     return pd.Series(rows, dtype="object")
 
 
-def make_scrape_udf(**scrape_kwargs):
-    """Scrape UDF with the full config surface (excluded_tags,
-    excluded_selector, keep_attrs, word_count_threshold, exclusion knobs —
-    see html.scrape.scrape_page) baked in."""
-
-    @F.pandas_udf(SCRAPE_RESULT_STRUCT)
-    def configured_scrape_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-        rows = []
-        for h, u in zip(html, url):
-            if h is None:
-                rows.append(dict(_EMPTY_SCRAPE))
-                continue
-            if isinstance(h, (bytes, bytearray)):
-                h = bytes(h).decode("utf-8", errors="replace")
-            rows.append(scrape_page(h, u or "", **scrape_kwargs))
-        return pd.DataFrame(rows)
-
-    return configured_scrape_udf
-
-
 _MARKDOWN_PARTS_STRUCT = T.StructType(
     [
         T.StructField("raw_markdown", T.StringType()),
@@ -152,67 +200,11 @@ def markdown_parts_udf(doc: pd.Series, url: pd.Series) -> pd.DataFrame:
     """Markdown GENERATOR surface alone (no scrape): html → (raw, cited,
     refs). This is the byte-parity boundary golden-checked against the
     executing reference generator — see tools/gen_markdown_goldens.py."""
-    from crawl4ai_spark.html.markdown import generate_markdown_parts
-
-    rows = []
-    for h, u in zip(doc, url):
-        if h is None:
-            rows.append({"raw_markdown": None, "markdown_with_citations": None,
-                         "references_markdown": None})
-            continue
-        if isinstance(h, (bytes, bytearray)):
-            h = bytes(h).decode("utf-8", errors="replace")
-        raw, cited, refs = generate_markdown_parts(h, u or "")
-        rows.append({"raw_markdown": raw, "markdown_with_citations": cited,
-                     "references_markdown": refs})
-    return pd.DataFrame(rows)
-
-
-@F.pandas_udf(EXTRACT_RESULT_STRUCT)
-def extract_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    """Fused scrape + markdown — the hot path. One Python call and one
-    Arrow round trip per batch; the intermediate cleaned_html never
-    crosses the JVM boundary."""
-    rows = []
-    for h, u in zip(html, url):
-        if h is None:
-            rows.append({**_EMPTY_SCRAPE, **_EMPTY_MARKDOWN})
-            continue
-        if isinstance(h, (bytes, bytearray)):
-            h = bytes(h).decode("utf-8", errors="replace")
-        s = scrape_page(h, u or "")
-        m = (
-            _markdown_dict(s["cleaned_html"], u or "")
-            if s["cleaned_html"] is not None
-            else dict(_EMPTY_MARKDOWN)
-        )
-        rows.append({**s, **m})
-    return pd.DataFrame(rows)
-
-
-def make_extract_udf(fit_filter: str | None = "pruning", **fit_kwargs):
-    """Fused extract UDF with a configurable fit content filter
-    ('pruning' | 'bm25' | None — the reference's pluggable content_filter)."""
-
-    @F.pandas_udf(EXTRACT_RESULT_STRUCT)
-    def configured_extract_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-        rows = []
-        for h, u in zip(html, url):
-            if h is None:
-                rows.append({**_EMPTY_SCRAPE, **_EMPTY_MARKDOWN})
-                continue
-            if isinstance(h, (bytes, bytearray)):
-                h = bytes(h).decode("utf-8", errors="replace")
-            s = scrape_page(h, u or "")
-            m = (
-                _markdown_dict(s["cleaned_html"], u or "", fit_filter, **fit_kwargs)
-                if s["cleaned_html"] is not None
-                else dict(_EMPTY_MARKDOWN)
-            )
-            rows.append({**s, **m})
-        return pd.DataFrame(rows)
-
-    return configured_extract_udf
+    return pd.DataFrame(
+        [(None, None, None) if h is None else generate_markdown_parts(_decode(h), u or "")
+         for h, u in zip(doc, url)],
+        columns=_MARKDOWN_PARTS_STRUCT.fieldNames(),
+    )
 
 
 def extract_pages(

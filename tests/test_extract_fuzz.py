@@ -13,9 +13,23 @@ Same pattern as the naive-PDF-parser fuzz in test_pdf.py.
 from __future__ import annotations
 
 from crawl4ai_spark.html.bm25_filter import bm25_score_all_chunks
-from crawl4ai_spark.html.markdown import generate_markdown_parts
-from crawl4ai_spark.html.pruning import prune_fit_html
-from crawl4ai_spark.html.scrape import scrape_page
+from crawl4ai_spark.plans.extract import extract_page
+
+# tag-soup fragments biased toward the parser's edge cases
+FRAGMENTS = [
+    "<p>", "</p>", "<table>", "<tr>", "<td>", "</table>", "<li>",
+    "<ul>", "</ol>", "<pre>", "<code>", "</pre>", "<blockquote>",
+    "<a href='h ttp://x'>", "<a href=>", "<a href='java&#00;script:a'>",
+    "</a>", "<img src='data:image/png;base64,AAAA'>", "<img>",
+    "<script>var a='<p>';", "</script>", "<style>p{", "</style>",
+    "<!--", "-->", "<![CDATA[", "]]>", "<!DOCTYPE", ">", "<",
+    "<head>", "<title>", "</title>", "<meta name='a' content='b'",
+    "<body onload=x>", "<h1>", "</h6>", "<br/>", "<hr>",
+    "&amp;", "&#xZZ;", "&#1114112;", "&nosuch;", "\x00", " ",
+    "text ", "  ", "\n\n", "|", "`", "[", "](", ")", "\\", "*_*",
+    "<div class='x", "'>", "<span id=\"", "\">", "<q cite='",
+    "<form><input>", "</form>", "<iframe src='x'>", "</iframe>",
+]
 
 _SCRAPE_KEYS = {
     "cleaned_html", "text", "links", "media", "tables", "metadata",
@@ -24,15 +38,14 @@ _SCRAPE_KEYS = {
 
 
 def _drive_chain(doc: str, url: str) -> None:
-    """One page through the same kernel sequence extract_pages runs."""
-    scraped = scrape_page(doc, url)
-    assert _SCRAPE_KEYS <= set(scraped)
-    assert isinstance(scraped["links"], list)
-    cleaned = scraped["cleaned_html"] or ""
-    raw, cited, refs = generate_markdown_parts(cleaned, url)
-    assert isinstance(raw, str) and isinstance(cited, str) and isinstance(refs, str)
-    score, fit_html = prune_fit_html(doc)
-    assert isinstance(fit_html, str)
+    """One page through the per-page kernel the extract UDFs run, then the
+    BM25 chunker."""
+    out = extract_page(doc, url)
+    assert _SCRAPE_KEYS <= set(out)
+    assert isinstance(out["links"], list)
+    for k in ("raw_markdown", "markdown_with_citations", "references_markdown",
+              "fit_markdown", "fit_html"):
+        assert isinstance(out[k], str)
     for _idx, _txt, tag, s in bm25_score_all_chunks(doc, use_stemming=False):
         assert isinstance(tag, str) and isinstance(s, float)
 
@@ -58,20 +71,7 @@ def test_grammar_biased_html_never_raises():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    frag = st.sampled_from([
-        "<p>", "</p>", "<table>", "<tr>", "<td>", "</table>", "<li>",
-        "<ul>", "</ol>", "<pre>", "<code>", "</pre>", "<blockquote>",
-        "<a href='h ttp://x'>", "<a href=>", "<a href='java&#00;script:a'>",
-        "</a>", "<img src='data:image/png;base64,AAAA'>", "<img>",
-        "<script>var a='<p>';", "</script>", "<style>p{", "</style>",
-        "<!--", "-->", "<![CDATA[", "]]>", "<!DOCTYPE", ">", "<",
-        "<head>", "<title>", "</title>", "<meta name='a' content='b'",
-        "<body onload=x>", "<h1>", "</h6>", "<br/>", "<hr>",
-        "&amp;", "&#xZZ;", "&#1114112;", "&nosuch;", "\x00", " ",
-        "text ", "  ", "\n\n", "|", "`", "[", "](", ")", "\\", "*_*",
-        "<div class='x", "'>", "<span id=\"", "\">", "<q cite='",
-        "<form><input>", "</form>", "<iframe src='x'>", "</iframe>",
-    ])
+    frag = st.sampled_from(FRAGMENTS)
 
     @settings(max_examples=250, deadline=None)
     @given(st.lists(frag, max_size=30))
