@@ -8,7 +8,9 @@ run on). Prints ONE JSON line:
 
 ``--scaling`` mode (used for BASELINE.md evidence) runs the extraction
 headline at two parallelism levels in subprocesses and reports throughput
-at each plus the scaling efficiency.
+at each plus the scaling efficiency. The levels default to ones the host
+has: 4,16 with at least 16 CPUs in ``os.sched_getaffinity``, else N/4,N
+(1,4 on a 4-CPU host); ``--levels LO,HI`` above that CPU count exits.
 """
 
 from __future__ import annotations
@@ -693,6 +695,20 @@ def run_extract_scale(sf_dir: str, cpus: int, replicate: int) -> dict:
     return {"pages": n, "sec": round(sec, 2), "pages_per_sec": round(n / sec, 1), "cpus": cpus}
 
 
+def _affinity() -> list[int]:
+    """The CPUs this process may run on, in order."""
+    if hasattr(os, "sched_getaffinity"):
+        return sorted(os.sched_getaffinity(0))
+    return list(range(os.cpu_count() or 1))
+
+
+def default_scaling_levels(n_cpus: int) -> tuple[int, int]:
+    """N→4N levels the host can run without oversubscribing: 4,16 from 16
+    CPUs up, else N/4,N (1,4 on a 4-CPU host; 1,N below 4 CPUs)."""
+    hi = min(16, n_cpus)
+    return max(1, hi // 4), hi
+
+
 def run_scaling(
     sf_dir: str, levels=(4, 16), replicate: int = 24, submit: bool = False
 ) -> dict:
@@ -709,7 +725,7 @@ def run_scaling(
     import shutil
 
     runs = {}
-    submit_prefix: list[str] = []
+    cpus_allowed = _affinity()
     if submit:
         from crawl4ai_spark.deploy import package_zip
 
@@ -743,10 +759,12 @@ def run_scaling(
             cmd = [sys.executable, os.path.abspath(__file__)]
         if shutil.which("taskset"):
             # pin the whole process tree (JVM task threads + Python UDF
-            # workers) to exactly `cpus` hardware cores — otherwise a
-            # local[8] session quietly borrows all machine cores for its
-            # Python workers and the comparison measures nothing
-            cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
+            # workers) to exactly `cpus` of the cores this process may use
+            # — otherwise a local[8] session quietly borrows all machine
+            # cores for its Python workers and the comparison measures
+            # nothing
+            pin = ",".join(str(c) for c in cpus_allowed[:cpus])
+            cmd = ["taskset", "-c", pin] + cmd
         out = subprocess.run(
             cmd, env=env, capture_output=True, text=True, check=True,
             cwd=(stage if submit else None),
@@ -780,11 +798,12 @@ def main() -> None:
         rep = int(os.environ.get("SPARK_GRAFT_REPLICATE", "8"))
         print(json.dumps(run_extract_scale(sf_dir, cpus, rep)))
     elif "--scaling" in sys.argv:
-        # --levels LO,HI picks the two parallelism levels (default 4,16);
-        # e.g. --levels 8,32 measures the same N→4N ratio at double the
-        # absolute scale — a second "two cluster sizes" data point for
-        # the scaling-efficiency criterion
-        levels = (4, 16)
+        # --levels LO,HI picks the two parallelism levels (default: see
+        # default_scaling_levels); e.g. --levels 8,32 measures the same
+        # N→4N ratio at double the absolute scale — a second "two cluster
+        # sizes" data point for the scaling-efficiency criterion
+        n_cpus = len(_affinity())
+        levels = default_scaling_levels(n_cpus)
         if "--levels" in sys.argv:
             try:
                 raw = sys.argv[sys.argv.index("--levels") + 1]
@@ -795,6 +814,13 @@ def main() -> None:
                 )
             if len(levels) != 2 or levels[0] >= levels[1]:
                 raise SystemExit(f"--levels wants LO,HI with LO < HI; got {raw}")
+        if levels[1] > n_cpus:
+            raise SystemExit(
+                f"--levels {levels[0]},{levels[1]}: this process may run on "
+                f"only {n_cpus} CPUs"
+            )
+        if levels[0] >= levels[1]:
+            raise SystemExit(f"--scaling needs at least 2 CPUs; have {n_cpus}")
         print(json.dumps(run_scaling(
             sf_dir, levels=levels, submit="--submit" in sys.argv
         )))

@@ -34,7 +34,13 @@ call sites order on a unique url/tiebreak last.
 Pass the tightest row bound you know as ``k``: ``min(k, input rows)``
 keeps exactly the rows ``k`` keeps, and the regime is picked from ``k``
 alone, so a configuration ceiling (``max_pages=10**9``) passed as ``k``
-sends a small input through the multi-job ``range_rank``.
+sends a small input through the multi-job ``range_rank``. When ``k``
+covers a bounded input entirely, pass no budget at all
+(``priority_rank(budget=None)``): the ``<= k`` filter would keep every
+row, and Spark inlines ``k`` into the generated code, so a ``k`` that
+changes per call (a frontier size) recompiles the rank's classes on
+every call. ``range_rank`` likewise skips its filter when its counted
+total is within ``k``.
 """
 
 from __future__ import annotations
@@ -98,9 +104,10 @@ def range_rank(
         # range_rank is the right tool, and an int cast would wrap the
         # tail negative and ship it through the <= k filter
         .withColumn(rank_col, (F.col("_off") + F.row_number().over(w)).cast("long"))
-        .filter(F.col(rank_col) <= k)
-        .drop("_off", "_pid")
     )
+    if acc > k:  # a k covering every counted row would filter nothing
+        ranked = ranked.filter(F.col(rank_col) <= k)
+    ranked = ranked.drop("_off", "_pid")
     # materialize before dropping the pinned partitioning
     out = ranked.localCheckpoint(eager=True)
     srt.unpersist()
@@ -153,13 +160,15 @@ def priority_rank(
     salt: int = 16,
     small_input: bool = False,
 ) -> DataFrame:
-    """Global visit rank. BFS: (depth, score, warc_ts) ASC; best-first:
-    (score, depth, warc_ts) ASC (min-score-first). ``budget`` caps rows —
-    and routes through the salted two-pass top-k so the global window never
-    sees the full input. ``small_input``: the caller KNOWS the input is
-    bounded (e.g. frontier row count from the snapshot manifest) — plain
-    single-window plan, no salt shuffles. An unbudgeted call is a plain
-    global window: only for bounded inputs (tests, final exports)."""
+    """Global visit rank (a long). BFS: (depth, score, warc_ts) ASC;
+    best-first: (score, depth, warc_ts) ASC (min-score-first). ``budget``
+    caps rows — and routes through the salted two-pass top-k so the global
+    window never sees the full input. ``small_input``: the caller KNOWS the
+    input is bounded (e.g. frontier row count from the snapshot manifest) —
+    plain single-window plan, no salt shuffles. An unbudgeted call is a
+    plain global window with no ``<= k`` filter: only for bounded inputs
+    (at most ``LARGE_K_ROWS`` rows, or tests and final exports), where it
+    ranks exactly as ``budget=<row count>`` does."""
     if mode == "bfs":
         order = [F.col("depth").asc(), F.col("score").asc(), F.col(tiebreak).asc()]
     elif mode == "best_first":
@@ -175,7 +184,9 @@ def priority_rank(
             df, order, budget, hash_on=tiebreak, salt=salt, rank_col=rank_col,
             small_input=small_input,
         )
-    return df.withColumn(rank_col, F.row_number().over(Window.orderBy(*order)))
+    return df.withColumn(
+        rank_col, F.row_number().over(Window.orderBy(*order)).cast("long")
+    )
 
 
 def capacity_topk(

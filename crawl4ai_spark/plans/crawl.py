@@ -39,7 +39,21 @@ re-rank adds one job only in the over-budget case. The frontier row count
 rides in the snapshot manifest, so the rank itself needs no count: it
 picks the window regime and clamps the rank budget to
 min(frontier, budget), and the distributed ``range_rank`` (several jobs)
-runs only when that bound exceeds ``ranking.LARGE_K_ROWS``.
+runs only when that bound exceeds ``ranking.LARGE_K_ROWS``. The
+per-iteration scalars (``iteration``, the ``visit_order`` base) join the
+results as a broadcast one-row relation, which adds one small job.
+
+Compile budget per iteration: ZERO new generated classes once the
+iteration's plan shapes repeat. Spark inlines int literals into the
+generated Java source, so a literal that changes every iteration compiles
+fresh classes every iteration; the scalars therefore travel as data — the
+one-row relation above, ``discovered_iter`` and ``first_iter`` from the
+cached results' ``iteration`` — and a rank budget that covers the
+frontier is dropped instead of becoming a ``<= n_frontier`` filter. The
+codegen cache itself is sized in ``session.get_spark``. Literal sites that
+remain: ``capacity_topk(remaining_after)`` in over-capacity iterations and
+``merge_host_state(iteration)`` under adaptive politeness. The profile's
+``codegen_compiles`` reports the count.
 
 Determinism: every ordering is a rank over (depth, score, warc_ts) /
 (score, depth, warc_ts) per the north rule; duplicate discoveries collapse
@@ -70,6 +84,7 @@ from pyspark.sql import functions as F
 
 from crawl4ai_spark.functions.urlnorm import normalize_deep_udf
 from crawl4ai_spark.functions.urls import host_col, url_valid_col
+from crawl4ai_spark.operators import ranking
 from crawl4ai_spark.operators.capture import latest_capture
 from crawl4ai_spark.operators.politeness import host_budget_rank, merge_host_state
 from crawl4ai_spark.operators.ranking import capacity_topk, priority_rank
@@ -145,6 +160,13 @@ class CrawlConfig:
 
 def _zero_scorer(url_col):
     return F.lit(0.0)
+
+
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Classes the driver JVM's code generator has Janino-compiled so far
+    (codegen cache hits do not count). A py4j read: it starts no job."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def _parts(n: int) -> int:
@@ -429,9 +451,17 @@ class CrawlRun:
             # size the snapshot files by row count after the fact.
             # groupBy+min(url) instead of dropDuplicates: same single
             # shuffle (with map-side partial agg), but the representative
-            # is deterministic and identical to the fast path's min-wins
+            # is deterministic and identical to the fast path's min-wins.
+            # A seed list read from few files (one parquet export) arrives
+            # in fewer partitions than cores; spread it round-robin first,
+            # or the normalize UDF runs in that many Python tasks while
+            # the other cores sit idle
+            raw = self.seeds.select("url")
+            par = self.spark.sparkContext.defaultParallelism
+            if raw.rdd.getNumPartitions() < par:
+                raw = raw.repartition(par)
             seeds = (
-                self.seeds.select(
+                raw.select(
                     F.col("url"),
                     normalize_deep_udf(F.col("url"), F.col("url")).alias(
                         "url_norm"
@@ -503,6 +533,7 @@ class CrawlRun:
 
     def _run_iteration_body(self) -> dict:
         cfg = self.config
+        compiles0 = _codegen_compiles(self.spark)
         st = self.state()
         if st["iteration"] < 0:
             self._bootstrap()
@@ -529,6 +560,12 @@ class CrawlRun:
         if n_frontier is None:  # pre-counter snapshot (resume of an old run)
             n_frontier = frontier.count()
         t0 = time.time()
+        # the profile: wall-second laps ``fetch_extract``,
+        # ``discover_dedup`` and ``commit``, plus ``codegen_compiles``,
+        # the classes Spark's code generator compiled during the
+        # iteration (zero in a steady iteration; see the module
+        # docstring). In local mode that count includes the executor
+        # threads; on a cluster it counts the driver's compiles only.
         prof: dict[str, float] = {}
 
         def _lap(label: str, since: float) -> float:
@@ -597,9 +634,15 @@ class CrawlRun:
         # the ranked input holds at most n_frontier rows, so this bound
         # keeps exactly the rows global_budget keeps — and a 10^9
         # max_pages does not route a small frontier through the
-        # distributed range rank (ranking.LARGE_K_ROWS)
+        # distributed range rank (ranking.LARGE_K_ROWS). A budget that
+        # covers a bounded frontier is no budget at all: a plain global
+        # window keeps every row, skips the salted pre-pass, and leaves
+        # no per-iteration ``<= n_frontier`` literal in generated code
+        rank_budget = min(n_frontier, global_budget)
+        if rank_budget == n_frontier and n_frontier <= ranking.LARGE_K_ROWS:
+            rank_budget = None
         selected = priority_rank(
-            budgeted, mode=cfg.mode, budget=min(n_frontier, global_budget),
+            budgeted, mode=cfg.mode, budget=rank_budget,
             tiebreak="warc_ts_hint", small_input=small,
         )
         selected = self._cache(selected.drop("warc_ts_hint", "sort_depth"))
@@ -705,9 +748,20 @@ class CrawlRun:
                 F.lit(False).alias("success"),
             )
         )
-        results = results.withColumn("iteration", F.lit(iteration)).withColumn(
-            "visit_order", F.lit(visit_base) + F.col("visit_rank")
-        ).drop("visit_rank")
+        # the per-iteration scalars arrive as DATA, through a broadcast
+        # one-row relation: as literals Spark would inline them into the
+        # generated code and compile new classes on every iteration
+        scalars = self.spark.sql(
+            "SELECT * FROM VALUES (CAST(:it AS INT), CAST(:vb AS BIGINT))"
+            " AS t(_it, _vb)",
+            args={"it": iteration, "vb": visit_base},
+        )
+        results = (
+            results.crossJoin(F.broadcast(scalars))
+            .withColumn("iteration", F.col("_it"))
+            .withColumn("visit_order", F.col("_vb") + F.col("visit_rank"))
+            .drop("visit_rank", "_it", "_vb")
+        )
         results = self._cache(results)
         # ONE job yields both the scalar counters and the per-partition
         # fetch lineage (the collected set is ≤ #partitions rows)
@@ -759,6 +813,8 @@ class CrawlRun:
             .select(
                 F.col("url").alias("parent_url"),
                 F.col("depth").alias("parent_depth"),
+                # iteration + 1 from the cached results, not a literal
+                (F.col("iteration") + 1).alias("discovered_iter"),
                 F.explode("links").alias("link"),
             )
         )
@@ -769,6 +825,7 @@ class CrawlRun:
             normalize_deep_udf(F.col("link.href"), F.col("parent_url")).alias("url_norm"),
             (F.col("parent_depth") + 1).alias("depth"),
             F.col("parent_url"),
+            F.col("discovered_iter"),
         )
         candidates = candidates.filter(url_valid_col(F.col("url")))
         for cond_fn in cfg.filter_conditions:
@@ -780,6 +837,8 @@ class CrawlRun:
             F.min_by("url", F.struct("depth", "parent_url", "url")).alias("url"),
             F.min("depth").alias("depth"),
             F.min_by("parent_url", F.struct("depth", "parent_url")).alias("parent_url"),
+            # every row holds iteration + 1
+            F.min("discovered_iter").alias("discovered_iter"),
         )
         # score the chosen representative URL (scorers are pure URL fns)
         candidates = candidates.withColumn("score", self.scorer(F.col("url")))
@@ -842,7 +901,6 @@ class CrawlRun:
         # task).
         candidates = (
             new_urls.withColumn("host", host_col(F.col("url")))
-            .withColumn("discovered_iter", F.lit(iteration + 1))
             .select(
                 "url", "url_norm", "host", "depth", "score", "parent_url",
                 "discovered_iter",
@@ -943,7 +1001,7 @@ class CrawlRun:
             "url_norm",
             F.xxhash64("url_norm").alias("url_hash"),
             "depth",
-            F.lit(iteration + 1).alias("first_iter"),
+            F.col("discovered_iter").alias("first_iter"),
         ).coalesce(_parts(n_seen_add))
         if self._seen_filter is not None and n_seen_add:
             # incremental filter maintenance: fold ONLY this iteration's
@@ -1036,6 +1094,7 @@ class CrawlRun:
             self.t_frontier.expire_snapshots(keep_last=cfg.snapshot_retention)
             self.t_host_state.expire_snapshots(keep_last=cfg.snapshot_retention)
         t = _lap("commit", t)
+        prof["codegen_compiles"] = _codegen_compiles(self.spark) - compiles0
 
         for df in (selected, gated, results, candidates, new_urls):
             df.unpersist()

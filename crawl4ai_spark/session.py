@@ -8,6 +8,17 @@ Scale notes (100 TB / 1000-executor design intent):
   set by spark-submit conf (target ~128 MB/post-shuffle partition via AQE
   advisoryPartitionSizeInBytes).
 - Arrow enabled: every Python-side transform is an Arrow-batched pandas UDF.
+- Codegen cache: ``spark.sql.codegen.cache.maxEntries`` = 1024, not Spark's
+  default of 100. A crawl iteration needs about 155 distinct generated
+  classes and a ``curate`` pass about 270, so at 100 the LRU evicts every
+  class before the next iteration or pass asks for it again. Measured on a
+  4-core host with the benchmark-shaped crawl: every steady iteration
+  Janino-compiled 131-133 classes (about 1.0-1.2 s, plus JIT warm-up of
+  the fresh classes) at 100, and 0 at 1024 once the per-iteration scalars
+  stopped being inlined as literals (plans/crawl.py); a steady ``curate``
+  pass went from 264-270 compiles to 22. The setting is static and JVM-wide:
+  Spark sizes its one codegen cache when the JVM first generates code, so
+  it does nothing if another session already generated code in this JVM.
 """
 
 from __future__ import annotations
@@ -71,6 +82,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.sql.files.maxPartitionBytes", "128MB")
         .config("spark.sql.session.timeZone", "UTC")
+        # static, JVM-wide, read at the first code generation: see the
+        # module docstring for the measured counts behind 1024
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         # bucketed-table writes (datapipe.dedup.write_minhash_tables) land
         # in the warehouse; keep it out of the source tree. Namespaced per
         # UID (two users on one host must not rmtree each other's bucketed
