@@ -713,32 +713,19 @@ def fetch_join(spark, sf_dir):
     f"""{_PAGES_CTE}
 SELECT 'bloom' AS filter_kind, url FROM pages WHERE doc_id % 2 = 1
 UNION ALL
-SELECT 'cuckoo' AS filter_kind, url FROM pages WHERE doc_id % 2 = 1
-UNION ALL
 SELECT 'expired' AS filter_kind, url FROM pages
 WHERE doc_id % 2 = 1 OR doc_id % 4 = 0
 """,
 )
 def seen_dedup(spark, sf_dir):
     """J2 + cache invalidation (S9's expiry half — reference
-    cache_context.py / async_database.py:495 aclear_db): pre-filtered
+    cache_context.py / async_database.py:495 aclear_db): bloom-pre-filtered
     exact anti-join dedup of candidates vs the URL-seen set (seen = even
-    doc_ids ⇒ survivors = odd), under BOTH north-rule filter backends —
-    the bloom bitset (operators/seen.py) and the deletable
-    16-bit-fingerprint cuckoo filter (operators/cuckoo.py) — plus a
-    TTL-expiry leg: half the seen set (doc_id % 4 == 0) is expired via
-    IN-PLACE cuckoo deletion, after which those URLs must dedup as new
-    while every surviving seen key still pre-filters correctly. The
-    deletion is what the value-exact oracle actually bites on: a delete
-    that clipped a SURVIVOR's fingerprint would let a seen candidate skip
-    the exact join and surface as an extra row ⇒ hash mismatch."""
-    import numpy as np
-
-    from crawl4ai_spark.operators.cuckoo import (
-        build_cuckoo,
-        cuckoo_maybe_contains_col,
-    )
-
+    doc_ids ⇒ survivors = odd), plus a TTL-expiry leg in
+    ``CrawlRun.expire_seen``'s shape: half the seen set (doc_id % 4 == 0)
+    is expired, a fresh bloom is built over the survivors, and the expired
+    URLs must then dedup as new while every surviving seen key still
+    pre-filters away."""
     p = _pages_full(spark, sf_dir)
     candidates = p.select(F.col("url"), F.col("url").alias("url_norm"))
     seen = p.filter(F.col("doc_id") % 2 == 0).select(F.col("url").alias("url_norm"))
@@ -746,45 +733,14 @@ def seen_dedup(spark, sf_dir):
     leg_bloom = dedup_against_seen(candidates, seen, bloom=bloom).select(
         F.lit("bloom").alias("filter_kind"), "url"
     )
-    cf = build_cuckoo(seen, num_buckets=1 << 14)
-    cuckoo_flagged = candidates.withColumn(
-        "_maybe_seen", cuckoo_maybe_contains_col(spark, cf, F.col("url_norm"))
-    )
-    leg_cuckoo = dedup_against_seen(
-        cuckoo_flagged, seen, flag_col="_maybe_seen"
-    ).select(F.lit("cuckoo").alias("filter_kind"), "url")
-    # expiry leg: delete the expired keys from a fresh filter, anti-join
-    # vs the reduced seen table (exactly CrawlRun.expire_seen's shape)
-    expired_mask = (F.col("doc_id") % 2 == 0) & (F.col("doc_id") % 4 == 0)
-    expired_hashes = np.array(
-        [
-            r.h
-            for r in p.filter(expired_mask)
-            .select(F.xxhash64("url").alias("h"))
-            .collect()
-        ],
-        dtype=np.int64,
-    )
     remaining = p.filter((F.col("doc_id") % 2 == 0) & (F.col("doc_id") % 4 != 0)).select(
         F.col("url").alias("url_norm")
     )
-    # driver-side copy of the filter built above — same keys, zero extra
-    # Spark jobs — since deletion mutates in place
-    from crawl4ai_spark.operators.cuckoo import CuckooFilterSet
-
-    cf_exp = CuckooFilterSet(
-        cf.num_buckets, table=cf.table.copy(), overflow=cf.overflow.copy()
+    bloom_exp = build_bloom(remaining, num_bits=1 << 20)
+    leg_expired = dedup_against_seen(candidates, remaining, bloom=bloom_exp).select(
+        F.lit("expired").alias("filter_kind"), "url"
     )
-    removed = cf_exp.delete(expired_hashes)
-    if not removed.all():  # a real raise: must survive python -O
-        raise AssertionError("cuckoo delete missed an inserted expired key")
-    exp_flagged = candidates.withColumn(
-        "_maybe_seen", cuckoo_maybe_contains_col(spark, cf_exp, F.col("url_norm"))
-    )
-    leg_expired = dedup_against_seen(
-        exp_flagged, remaining, flag_col="_maybe_seen"
-    ).select(F.lit("expired").alias("filter_kind"), "url")
-    return leg_bloom.unionByName(leg_cuckoo).unionByName(leg_expired)
+    return leg_bloom.unionByName(leg_expired)
 
 
 @q(

@@ -405,6 +405,25 @@ def _hash_fn_name(hash_fn) -> str:
     return getattr(hash_fn, "__name__", None) or repr(hash_fn)
 
 
+def _hash_fn_expr(hash_fn) -> str:
+    """Behavioural fingerprint of ``hash_fn``: the expression it builds
+    over a fixed probe column. Two callables that share a ``__name__``
+    (every lambda is ``<lambda>``) but hash differently get different
+    fingerprints. Spark names higher-order-function variables from a
+    global counter (``x_1``, then ``x_3`` on the next call), so they are
+    renumbered in order of appearance. Builds a Column only; it starts no
+    Spark job."""
+    import re
+
+    expr = str(hash_fn(F.col("_minhash_probe")))
+    names: dict[str, str] = {}
+    return re.sub(
+        r"\b[a-z]+_\d+\b",
+        lambda m: names.setdefault(m.group(), f"v{len(names)}"),
+        expr,
+    )
+
+
 def _minhash_params_path(spark, name_prefix: str) -> str:
     import os
 
@@ -420,6 +439,13 @@ def read_minhash_params(spark, name_prefix: str) -> dict | None:
     ``hash_fn`` comes back as the function NAME — a daily-increment job
     resolves it against its own registry (the two shipped spellings are
     ``xxhash64`` and ``portable_hash``)."""
+    stored = _read_minhash_sidecar(spark, name_prefix)
+    if stored is not None:
+        stored.pop("hash_fn_expr", None)
+    return stored
+
+
+def _read_minhash_sidecar(spark, name_prefix: str) -> dict | None:
     import json
     import os
 
@@ -443,6 +469,7 @@ def _write_minhash_params(
                 "bands": bands,
                 "buckets": buckets,
                 "hash_fn": _hash_fn_name(hash_fn),
+                "hash_fn_expr": _hash_fn_expr(hash_fn),
             },
             f,
         )
@@ -465,8 +492,11 @@ def _check_minhash_params(
     and duplicates leak into the corpus; an append would bake
     differently-banded rows into the tables. Tables from before the
     sidecar (no params file) are accepted unchecked — rewrite with the
-    current ``write_minhash_tables`` to get the protection."""
-    stored = read_minhash_params(spark, name_prefix)
+    current ``write_minhash_tables`` to get the protection. ``hash_fn``
+    is compared by name and, where the sidecar records it, by the
+    expression it builds (sidecars written before the fingerprint compare
+    by name only)."""
+    stored = _read_minhash_sidecar(spark, name_prefix)
     if stored is None:
         return
     claimed = {
@@ -474,6 +504,7 @@ def _check_minhash_params(
         "num_hashes": num_hashes,
         "bands": bands,
         "hash_fn": _hash_fn_name(hash_fn),
+        "hash_fn_expr": _hash_fn_expr(hash_fn),
     }
     if buckets is not None:
         claimed["buckets"] = buckets

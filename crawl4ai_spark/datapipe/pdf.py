@@ -9,7 +9,7 @@ convention); page extraction is a ``mapInPandas`` 1→N explosion — one Arrow
 batch in, one row per page out, shuffle-free. The real decoder is pypdf,
 gated behind a try-import like the image codec (multimodal.decode_image);
 this container has no pypdf, so the shipped path is a from-scratch naive
-parser over UNCOMPRESSED content streams:
+parser over content streams:
 
 - a page = one ``stream``…``endstream`` content block, in byte order (the
   naive stand-in for pypdf's page tree walk);
@@ -24,14 +24,19 @@ parser over UNCOMPRESSED content streams:
   reads the trailer's Info ref; a linearized file can carry two copies and
   the updated one is last).
 
-Compressed (``/FlateDecode``) streams require the real decoder and yield
-empty text under the naive parser — documented, like every codec-absent
-stub in datapipe.multimodal.
+A stream whose object dictionary names ``/FlateDecode`` is inflated with
+stdlib ``zlib`` before the scan. The inflated size is capped (PDFs are
+outside input; a few KB of deflate can expand to gigabytes), and a stream
+that is corrupt, truncated or over the cap yields an empty page instead of
+raising. Other filters (LZW, DCT, filter chains) still need the real
+decoder and yield empty text, like every codec-absent stub in
+datapipe.multimodal.
 """
 
 from __future__ import annotations
 
 import re
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -48,6 +53,8 @@ _STR = rb"\(((?:[^()\\]|\\.)*)\)"
 _SHOW_RE = re.compile(_STR + rb"\s*Tj|\[((?:[^\]\\]|\\.)*)\]\s*TJ")
 _URI_RE = re.compile(rb"/URI\s*" + _STR)
 _META_KEYS = ("Title", "Author", "Subject", "Producer")
+# zip-bomb guard: largest decoded size of one /FlateDecode stream
+_MAX_INFLATED = 16 << 20
 
 
 def _unescape(raw: bytes) -> str:
@@ -69,14 +76,32 @@ def _block_text(block: bytes) -> str:
     return " ".join(p for p in parts if p)
 
 
+def _inflate(raw: bytes) -> bytes:
+    """Decoded bytes of a /FlateDecode stream; b'' when it is corrupt,
+    truncated or would inflate past ``_MAX_INFLATED``."""
+    d = zlib.decompressobj()
+    try:
+        out = d.decompress(raw, _MAX_INFLATED)
+    except zlib.error:
+        return b""
+    return out if d.eof else b""
+
+
 def parse_pdf_pages(data: bytes) -> list[dict]:
     """Naive per-page parse: [{page_number, text, links}] (1-based, the
     reference's page numbering, processor.py:85)."""
     if not data.startswith(PDF_MAGIC):
         return []
     pages = []
+    prev_end = 0
     for i, m in enumerate(_STREAM_RE.finditer(data)):
         content = m.group(1)
+        # the stream's own dictionary: the bytes after the last ``obj``
+        # header since the previous stream
+        head = data[prev_end:m.start()].rpartition(b"obj")[2]
+        prev_end = m.end()
+        if b"/FlateDecode" in head:
+            content = _inflate(content)
         text = "\n".join(
             t for t in (_block_text(b.group(1)) for b in _BT_RE.finditer(content)) if t
         )

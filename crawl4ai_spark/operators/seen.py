@@ -11,6 +11,11 @@ The reference's seen set is an in-process ``Set[str]``
   anti-join shuffle entirely; only bloom-positive candidates (a small,
   false-positive-inflated slice) pay the join.
 
+This bloom is the one URL-seen pre-filter: the crawl loop (plans/crawl.py)
+builds it once over the seen table, then merges each iteration's new keys
+into it. A bloom cannot delete, so a TTL expiry drops it and the next
+iteration rebuilds it over the surviving keys.
+
 At cluster scale the bitset size is chosen per expected cardinality
 (n=10^10, p=1% → ~12 GB total, sharded per partition range; here a single
 array suffices). Spark's JVM ``DataFrameStatFunctions.bloomFilter`` is not
@@ -69,40 +74,39 @@ class BloomFilterSet:
 BLOOM_MERGE_FANIN = 32
 
 
-def build_filter_distributed(
+def build_bloom(
     df: DataFrame,
-    key: str,
-    hash_col: str | None,
-    new_filter,
-    to_pdf,
-    from_row,
-    schema: str,
-    merge_fanin: int,
-):
-    """Shared distributed-build protocol for BOTH approximate-membership
-    backends (the bloom here and ``operators/cuckoo.py`` — one code path so
-    a fan-in/empty-partition/merge fix cannot silently apply to only one):
-    per-partition filters via ``mapInPandas``, tree-merged executor-side
-    within ``merge_fanin`` groups on wide inputs, then a driver merge of at
-    most ``merge_fanin`` serialized tables — driver traffic is bounded by
-    ``merge_fanin`` × table size regardless of the scan's partition count
-    (a 10k-partition cluster ships ~32 MiB through the driver, not ~10 GiB).
-    Merge must be associative and membership placement-independent, which
-    both backends guarantee.
+    key: str = "url_norm",
+    num_bits: int = 1 << 23,
+    num_hashes: int = 5,
+    merge_fanin: int = BLOOM_MERGE_FANIN,
+    hash_col: str | None = None,
+) -> BloomFilterSet:
+    """Distributed bloom build (SURVEY.md §4 custom-work item 1):
+    per-partition bitsets via ``mapInPandas`` (an empty partition ships
+    nothing), OR-merged executor-side within ``merge_fanin`` groups on
+    wide inputs, then a driver merge of at most ``merge_fanin`` bitsets —
+    driver traffic is bounded by ``merge_fanin`` × bitset regardless of
+    the scan's partition count (a 10k-partition cluster ships ~32 MiB
+    through the driver, not ~10 GiB). OR is associative and commutative,
+    so the tree-merged result is bit-identical to a single-level merge.
 
-    - ``new_filter()`` → empty filter with ``add(np.int64 batch)`` + ``merge``
-    - ``to_pdf(filter)`` → one-row pandas frame matching ``schema``
-    - ``from_row(row)`` → filter deserialized from one such row
-    - ``hash_col``: column already holding ``xxhash64(key)`` (the seen
-      table's ``url_hash``) — the build then scans stored 8-byte longs
-      (one pruned parquet column) instead of re-hashing key strings."""
+    ``hash_col``: column already holding ``xxhash64(key)`` (the seen
+    table's ``url_hash``) — the build then scans stored 8-byte longs (one
+    pruned parquet column) instead of re-hashing key strings."""
     if hash_col is not None:
         hashed = df.select(F.col(hash_col).alias("h"))
     else:
         hashed = df.select(F.xxhash64(F.col(key)).alias("h"))
 
+    def from_bytes(b) -> BloomFilterSet:
+        return BloomFilterSet(num_bits, num_hashes, np.frombuffer(b, dtype=np.uint8))
+
+    def to_pdf(f: BloomFilterSet) -> pd.DataFrame:
+        return pd.DataFrame({"bits": [f.bits.tobytes()]})
+
     def per_partition(batches):
-        f = new_filter()
+        f = BloomFilterSet(num_bits, num_hashes)
         any_rows = False
         for pdf in batches:
             if len(pdf):
@@ -114,52 +118,24 @@ def build_filter_distributed(
     def merge_within_partition(batches):
         acc = None
         for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                g = from_row(row)
+            for b in pdf["bits"]:
+                g = from_bytes(b)
                 acc = g if acc is None else acc.merge(g)
         if acc is not None:
             yield to_pdf(acc)
 
-    partials = hashed.mapInPandas(per_partition, schema)
+    partials = hashed.mapInPandas(per_partition, "bits binary")
     if hashed.rdd.getNumPartitions() > merge_fanin:
         partials = partials.repartition(merge_fanin).mapInPandas(
-            merge_within_partition, schema
+            merge_within_partition, "bits binary"
         )
     parts = partials.collect()
-    out = new_filter()
+    out = BloomFilterSet(num_bits, num_hashes)
     for row in parts:
-        out = out.merge(from_row(row))
+        out = out.merge(from_bytes(row.bits))
     # observability for the driver-traffic bound: with the merge stage,
     # len(parts) ≤ merge_fanin no matter how many partitions the scan had
-    out.n_collected_tables = len(parts)
-    return out
-
-
-def build_bloom(
-    df: DataFrame,
-    key: str = "url_norm",
-    num_bits: int = 1 << 23,
-    num_hashes: int = 5,
-    merge_fanin: int = BLOOM_MERGE_FANIN,
-    hash_col: str | None = None,
-) -> BloomFilterSet:
-    """Distributed bloom build (SURVEY.md §4 custom-work item 1) over the
-    shared ``build_filter_distributed`` protocol — OR is associative and
-    commutative, so the tree-merged result is bit-identical to a
-    single-level merge."""
-    out = build_filter_distributed(
-        df,
-        key,
-        hash_col,
-        new_filter=lambda: BloomFilterSet(num_bits, num_hashes),
-        to_pdf=lambda f: pd.DataFrame({"bits": [f.bits.tobytes()]}),
-        from_row=lambda row: BloomFilterSet(
-            num_bits, num_hashes, np.frombuffer(row.bits, dtype=np.uint8)
-        ),
-        schema="bits binary",
-        merge_fanin=merge_fanin,
-    )
-    out.n_collected_bitsets = out.n_collected_tables  # historical alias
+    out.n_collected_bitsets = len(parts)
     return out
 
 

@@ -17,9 +17,11 @@ One iteration =
   4. extract                  — scrape/markdown Arrow UDFs (plans/extract)
   5. link discovery           — explode links, T2-normalize, validity +
                                 filter chain, score, threshold, capacity top-k
-  6. dedup                    — bloom pre-filter + exact anti-join vs seen
-                                (seen = ENQUEUED set, as in the reference:
-                                visited.add happens at enqueue, not fetch)
+  6. dedup                    — one bloom pre-filter (built once, then
+                                merged with each iteration's new keys) +
+                                exact anti-join vs seen (seen = ENQUEUED
+                                set, as in the reference: visited.add
+                                happens at enqueue, not fetch)
   7. commit                   — results/seen appends + frontier replace
                                 submitted CONCURRENTLY (separate tables,
                                 separate manifests — wall time ≈ the
@@ -76,7 +78,6 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
@@ -89,7 +90,11 @@ from crawl4ai_spark.operators.capture import latest_capture
 from crawl4ai_spark.operators.politeness import host_budget_rank, merge_host_state
 from crawl4ai_spark.operators.ranking import capacity_topk, priority_rank
 from crawl4ai_spark.operators.robots import apply_robots_gate
-from crawl4ai_spark.operators.seen import build_bloom, dedup_against_seen
+from crawl4ai_spark.operators.seen import (
+    bloom_maybe_contains_col,
+    build_bloom,
+    dedup_against_seen,
+)
 from crawl4ai_spark.plans.extract import extract_udf
 from crawl4ai_spark.sources.snapshots import SnapshotTable
 
@@ -105,23 +110,10 @@ class CrawlConfig:
     score_threshold: float = float("-inf")
     include_external: bool = False
     check_robots: bool = True
-    # URL-seen pre-filter backend (the north rule's "bloom/cuckoo"):
-    # 'bloom'  — OR-mergeable bitsets (operators/seen.py), cheapest build;
-    # 'cuckoo' — 16-bit-fingerprint cuckoo tables (operators/cuckoo.py),
-    #            ~80x lower FPP at comparable memory and DELETABLE, so a
-    #            TTL/recrawl policy can expire seen URLs in place.
-    # Both are pre-filters ahead of the same exact anti-join, so the crawl's
-    # visit order and seen set are byte-identical under either backend.
-    seen_filter: str = "bloom"
+    # URL-seen pre-filter (operators/seen.py): an OR-mergeable bloom
+    # bitset ahead of the exact anti-join, so the crawl's visit order and
+    # seen set are byte-identical with or without it
     bloom_bits: int = 1 << 23
-    # initial cuckoo size: x4 slots ≈ 1.76M keys at the paper's 0.84
-    # safe-load watermark (operators/cuckoo.py SAFE_LOAD). A dial, not a
-    # cap — the crawl auto-grows past it: full builds size at
-    # buckets_for(n_seen) and a filter whose load crosses the watermark
-    # after an incremental merge is rebuilt at the next power of two, so
-    # the saturated-table regime (eviction-chain exhaustion, unbounded
-    # overflow spill) is never entered no matter how long the crawl runs
-    cuckoo_buckets: int = 1 << 19
     # fetch join: broadcast the frontier slice only below this row count —
     # an unbudgeted iteration (iteration_budget=None, huge max_pages) must
     # degrade to a shuffle join instead of OOMing the driver with a hinted
@@ -194,13 +186,6 @@ class CrawlRun:
         self.robots = robots
         self.seeds = seeds
         self.config = config or CrawlConfig()
-        if self.config.seen_filter not in ("bloom", "cuckoo"):
-            # fail at construction, not at the first over-threshold
-            # iteration minutes into a run
-            raise ValueError(
-                f"unknown seen_filter: {self.config.seen_filter!r} "
-                "(expected 'bloom' or 'cuckoo')"
-            )
         self.t_frontier = SnapshotTable(os.path.join(workdir, "frontier"))
         self.t_seen = SnapshotTable(os.path.join(workdir, "seen"))
         self.t_results = SnapshotTable(os.path.join(workdir, "results"))
@@ -212,20 +197,15 @@ class CrawlRun:
         # have committed by then) — holding it any longer leaks one dead
         # ~1 MiB broadcast per iteration on driver and executors
         self._bloom_bc = None
-        # the URL-seen pre-filter (BloomFilterSet or CuckooFilterSet per
-        # config.seen_filter), maintained INCREMENTALLY across iterations:
-        # built full once (first threshold crossing or resume), then each
-        # iteration merges in only its own new keys. May hold EXTRA keys
+        # the URL-seen bloom pre-filter, maintained INCREMENTALLY across
+        # iterations: built full once (first threshold crossing, resume or
+        # after an expiry), then each iteration merges in only its own new
+        # keys at the same geometry. May hold EXTRA keys
         # relative to the committed seen table after a rolled-back
         # iteration — harmless by construction (a filter positive still
         # passes through the exact anti-join); it can never be missing a
         # committed key (the merge precedes the commit point)
         self._seen_filter = None
-        # current cuckoo geometry dial: starts at the config value, grows
-        # (never shrinks) when a full build sizes for a larger seen set or
-        # an incremental merge pushes the load factor past the safe
-        # watermark — see _filter_build_full / the post-merge grow check
-        self._cuckoo_num_buckets = self.config.cuckoo_buckets
         # every frame run_iteration persists, so the failure path can
         # release them too — without this a raise mid-iteration (fetch
         # error, commit race, fail-loud fan-out guard) strands up to six
@@ -274,97 +254,6 @@ class CrawlRun:
                 self._bloom_bc.destroy()
             finally:
                 self._bloom_bc = None
-
-    # -- seen-filter backend dispatch ------------------------------------------
-    # ONE decision surface for cfg.seen_filter so the build / incremental /
-    # probe paths cannot drift apart: every backend-conditional in the
-    # iteration goes through these four helpers.
-
-    def _filter_build_full(self, seen_df, n_seen: int):
-        """Full O(n_seen) build — once per process (first threshold
-        crossing, resume, or post-grow rebuild). The cuckoo sizes itself
-        for the CURRENT cardinality (never below the config dial, never
-        shrinking), so a resume against a seen set that outgrew the dial
-        starts at a healthy load factor instead of a saturated table."""
-        if self.config.seen_filter == "cuckoo":
-            from crawl4ai_spark.operators.cuckoo import (
-                build_cuckoo,
-                buckets_for,
-            )
-
-            self._cuckoo_num_buckets = max(
-                self._cuckoo_num_buckets, buckets_for(n_seen)
-            )
-            return build_cuckoo(
-                seen_df,
-                num_buckets=self._cuckoo_num_buckets,
-                hash_col="url_hash",
-            )
-        return build_bloom(
-            seen_df, num_bits=self.config.bloom_bits, hash_col="url_hash"
-        )
-
-    def _filter_build_partial(self, new_df):
-        """O(new) build of ONLY this iteration's keys, at the live
-        filter's exact geometry (merge requires it — the full build may
-        have sized past the config dial)."""
-        cur = self._seen_filter
-        if self.config.seen_filter == "cuckoo":
-            from crawl4ai_spark.operators.cuckoo import build_cuckoo
-
-            return build_cuckoo(
-                new_df, num_buckets=cur.num_buckets, hash_col="url_hash"
-            )
-        return build_bloom(
-            new_df,
-            num_bits=cur.num_bits,
-            num_hashes=cur.num_hashes,
-            hash_col="url_hash",
-        )
-
-    def _filter_payload(self):
-        """Serialized filter state for the per-iteration broadcast."""
-        if self.config.seen_filter == "cuckoo":
-            return self._seen_filter.to_bytes()
-        return self._seen_filter.bits.tobytes()
-
-    def _filter_probe_col(self):
-        """Probe Column over the current broadcast (``self._bloom_bc``)."""
-        if self.config.seen_filter == "cuckoo":
-            from crawl4ai_spark.operators.cuckoo import (
-                cuckoo_maybe_contains_col,
-            )
-
-            return cuckoo_maybe_contains_col(
-                self.spark,
-                self._seen_filter,
-                F.col("url_norm"),
-                state_bc=self._bloom_bc,
-            )
-        from crawl4ai_spark.operators.seen import bloom_maybe_contains_col
-
-        return bloom_maybe_contains_col(
-            self.spark,
-            self._seen_filter,
-            F.col("url_norm"),
-            bits_bc=self._bloom_bc,
-        )
-
-    def _filter_grow_check(self) -> None:
-        """Post-merge saturation check (cuckoo only — a bloom degrades
-        gracefully to a higher FPP, a saturated cuckoo falls off a cliff:
-        scalar eviction chains + unbounded overflow spill). Crossing the
-        watermark drops the in-memory filter and doubles the geometry
-        dial, so the NEXT iteration's full rebuild — O(total), but at
-        geometrically-spaced sizes, hence amortized O(1) per key — starts
-        from a healthy load factor."""
-        if (
-            self.config.seen_filter == "cuckoo"
-            and self._seen_filter is not None
-            and self._seen_filter.needs_grow()
-        ):
-            self._cuckoo_num_buckets = 2 * self._seen_filter.num_buckets
-            self._seen_filter = None
 
     # -- state ---------------------------------------------------------------
 
@@ -845,32 +734,33 @@ class CrawlRun:
         if cfg.score_threshold != float("-inf"):
             candidates = candidates.filter(F.col("score") >= cfg.score_threshold)
 
-        # 6. dedup vs seen (exact anti-join; bloom/cuckoo pre-filter once
-        #    the seen set is big enough that skipping the join shuffle pays
-        #    for the filter build+broadcast). The backend choice
-        #    (cfg.seen_filter) cannot change results — both filters are
-        #    no-false-negative pre-filters ahead of the same exact join —
-        #    only the FPP/memory/deletability trade.
+        # 6. dedup vs seen (exact anti-join; bloom pre-filter once the seen
+        #    set is big enough that skipping the join shuffle pays for the
+        #    filter build+broadcast). The bloom cannot change results: it
+        #    is a no-false-negative pre-filter ahead of the same exact join.
         seen_df = self.t_seen.read(self.spark)
         flagged = None
         if seen_df is not None and st["n_seen"] >= cfg.bloom_min_seen:
             if self._seen_filter is None:
                 # INCREMENTAL maintenance: this full O(n_seen) build runs
-                # once per process (first threshold crossing, resume, or a
-                # post-grow rebuild); afterwards each iteration merges in
+                # once per process (first threshold crossing, resume, or
+                # after an expiry); afterwards each iteration merges in
                 # only its own new keys (see the partial build below), so
                 # the per-iteration filter cost is O(new), not O(total) —
                 # at a 10^10-URL seen set the difference is the whole job.
                 # The seen table stores url_hash = xxhash64(url_norm) at
                 # every append precisely so these builds scan 8-byte longs
                 # (one pruned column) instead of re-hashing url strings.
-                self._seen_filter = self._filter_build_full(
-                    seen_df, st["n_seen"]
+                self._seen_filter = build_bloom(
+                    seen_df, num_bits=cfg.bloom_bits, hash_col="url_hash"
                 )
             self._bloom_bc = self.spark.sparkContext.broadcast(
-                self._filter_payload()
+                self._seen_filter.bits.tobytes()
             )
-            probe = self._filter_probe_col()
+            probe = bloom_maybe_contains_col(
+                self.spark, self._seen_filter, F.col("url_norm"),
+                bits_bc=self._bloom_bc,
+            )
             # pre-compute the filter probe ONCE under a persist: the split
             # inside dedup_against_seen consumes the candidate plan twice,
             # and without this boundary the Arrow probe UDF (plus the
@@ -1018,14 +908,10 @@ class CrawlRun:
             # crawl. A process restart drops the object entirely and the
             # resume path rebuilds it full, once.
             self._seen_filter = self._seen_filter.merge(
-                self._filter_build_partial(seen_append)
+                build_bloom(
+                    seen_append, num_bits=cfg.bloom_bits, hash_col="url_hash"
+                )
             )
-            # a merge that pushes the cuckoo past its safe load factor
-            # drops the filter and doubles the geometry dial — the next
-            # iteration full-rebuilds at the larger size instead of
-            # degrading into the saturated-table regime (scalar eviction
-            # chains, unbounded overflow spill)
-            self._filter_grow_check()
         # two-phase commit across independent tables (separate manifests):
         # the Spark DATA writes run concurrently into invisible staging
         # dirs (commit wall time = slowest write, not the sum), then the
@@ -1156,16 +1042,11 @@ class CrawlRun:
         never wrong; the exact survivor count is recorded on the seen
         replace's own meta.
 
-        In-memory filter maintenance is where the backend trade shows:
-        the cuckoo DELETES the expired keys in place — O(expired) numpy
-        work, no rebuild, the operation that justifies the backend — while
-        the bloom (which cannot delete) is dropped and full-rebuilds over
-        the survivors at the next iteration. Either way correctness never
-        depends on it: a stale filter positive only routes a candidate
+        A bloom cannot delete, so the in-memory filter is dropped and the
+        next iteration rebuilds it over the survivors. Correctness never
+        depends on that: a stale filter positive only routes a candidate
         through the exact anti-join, which now misses, so the URL is
-        re-crawled. The expired url_hash collect is driver-bounded by
-        8 bytes × n_expired — same order as the driver-resident filter
-        itself.
+        re-crawled.
 
         Returns ``{"n_expired": int, "n_seen": int}`` (survivor count)."""
         st = self.state()
@@ -1222,15 +1103,7 @@ class CrawlRun:
                  "n_seen": n_seen},
                 mode="replace",
             )
-            if self._seen_filter is not None:
-                if self.config.seen_filter == "cuckoo":
-                    hashes = np.array(
-                        [r.url_hash for r in expired.select("url_hash").collect()],
-                        dtype=np.int64,
-                    )
-                    self._seen_filter.delete(hashes)
-                else:
-                    self._seen_filter = None
+            self._seen_filter = None
             return {"n_expired": n_expired, "n_seen": n_seen}
         finally:
             expired.unpersist()

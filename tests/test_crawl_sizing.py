@@ -17,6 +17,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 import crawl4ai_spark.operators.ranking as rk
+import crawl4ai_spark.plans.crawl as crawl_mod
 from crawl4ai_spark.operators.seen import build_bloom
 from crawl4ai_spark.plans.crawl import CrawlConfig, CrawlRun, _parts
 from crawl4ai_spark.sources.synthetic import build_robots, build_seeds
@@ -88,14 +89,13 @@ def test_incremental_filter_build_is_snapshot_sized(spark, pages, monkeypatch):
     """The partial bloom build reads a _parts(n_seen_add)-partition input,
     and after several incremental merges the in-memory bitset equals a
     fresh build over the committed seen table."""
-    widths: list[tuple[int, int]] = []
-    real = CrawlRun._filter_build_partial
+    builds: list[tuple[int, int]] = []
 
-    def spy(self, new_df):
-        widths.append((new_df.rdd.getNumPartitions(), new_df.count()))
-        return real(self, new_df)
+    def spy(df, **kw):
+        builds.append((df.rdd.getNumPartitions(), df.count()))
+        return build_bloom(df, **kw)
 
-    monkeypatch.setattr(CrawlRun, "_filter_build_partial", spy)
+    monkeypatch.setattr(crawl_mod, "build_bloom", spy)
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
         tempfile.mkdtemp(prefix="c4ai_partial_"),
@@ -106,6 +106,9 @@ def test_incremental_filter_build_is_snapshot_sized(spark, pages, monkeypatch):
     )
     stats = run.run(max_iterations=5)
     assert not any(s.get("done") for s in stats), stats
+    # the first build is the full one over the seen table; every later
+    # build is an iteration's partial build
+    widths = builds[1:]
     assert len(widths) >= 3, widths
     for n_parts, n_rows in widths:
         assert n_parts == _parts(n_rows), widths

@@ -1545,3 +1545,52 @@ def test_minhash_params_sidecar_guards_mismatched_callers(spark, sf_dir):
         "k": 3, "num_hashes": 16, "bands": 4, "buckets": 2,
         "hash_fn": "xxhash64",
     }
+
+
+def test_minhash_params_sidecar_fingerprints_hash_fn(spark, sf_dir):
+    """Two lambdas share the name ``<lambda>``; the sidecar tells them
+    apart by the expression each builds, so an append under a same-named
+    hash_fn with a different body raises instead of writing band keys
+    that never match. Sidecars without the fingerprint compare by name."""
+    import json
+
+    import pytest as _pytest
+
+    from crawl4ai_spark.datapipe.dedup import (
+        _check_minhash_params,
+        _hash_fn_expr,
+        _minhash_params_path,
+        append_minhash_tables,
+        write_minhash_tables,
+    )
+
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .filter("doc_id < 20")
+    )
+    write_minhash_tables(docs, "doc_id", "text", "t_fp",
+                         hash_fn=lambda c: F.xxhash64(c), buckets=2)
+    salted = lambda c: F.xxhash64(F.concat(c, F.lit("!")))  # noqa: E731
+    assert salted.__name__ == "<lambda>"
+    batch = docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
+    with _pytest.raises(ValueError, match="hash_fn"):
+        append_minhash_tables(spark, batch, "t_fp", hash_fn=salted, buckets=2)
+    params = dict(k=3, num_hashes=16, bands=4, buckets=2)
+    # a different lambda object with the same body passes
+    _check_minhash_params(spark, "t_fp", hash_fn=lambda c: F.xxhash64(c), **params)
+    # higher-order-function variables get fresh names on every call;
+    # the fingerprint does not depend on them
+    def hof(c):
+        return F.aggregate(F.array(c), F.lit(0).cast("long"),
+                           lambda acc, x: acc + F.xxhash64(x))
+
+    assert _hash_fn_expr(hof) == _hash_fn_expr(hof)
+    # a sidecar written before the fingerprint compares by name only
+    path = _minhash_params_path(spark, "t_fp")
+    with open(path) as f:
+        stored = json.load(f)
+    del stored["hash_fn_expr"]
+    with open(path, "w") as f:
+        json.dump(stored, f)
+    _check_minhash_params(spark, "t_fp", hash_fn=salted, **params)

@@ -1,9 +1,11 @@
 """PDF blob processing (datapipe/pdf.py). The driver's blob_suite pdf leg
 value-checks the happy path over synthesized two-page PDFs; these cover the
-parser edges: escapes, ordering, non-PDF blobs, metadata last-wins, and the
-mapInPandas explosion schema."""
+parser edges: escapes, ordering, non-PDF blobs, metadata last-wins,
+/FlateDecode streams, and the mapInPandas explosion schema."""
 
 from __future__ import annotations
+
+import zlib
 
 from crawl4ai_spark.datapipe.pdf import (
     extract_pdf_pages,
@@ -119,5 +121,76 @@ class TestFuzzRobustness:
             for p in parse_pdf_pages(data):
                 assert p["page_number"] >= 1
             parse_pdf_metadata(data)
+
+        check()
+
+
+def _pdf_obj(num: int, content: bytes, flate: bool) -> bytes:
+    if flate:
+        content = zlib.compress(content)
+    filt = b" /Filter /FlateDecode" if flate else b""
+    return (
+        b"%d 0 obj\n<< /Length %d%s >>\nstream\n" % (num, len(content), filt)
+        + content + b"\nendstream\nendobj\n"
+    )
+
+
+PAGE_1 = (
+    b"BT (Hello) Tj (world) Tj ET\nBT [(ke) -120 (rned)] TJ ET\n"
+    b"/URI (https://a.test/x)\n/URI (https://b.test/y)\n"
+)
+PAGE_2 = b"BT (page two) Tj ET\n"
+
+
+def _two_pages(flate: bool) -> bytes:
+    return (
+        b"%PDF-1.4\n" + _pdf_obj(1, PAGE_1, flate) + _pdf_obj(2, PAGE_2, flate)
+        + b"/Title (Final)\n"
+    )
+
+
+class TestFlateDecode:
+    def test_compressed_twin_parses_like_uncompressed(self):
+        plain = parse_pdf_pages(_two_pages(flate=False))
+        assert [p["text"] for p in plain] == ["Hello world\nkerned", "page two"]
+        assert parse_pdf_pages(_two_pages(flate=True)) == plain
+        # the filter is read per stream: a mixed document decodes both
+        mixed = b"%PDF-1.4\n" + _pdf_obj(1, PAGE_1, True) + _pdf_obj(2, PAGE_2, False)
+        assert parse_pdf_pages(mixed) == plain
+        assert parse_pdf_metadata(_two_pages(flate=True))["title"] == "Final"
+
+    def test_corrupt_or_truncated_stream_is_empty(self):
+        good = zlib.compress(PAGE_2)
+        for raw in (b"not deflate at all", good[: len(good) // 2]):
+            data = (
+                b"%PDF-1.4\n1 0 obj\n<< /Filter /FlateDecode >>\nstream\n"
+                + raw + b"\nendstream\nendobj\n"
+            )
+            assert parse_pdf_pages(data) == [
+                {"page_number": 1, "text": "", "links": []}
+            ]
+
+    def test_inflate_past_the_cap_is_empty(self, monkeypatch):
+        import crawl4ai_spark.datapipe.pdf as pdf_mod
+
+        padded = PAGE_2 + b" " * 4096
+        data = b"%PDF-1.4\n" + _pdf_obj(1, padded, flate=True)
+        assert parse_pdf_pages(data)[0]["text"] == "page two"
+        monkeypatch.setattr(pdf_mod, "_MAX_INFLATED", 1024)
+        assert parse_pdf_pages(data)[0]["text"] == ""
+
+    def test_arbitrary_flate_streams_never_raise(self):
+        from hypothesis import given, settings
+        from hypothesis import strategies as st
+
+        @settings(max_examples=200, deadline=None)
+        @given(st.binary(max_size=300))
+        def check(raw):
+            data = (
+                b"%PDF-1.4\n1 0 obj\n<< /Filter /FlateDecode >>\nstream\n"
+                + raw + b"endstream\n"
+            )
+            for p in parse_pdf_pages(data):
+                assert isinstance(p["text"], str)
 
         check()
