@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawl4ai_spark.datapipe.textstats import fingerprint_col, portable_hash, tokens_col
+from crawl4ai_spark.storage import read_sidecar, rewrite_table, write_sidecar
 
 # LSH band buckets larger than this are DIVERTED from the quadratic
 # self-join to a linear two-layer star expansion (see
@@ -425,11 +426,11 @@ def _hash_fn_expr(hash_fn) -> str:
 
 
 def _minhash_params_path(spark, name_prefix: str) -> str:
+    """The file of the ``minhash_params`` sidecar (``storage`` format)."""
     import os
 
     return os.path.join(
-        _table_location(spark, f"{name_prefix}_shingles"),
-        "_minhash_params.json",
+        _table_location(spark, f"{name_prefix}_shingles"), "_minhash_params.json"
     )
 
 
@@ -439,40 +440,31 @@ def read_minhash_params(spark, name_prefix: str) -> dict | None:
     ``hash_fn`` comes back as the function NAME — a daily-increment job
     resolves it against its own registry (the two shipped spellings are
     ``xxhash64`` and ``portable_hash``)."""
-    stored = _read_minhash_sidecar(spark, name_prefix)
-    if stored is not None:
-        stored.pop("hash_fn_expr", None)
-    return stored
-
-
-def _read_minhash_sidecar(spark, name_prefix: str) -> dict | None:
-    import json
-    import os
-
-    p = _minhash_params_path(spark, name_prefix)
-    if not os.path.exists(p):
+    try:
+        stored = read_sidecar(
+            _table_location(spark, f"{name_prefix}_shingles"), "minhash_params"
+        )
+    except FileNotFoundError:
         return None
-    with open(p) as f:
-        return json.load(f)
+    stored.pop("hash_fn_expr", None)
+    return stored
 
 
 def _write_minhash_params(
     spark, name_prefix: str, k, num_hashes, bands, buckets, hash_fn
 ) -> None:
-    import json
-
-    with open(_minhash_params_path(spark, name_prefix), "w") as f:
-        json.dump(
-            {
-                "k": k,
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "buckets": buckets,
-                "hash_fn": _hash_fn_name(hash_fn),
-                "hash_fn_expr": _hash_fn_expr(hash_fn),
-            },
-            f,
-        )
+    write_sidecar(
+        _table_location(spark, f"{name_prefix}_shingles"),
+        "minhash_params",
+        {
+            "k": k,
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "buckets": buckets,
+            "hash_fn": _hash_fn_name(hash_fn),
+            "hash_fn_expr": _hash_fn_expr(hash_fn),
+        },
+    )
 
 
 def _check_minhash_params(
@@ -496,8 +488,11 @@ def _check_minhash_params(
     is compared by name and, where the sidecar records it, by the
     expression it builds (sidecars written before the fingerprint compare
     by name only)."""
-    stored = _read_minhash_sidecar(spark, name_prefix)
-    if stored is None:
+    try:
+        stored = read_sidecar(
+            _table_location(spark, f"{name_prefix}_shingles"), "minhash_params"
+        )
+    except FileNotFoundError:
         return
     claimed = {
         "k": k,
@@ -784,6 +779,23 @@ def minhash_pairs_increment(
     )
 
 
+def _refuse_torn_append(spark, name_prefix: str, consequence: str) -> str:
+    """Raise if an ``append_minhash_tables`` call left its torn-append
+    marker behind; else return the marker's path."""
+    import os
+
+    marker = os.path.join(
+        _table_location(spark, f"{name_prefix}_shingles"), "_append_pending"
+    )
+    if os.path.exists(marker):
+        raise RuntimeError(
+            f"{name_prefix}: a previous append_minhash_tables did not "
+            f"complete — {consequence} Rebuild with write_minhash_tables "
+            "over the full corpus."
+        )
+    return marker
+
+
 def append_minhash_tables(
     spark,
     new_docs: DataFrame,
@@ -822,17 +834,12 @@ def append_minhash_tables(
         spark, name_prefix, k=k, num_hashes=num_hashes, bands=bands,
         hash_fn=hash_fn, buckets=buckets,
     )
-    marker = os.path.join(
-        _table_location(spark, f"{name_prefix}_shingles"), "_append_pending"
+    marker = _refuse_torn_append(
+        spark,
+        name_prefix,
+        "the shingle/band tables may be torn (docs with shingles but no "
+        "bands never surface as candidates; retrying would double-append).",
     )
-    if os.path.exists(marker):
-        raise RuntimeError(
-            f"{name_prefix}: a previous append_minhash_tables did not "
-            "complete — the shingle/band tables may be torn (docs with "
-            "shingles but no bands never surface as candidates; retrying "
-            "would double-append). Rebuild with write_minhash_tables over "
-            "the full corpus."
-        )
     sc = spark.sparkContext
     nparts = max(new_docs.rdd.getNumPartitions(), sc.defaultParallelism)
     sh, banded = _folded_bands(
@@ -866,87 +873,53 @@ def append_minhash_tables(
         sh.unpersist()
 
 
+def _bucket_count(spark, name: str) -> int:
+    """The number of buckets in catalog table ``name``'s bucket spec —
+    the layout every bucketed scan of the table assumes."""
+    for row in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect():
+        if row.col_name == "Num Buckets":
+            return int(row.data_type)
+    raise ValueError(f"{name} has no bucket spec")
+
+
 def _compact_bucketed_table(spark, name: str, key: str, buckets: int) -> dict:
-    """Rewrite one bucketed managed table from its own rows — same bucket
-    spec, single write generation. The swap is marker-guarded: the
-    compacted copy is a complete sibling table BEFORE the marker exists,
-    so every crash window recovers mechanically (original still
-    cataloged → discard the copy and re-run; original dropped → promote
-    the copy by rename). Row count verified before the swap."""
-    import os
-
+    """Rewrite one bucketed catalog table from its own rows — same bucket
+    spec, single write generation — through ``storage.rewrite_table``,
+    which swaps the table's directory (row count verified, the
+    ``_minhash_params.json`` sidecar carried, crash-recoverable from the
+    files alone). ``bucketBy`` writes only through the catalog, so the
+    copy is written as an external table at the swap's tmp dir and its
+    catalog entry is dropped at once (its files stay): the catalog never
+    holds more than the table itself, and the table's own entry is
+    refreshed after the swap, also when it fails (a recovery may have
+    renamed the files the entry's cached listing names)."""
     loc = _table_location(spark, name)
-    marker = loc.rstrip("/") + ".compact-pending"
-    tmp = f"{name}__compacting"
-    if os.path.exists(marker):
-        has_orig = spark.catalog.tableExists(name)
-        has_tmp = spark.catalog.tableExists(tmp)
-        if has_orig:
-            _drop_table(spark, tmp)
-        elif has_tmp:
-            spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
-        else:
-            raise RuntimeError(
-                f"compaction marker {marker} names no surviving table "
-                f"({name} and {tmp} both missing) — manual inspection "
-                "required"
-            )
-        os.remove(marker)
+    staging = f"{name}__compacting"
 
-    from crawl4ai_spark.storage import _count_data_files
-
-    files_before = _count_data_files(loc)
-    _drop_table(spark, tmp)  # stale copy from a pre-marker crash
-    df = spark.table(name)
-    n_before = df.count()
-    # repartition on the writer's BUCKET-ID expression, not the key
-    # column: when the source is itself a bucketed table with the same
-    # spec, the optimizer elides a repartition(buckets, key) as redundant
-    # and the write then emits one file per (input task × bucket) — the
-    # very fan-out being compacted. Hashing the bucket id keeps whole
-    # buckets on one task (≤ ``buckets`` output files total) and cannot
-    # be elided.
-    (
-        df.repartition(buckets, F.pmod(F.hash(F.col(key)), F.lit(buckets)))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .saveAsTable(tmp)
-    )
-    n_after = spark.table(tmp).count()
-    if n_after != n_before:
-        _drop_table(spark, tmp)
-        raise RuntimeError(
-            f"compaction of {name} would change the row count "
-            f"({n_before} → {n_after}); original left untouched"
+    def write_copy(tmp: str) -> None:
+        # read the files, not the catalog entry: after the swap recovered
+        # a crash, the entry's cached file listing names files that the
+        # recovery renamed away. Repartition on the writer's BUCKET-ID
+        # expression, which keeps whole buckets on one task (≤ ``buckets``
+        # output files total) and, unlike a repartition(buckets, key)
+        # over a source bucketed the same way, cannot be elided as
+        # redundant
+        (
+            spark.read.parquet(loc)
+            .repartition(buckets, F.pmod(F.hash(F.col(key)), F.lit(buckets)))
+            .write.mode("overwrite")
+            .format("parquet")
+            .bucketBy(buckets, key)
+            .sortBy(key)
+            .option("path", tmp)
+            .saveAsTable(staging)
         )
-    # carry sidecar metadata (the _minhash_params.json the writer
-    # persists — underscore-prefixed, so parquet readers skip it) into
-    # the compacted copy BEFORE the marker: the DROP TABLE below removes
-    # the original location wholesale, and the tmp table must already be
-    # a complete drop-in replacement when the marker appears. The torn
-    # append marker (_append_pending) is deliberately NOT carried — the
-    # caller refuses to compact while it exists.
-    import shutil
+        spark.sql(f"DROP TABLE {staging}")
 
-    tmp_loc = _table_location(spark, tmp)
-    for entry in os.listdir(loc):
-        src = os.path.join(loc, entry)
-        if (
-            entry.startswith("_")
-            and entry not in ("_SUCCESS", "_append_pending")
-            and os.path.isfile(src)
-            and not os.path.exists(os.path.join(tmp_loc, entry))
-        ):
-            shutil.copy2(src, os.path.join(tmp_loc, entry))
-    with open(marker, "w") as f:
-        f.write(tmp)
-    spark.sql(f"DROP TABLE {name}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {name}")
-    os.remove(marker)
-    return {"rows": n_before, "files_before": files_before,
-            "files_after": _count_data_files(loc)}
+    try:
+        return rewrite_table(spark, loc, write_copy)
+    finally:
+        spark.sql(f"REFRESH TABLE {name}")
 
 
 def compact_minhash_tables(
@@ -960,48 +933,40 @@ def compact_minhash_tables(
     Pure IO — shingles and signatures are read back as rows and
     re-bucketed under the SAME spec, never recomputed, so this costs one
     scan + one exchange per table instead of the O(corpus) signature
-    rebuild that ``write_minhash_tables`` pays. ``buckets`` must match
-    the original write (same contract as the appender) — omit it to use
-    the value from the params sidecar (tables from before the sidecar
-    fall back to the writer's default, 32); an explicit value that
-    disagrees with the sidecar raises rather than silently rewriting
-    the tables under a different bucket count.
+    rebuild that ``write_minhash_tables`` pays. Each table is rewritten
+    under the bucket count of its own catalog entry, which the swap keeps
+    and every bucketed scan reads the files by; ``buckets`` may be
+    omitted, and an explicit value that disagrees with either table's
+    spec raises rather than silently re-bucketing the files out from
+    under every bucket-aligned join.
 
-    The two tables compact independently and content never changes, so a
-    crash between them is harmless (one compacted, one not — every reader
-    sees the same rows); within one table the swap is marker-guarded and
-    auto-recovers (see ``_compact_bucketed_table``). Refuses to run over
-    a torn append (its marker means the TABLES may disagree — compacting
-    would bake the tear in)."""
-    import os
-
-    pend = os.path.join(
-        _table_location(spark, f"{name_prefix}_shingles"), "_append_pending"
+    Each table is rewritten by ``storage.rewrite_table``, the protocol
+    the ANN compactors use: the compacted copy is verified and complete
+    on disk before a marker swaps it in by directory rename, the next
+    call recovers any crash inside the swap from the files alone, and
+    stale copies of crashed attempts are swept. The two tables compact
+    independently and content never changes, so a crash between them is
+    harmless (one compacted, one not — every reader sees the same rows).
+    Refuses to run over a torn append (its marker means the TABLES may
+    disagree — compacting would bake the tear in). Returns
+    {"shingles": stats, "bands": stats}, each {rows, files_before,
+    files_after}."""
+    _refuse_torn_append(
+        spark, name_prefix, "compacting now would bake the torn state in."
     )
-    if os.path.exists(pend):
-        raise RuntimeError(
-            f"{name_prefix}: a previous append_minhash_tables did not "
-            "complete — compacting now would bake the torn state in. "
-            "Rebuild with write_minhash_tables over the full corpus."
-        )
-    stored = read_minhash_params(spark, name_prefix)
-    if buckets is None:
-        buckets = stored["buckets"] if stored else 32
-    elif stored is not None and stored.get("buckets") != buckets:
+    keys = {"shingles": "doc_id", "bands": "band_key"}
+    specs = {t: _bucket_count(spark, f"{name_prefix}_{t}") for t in keys}
+    if buckets is not None and set(specs.values()) != {buckets}:
         raise ValueError(
             f"{name_prefix}: buckets={buckets} disagrees with the value "
-            f"the tables were written under ({stored['buckets']}); a "
-            "mismatched compaction would silently re-bucket the tables "
-            "out from under every bucket-aligned join. Omit buckets to "
-            "use the stored value."
+            f"the tables were written under ({specs}); a mismatched "
+            "compaction would silently re-bucket the tables out from "
+            "under every bucket-aligned join. Omit buckets to use the "
+            "tables' own bucket spec."
         )
     return {
-        "shingles": _compact_bucketed_table(
-            spark, f"{name_prefix}_shingles", "doc_id", buckets
-        ),
-        "bands": _compact_bucketed_table(
-            spark, f"{name_prefix}_bands", "band_key", buckets
-        ),
+        t: _compact_bucketed_table(spark, f"{name_prefix}_{t}", key, specs[t])
+        for t, key in keys.items()
     }
 
 

@@ -35,6 +35,12 @@ from crawl4ai_spark.datapipe.dedup import (
     _guarded_band_candidates,
     _sig_fp_col,
 )
+from crawl4ai_spark.storage import (
+    compact_partitioned_table,
+    read_sidecar,
+    salted_partition_write,
+    write_sidecar,
+)
 
 
 def _as_double(vec: Column) -> Column:
@@ -178,8 +184,6 @@ def write_lsh_table(
     (bucket, xxhash64(id) mod files_per_bucket) bounds output at ≤
     2^planes × files_per_bucket files (slot collisions merge files, never
     multiply them — same write shape as ``write_ivf_table``)."""
-    from crawl4ai_spark.storage import salted_partition_write
-
     assigned = df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -191,32 +195,15 @@ def write_lsh_table(
     # persist the hyperplanes beside the data, same rationale as the IVF
     # quantizer: probes/appends must bucket under the planes the table was
     # assigned with, and the caller-side copy is losable state
-    _write_lsh_planes(path, planes)
-
-
-def _planes_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_lsh_planes.json")
-
-
-def _write_lsh_planes(path: str, planes: list[list[float]]) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(_planes_path(path), "w") as f:
-        json.dump([[float(x) for x in p] for p in planes], f)
+    write_sidecar(path, "lsh_planes", [[float(x) for x in p] for p in planes])
 
 
 def read_lsh_planes(path: str) -> list[list[float]]:
     """The hyperplanes a ``write_lsh_table`` table was assigned under —
     exact float64 roundtrip, so probe and append bucketing is
     bit-identical to the writer's."""
-    import json
-
-    with open(_planes_path(path)) as f:
-        return [[float(x) for x in p] for p in json.load(f)]
+    stored = read_sidecar(path, "lsh_planes")
+    return [[float(x) for x in p] for p in stored]
 
 
 def append_lsh_table(
@@ -236,8 +223,6 @@ def append_lsh_table(
     across generations. LSH needs no re-clustering caveat: the planes are
     data-independent, so growth never skews the bucketing itself (bucket
     SIZES follow the data, as always with LSH)."""
-    from crawl4ai_spark.storage import salted_partition_write
-
     planes = read_lsh_planes(path)
     assigned = df.select(
         F.col(id_col),
@@ -260,13 +245,12 @@ def compact_lsh_table(
     """Rewrite an append-grown LSH table back to the single-write file
     ceiling (≤ 2^planes × files_per_bucket files). N daily appends cost
     N × that ceiling in files; when the per-file open cost on probes
-    outweighs a one-off rewrite, compact. The persisted hyperplanes ride
-    along (sidecar carry in ``compact_partitioned_table``), so probes and
-    further appends keep working unchanged. Offline maintenance op —
-    single writer, no concurrent readers; crash-recoverable (see
-    ``storage.compact_partitioned_table``)."""
-    from crawl4ai_spark.storage import compact_partitioned_table
-
+    outweighs a one-off rewrite, compact. The swap is
+    ``storage.rewrite_table``: row count verified, crash-recoverable, and
+    the ``_lsh_planes.json`` sidecar carried, so probes and further
+    appends keep working unchanged. Offline maintenance op — single
+    writer, no concurrent readers. Returns {rows, files_before,
+    files_after}."""
     return compact_partitioned_table(
         spark, path, [bucket_col], id_col, files_per_bucket
     )
@@ -528,8 +512,6 @@ def write_ivf_table(
     files_per_cell ≈ a sane parquet file (128 MB–1 GB); the salt keys on
     the row id, so file sizes within a cell stay even regardless of
     vector content."""
-    from crawl4ai_spark.storage import salted_partition_write
-
     assigned = df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -542,36 +524,19 @@ def write_ivf_table(
     # readers skip it): probes and appends against this table must use the
     # exact centroids it was assigned under, and a caller-side copy is the
     # kind of state that gets lost between the write job and the query job
-    _write_ivf_centroids(path, centroids)
-
-
-def _centroids_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_ivf_centroids.json")
-
-
-def _write_ivf_centroids(
-    path: str, centroids: list[tuple[int, list[float]]]
-) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    with open(_centroids_path(path), "w") as f:
-        # json roundtrips float64 exactly (repr-based), so the reader's
-        # cell assignment is bit-identical to the writer's
-        json.dump([[int(c), [float(x) for x in v]] for c, v in centroids], f)
+    write_sidecar(
+        path,
+        "ivf_centroids",
+        [[int(c), [float(x) for x in v]] for c, v in centroids],
+    )
 
 
 def read_ivf_centroids(path: str) -> list[tuple[int, list[float]]]:
     """The quantizer a ``write_ivf_table`` table was assigned under —
     required by ``ann_ivf_topk(cell_col=...)`` probes and
     ``append_ivf_table`` growth."""
-    import json
-
-    with open(_centroids_path(path)) as f:
-        return [(int(c), [float(x) for x in v]) for c, v in json.load(f)]
+    stored = read_sidecar(path, "ivf_centroids")
+    return [(int(c), [float(x) for x in v]) for c, v in stored]
 
 
 def append_ivf_table(
@@ -593,8 +558,6 @@ def append_ivf_table(
     reassign the whole corpus); if the data distribution drifts far from
     the original quantizer, cells skew and the remedy is a rebuild with
     fresh centroids, same as any IVF index."""
-    from crawl4ai_spark.storage import salted_partition_write
-
     centroids = read_ivf_centroids(path)
     assigned = df.select(
         F.col(id_col),
@@ -618,12 +581,11 @@ def compact_ivf_table(
     ceiling (≤ n_cells × files_per_cell files) — the IVF twin of
     ``compact_lsh_table``. Cell assignments are already materialized in
     the partition layout, so compaction never touches the quantizer: no
-    vector is reassigned, and the persisted centroids sidecar rides along
-    for later probes/appends. Offline maintenance op — single writer, no
-    concurrent readers; crash-recoverable (see
-    ``storage.compact_partitioned_table``)."""
-    from crawl4ai_spark.storage import compact_partitioned_table
-
+    vector is reassigned. The swap is ``storage.rewrite_table``: row
+    count verified, crash-recoverable, and the ``_ivf_centroids.json``
+    sidecar carried for later probes/appends. Offline maintenance op —
+    single writer, no concurrent readers. Returns {rows, files_before,
+    files_after}."""
     return compact_partitioned_table(
         spark, path, [cell_col], id_col, files_per_cell
     )

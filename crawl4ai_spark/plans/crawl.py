@@ -32,18 +32,23 @@ One iteration =
                                 iteration number in the manifest is the
                                 resume point.
 
-Job budget per iteration: ONE count job on the cached ranked slice (it
-materializes the cache the fetch job would otherwise fill, and its exact
-row count sizes the Python stages, picks the probe broadcast and takes
-the empty-slice exit before robots and fetch run), ONE fetch+extract job,
-ONE discover+dedup job, plus the 3 concurrent snapshot writes; a capacity
-re-rank adds one job only in the over-budget case. The frontier row count
-rides in the snapshot manifest, so the rank itself needs no count: it
-picks the window regime and clamps the rank budget to
+Job budget per iteration: the code issues about 7 actions — ONE count of
+the cached ranked slice (it materializes the cache the fetch job would
+otherwise fill, and its exact row count sizes the Python stages, picks
+the probe broadcast and takes the empty-slice exit before robots and
+fetch run), ONE fetch+extract collect, ONE discover+dedup collect, the 3
+concurrent snapshot writes, and one broadcast of the per-iteration
+scalars (``iteration``, the ``visit_order`` base) as a one-row relation;
+a capacity re-rank adds one only in the over-budget case. The scheduler
+runs far more JOBS than that: a steady iteration of the
+``tests/test_crawl_job_budget.py`` crawl runs 29, and the traced
+benchmark crawl reads 30 (``crawl.jobs_per_iter``). Most of the gap is
+AQE query-stage and broadcast-build jobs, each one its own driver round
+trip. That test is the guard: its ceiling is the measured 29. The
+frontier row count rides in the snapshot manifest, so the rank itself
+needs no count: it picks the window regime and clamps the rank budget to
 min(frontier, budget), and the distributed ``range_rank`` (several jobs)
-runs only when that bound exceeds ``ranking.LARGE_K_ROWS``. The
-per-iteration scalars (``iteration``, the ``visit_order`` base) join the
-results as a broadcast one-row relation, which adds one small job.
+runs only when that bound exceeds ``ranking.LARGE_K_ROWS``.
 
 Compile budget per iteration: ZERO new generated classes once the
 iteration's plan shapes repeat. Spark inlines int literals into the
@@ -206,10 +211,10 @@ class CrawlRun:
         # passes through the exact anti-join); it can never be missing a
         # committed key (the merge precedes the commit point)
         self._seen_filter = None
-        # every frame run_iteration persists, so the failure path can
-        # release them too — without this a raise mid-iteration (fetch
-        # error, commit race, fail-loud fan-out guard) strands up to six
-        # cached frames per attempt in executor memory, and a driver that
+        # every frame run_iteration persists, released by its finally on
+        # every exit — without this a raise mid-iteration (fetch error,
+        # commit race, fail-loud fan-out guard) strands up to six cached
+        # frames per attempt in executor memory, and a driver that
         # retries in-process accumulates them without bound
         self._iter_caches: list = []
 
@@ -266,10 +271,8 @@ class CrawlRun:
             # successful crawls"); robots-403 and 404 rows are result rows
             # but never consume max_pages
             "pages_crawled": meta.get("pages_crawled", 0),
-            # n_visited counts ALL result rows (the dense visit_order base;
-            # pre-split snapshots carried the combined counter under
-            # pages_crawled, which is the correct fallback for both)
-            "n_visited": meta.get("n_visited", meta.get("pages_crawled", 0)),
+            # n_visited counts ALL result rows (the dense visit_order base)
+            "n_visited": meta.get("n_visited", 0),
             # row counters carried in snapshot meta so the driver loop never
             # runs count() jobs just to decide control flow
             "n_frontier": meta.get("n_frontier"),
@@ -406,14 +409,14 @@ class CrawlRun:
         """Run one frontier iteration; returns counters (empty frontier →
         {'done': True}).
 
-        Wraps the body so EVERY exit — the done/early returns, the
-        fail-loud guards, and any Spark job failure — releases the
-        iteration's persisted frames and the bloom bitset broadcast. The
-        success path's targeted unpersists stay (they free memory as soon
-        as each frame is consumed, not at iteration end); the finally is
-        the backstop that makes an in-process retry after a failure start
-        from a clean executor-memory slate. Nothing committed is touched:
-        crash reconciliation handles the snapshot side."""
+        The one place that releases the iteration's persisted frames and
+        the bloom bitset broadcast: EVERY exit — the commit, the done/early
+        returns, the fail-loud guards, and any Spark job failure — passes
+        through the finally, so long crawls hold O(1) caches and
+        broadcasts and an in-process retry after a failure starts from a
+        clean executor-memory slate. Only frames consumed mid-iteration
+        (the flagged candidates) are released earlier. Nothing committed
+        is touched: crash reconciliation handles the snapshot side."""
         try:
             return self._run_iteration_body()
         finally:
@@ -443,11 +446,9 @@ class CrawlRun:
         if st["n_frontier"] == 0:
             return {"done": True, "reason": "frontier_empty"}
         frontier = self.t_frontier.read(self.spark)
-        if frontier is None or (st["n_frontier"] is None and frontier.isEmpty()):
+        if frontier is None:
             return {"done": True, "reason": "frontier_empty"}
         n_frontier = st["n_frontier"]
-        if n_frontier is None:  # pre-counter snapshot (resume of an old run)
-            n_frontier = frontier.count()
         t0 = time.time()
         # the profile: wall-second laps ``fetch_extract``,
         # ``discover_dedup`` and ``commit``, plus ``codegen_compiles``,
@@ -542,7 +543,6 @@ class CrawlRun:
             # defensive: a ≥1-per-host budget on a non-empty frontier always
             # selects rows, so this only fires on a degenerate config;
             # nothing was committed, so the snapshot state is untouched
-            selected.unpersist()
             return {"done": True, "reason": "budget_zero"}
         # partitions for the Python-UDF stages (extract, then URL
         # normalization over the results cache): ~16 pages per task, capped
@@ -981,12 +981,6 @@ class CrawlRun:
             self.t_host_state.expire_snapshots(keep_last=cfg.snapshot_retention)
         t = _lap("commit", t)
         prof["codegen_compiles"] = _codegen_compiles(self.spark) - compiles0
-
-        for df in (selected, gated, results, candidates, new_urls):
-            df.unpersist()
-        # every job that read the bloom probe has committed; release the
-        # bitset broadcast so long crawls hold O(1) broadcasts, not O(iters)
-        self._destroy_bloom_bc()
         return {
             "done": False,
             "iteration": iteration,

@@ -1,9 +1,20 @@
-"""Shared table-write shapes.
+"""Shared table-write shapes and the one table-rewrite protocol.
 
-One home for the salted ``partitionBy`` write used by the IVF/LSH ANN
-tables and the partitioned KB export, so a fix to the salting or write
-semantics lands everywhere at once — plus the compaction maintenance op
-that rewrites N append generations back to the single-write file ceiling.
+- ``salted_partition_write``: the salted ``partitionBy`` write used by
+  the IVF/LSH ANN tables and the partitioned KB export, so a fix to the
+  salting or write semantics lands everywhere at once.
+- ``rewrite_table``: the one crash-safe protocol that rewrites a table
+  directory in place (copy to a sibling dir, verify the row count, carry
+  the sidecars, marker, rename swap, recovery and orphan sweep). Both
+  compactors call it: ``compact_partitioned_table`` for the partitioned
+  ANN tables and ``datapipe.dedup.compact_minhash_tables`` for the
+  bucketed MinHash tables. Only this module writes or resolves a
+  ``.compact-pending`` marker.
+- Parameter sidecars: one format for the small JSON files a table keeps
+  beside its data (``_ivf_centroids.json``, ``_lsh_planes.json``,
+  ``_minhash_params.json``). A sidecar is ``<table dir>/_<name>.json``;
+  the underscore makes parquet readers skip it, and ``rewrite_table``
+  carries every sidecar into the rewritten table.
 """
 
 from __future__ import annotations
@@ -12,6 +23,7 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -52,6 +64,30 @@ def salted_partition_write(
     getattr(writer, fmt)(path)
 
 
+def _sidecar_path(table_dir: str, name: str) -> str:
+    return os.path.join(table_dir, f"_{name}.json")
+
+
+def _is_sidecar(entry: str) -> bool:
+    return entry.startswith("_") and entry.endswith(".json")
+
+
+def read_sidecar(table_dir: str, name: str):
+    """The JSON value of the sidecar ``name`` of the table at
+    ``table_dir``; raises ``FileNotFoundError`` when the table has none."""
+    with open(_sidecar_path(table_dir, name)) as f:
+        return json.load(f)
+
+
+def write_sidecar(table_dir: str, name: str, value) -> None:
+    """Store ``value`` as the sidecar ``name`` of the table at
+    ``table_dir``. JSON round-trips float64 exactly (repr-based), so
+    parameters read back bit-identical to what the writer used."""
+    os.makedirs(table_dir, exist_ok=True)
+    with open(_sidecar_path(table_dir, name), "w") as f:
+        json.dump(value, f)
+
+
 def _marker_path(path: str) -> str:
     return path.rstrip("/") + ".compact-pending"
 
@@ -64,10 +100,10 @@ def _count_data_files(path: str) -> int:
 
 
 # a compaction attempt's tmp/old dirs younger than this are never swept:
-# the whole protocol is single-writer (see compact_partitioned_table), but
-# if an operator DOES overlap two compactions of one table, the age gate
-# keeps the second run from rmtree'ing the first one's live swap dirs —
-# the stranded dirs of a genuine crash are simply collected by the next
+# the whole protocol is single-writer (see rewrite_table), but if an
+# operator DOES overlap two compactions of one table, the age gate keeps
+# the second run from rmtree'ing the first one's live swap dirs — the
+# stranded dirs of a genuine crash are simply collected by the next
 # compaction that runs after the window instead
 ORPHAN_SWEEP_MIN_AGE_S = 3600
 
@@ -118,8 +154,16 @@ def _recover_compaction(path: str, marker: str) -> None:
     - table at ``path`` AND old copy present → crashed after the promote,
       before cleanup: delete the old copy.
     """
-    with open(marker) as f:
-        st = json.load(f)
+    try:
+        with open(marker) as f:
+            st = json.load(f)
+    except json.JSONDecodeError:
+        # a plain-text marker of the catalog-swap compactor this protocol
+        # replaced: its copy was a catalog table, lost with the process
+        # that wrote it (the catalog is in-memory), so only the marker is
+        # left to resolve
+        os.remove(marker)
+        return
     tmp, old = st["tmp"], st["old"]
     if os.path.exists(path):
         if os.path.exists(old):
@@ -141,45 +185,36 @@ def _recover_compaction(path: str, marker: str) -> None:
     os.remove(marker)
 
 
-def compact_partitioned_table(
-    spark,
-    path: str,
-    partition_cols: list[str],
-    salt_key: Column | str,
-    files_per_partition: int,
-    fmt: str = "parquet",
-    verify_count: bool = True,
+def rewrite_table(
+    spark, path: str, write_copy: Callable[[str], None]
 ) -> dict:
-    """Rewrite a partitioned table back to the single-write file ceiling —
-    the maintenance op ``salted_partition_write(mode="append")`` points at:
-    N append generations accumulate N × files_per_partition files per
-    value, and at some point the per-file open cost on every probe
-    outweighs the one-off rewrite. One full scan + the same salted
-    exchange as a fresh write; sidecar metadata files at the table root
-    (``_ivf_centroids.json``, ``_lsh_planes.json`` — anything
-    underscore-prefixed, which parquet readers already skip) are carried
-    over, so probes and appends keep working against the compacted table.
+    """Rewrite the parquet table directory at ``path`` in place, crash-
+    safely. ``write_copy(tmp)`` writes the rewritten copy of the table
+    to the directory ``tmp``; the protocol does everything else:
 
-    Crash safety (single-writer, no concurrent readers — this is an
-    offline maintenance op, exactly like Iceberg's rewrite_data_files
-    wants snapshot isolation): the compacted copy is fully written to a
-    sibling tmp dir FIRST, then a marker records the swap, then
-    rename(path→old), rename(tmp→path), cleanup, marker removed. A crash
-    inside the marker window leaves a marker a later call auto-recovers
-    from (see ``_recover_compaction``); a crash BEFORE the marker (mid
-    copy or failed verify) leaves only an unreferenced uuid-named tmp
-    dir, which a later call sweeps once it is older than
-    ``ORPHAN_SWEEP_MIN_AGE_S`` (``_sweep_orphan_compaction_dirs`` — the
-    age gate keeps an operator-error overlapping run from deleting a
-    live swap's dirs) instead of leaking one table-sized copy per
-    crashed attempt. Both
-    generations are on disk until the moment the promote rename lands,
-    so no window loses rows.
+    1. recover a leftover marker (``_recover_compaction``), then sweep
+       orphaned copies of earlier crashed attempts
+       (``_sweep_orphan_compaction_dirs``);
+    2. write the copy to the sibling ``<path>.compacting-<hex>``;
+    3. verify that the copy holds the table's row count — a silent row
+       loss here would corrupt every later probe, so the one extra count
+       job is the honest price on an explicit maintenance call;
+    4. carry the table's sidecars into the copy;
+    5. write the marker, rename(path→``<path>.precompact-<hex>``),
+       rename(tmp→path), remove the old copy and the marker.
 
-    ``verify_count=True`` pays one extra count job to assert the rewrite
-    preserved the row count before the swap — the honest price on an
-    explicit maintenance call (a silent row loss here corrupts every
-    later probe). Returns {rows, files_before, files_after}."""
+    Single-writer, no concurrent readers — an offline maintenance op,
+    exactly like Iceberg's rewrite_data_files wants snapshot isolation.
+    The marker is written only once the copy is a complete drop-in
+    replacement, so a crash inside the marker window leaves a state the
+    next call recovers from, and a crash before it leaves only a
+    uuid-named copy the sweep collects once it is older than
+    ``ORPHAN_SWEEP_MIN_AGE_S``. Both generations are on disk until the
+    promote rename lands, so no window loses rows. The swap moves
+    directories only: a catalog table whose location is ``path`` keeps
+    its entry, and the caller refreshes it.
+
+    Returns {rows, files_before, files_after}."""
     marker = _marker_path(path)
     if os.path.exists(marker):
         _recover_compaction(path, marker)
@@ -188,28 +223,20 @@ def compact_partitioned_table(
     tmp = path.rstrip("/") + f".compacting-{hexid}"
     old = path.rstrip("/") + f".precompact-{hexid}"
     files_before = _count_data_files(path)
-    df = spark.read.format(fmt).load(path)
-    n_before = df.count() if verify_count else -1
-    key = F.col(salt_key) if isinstance(salt_key, str) else salt_key
-    salted_partition_write(
-        df, tmp, partition_cols, key, files_per_partition, fmt=fmt
-    )
-    if verify_count:
-        n_after = spark.read.format(fmt).load(tmp).count()
-        if n_after != n_before:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"compaction of {path} would change the row count "
-                f"({n_before} → {n_after}); original left untouched"
-            )
+    n_before = spark.read.parquet(path).count()
+    write_copy(tmp)
+    n_after = spark.read.parquet(tmp).count()
+    if n_after != n_before:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise RuntimeError(
+            f"compaction of {path} would change the row count "
+            f"({n_before} → {n_after}); original left untouched"
+        )
     # carry sidecars BEFORE the marker: once the marker exists, the tmp
     # dir must be a complete drop-in replacement
-    for name in os.listdir(path):
-        src = os.path.join(path, name)
-        if name.startswith("_") and os.path.isfile(src):
-            dst = os.path.join(tmp, name)
-            if not os.path.exists(dst):
-                shutil.copy2(src, dst)
+    for entry in os.listdir(path):
+        if _is_sidecar(entry):
+            shutil.copy2(os.path.join(path, entry), os.path.join(tmp, entry))
     with open(marker, "w") as f:
         json.dump({"tmp": tmp, "old": old}, f)
     os.rename(path, old)
@@ -222,3 +249,31 @@ def compact_partitioned_table(
         "files_before": files_before,
         "files_after": _count_data_files(path),
     }
+
+
+def compact_partitioned_table(
+    spark,
+    path: str,
+    partition_cols: list[str],
+    salt_key: Column | str,
+    files_per_partition: int,
+) -> dict:
+    """Rewrite a partitioned parquet table back to the single-write file
+    ceiling — the maintenance op ``salted_partition_write(mode="append")``
+    points at: N append generations accumulate N × files_per_partition
+    files per value, and at some point the per-file open cost on every
+    probe outweighs the one-off rewrite. One full scan + the same salted
+    exchange as a fresh write, swapped in by ``rewrite_table`` (row count
+    verified, sidecars such as ``_ivf_centroids.json`` and
+    ``_lsh_planes.json`` carried, crash-recoverable), so probes and
+    appends keep working against the compacted table. Returns
+    {rows, files_before, files_after}."""
+    key = F.col(salt_key) if isinstance(salt_key, str) else salt_key
+    return rewrite_table(
+        spark,
+        path,
+        lambda tmp: salted_partition_write(
+            spark.read.parquet(path), tmp, partition_cols, key,
+            files_per_partition,
+        ),
+    )

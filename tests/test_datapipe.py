@@ -923,8 +923,8 @@ def test_compact_minhash_tables_folds_generations(spark, sf_dir):
     tables back to one generation from their OWN rows (no signature
     recompute), after which the pairs read is unchanged, the bucketed
     join stays exchange-free, and a further increment/append still
-    works. Also: refuses over a torn append, and recovers its own
-    crashed swap."""
+    works. Also: the swap leaves nothing behind, and compaction refuses
+    over a torn append."""
     import os
 
     import pytest as _pytest
@@ -957,10 +957,21 @@ def test_compact_minhash_tables_folds_generations(spark, sf_dir):
         for r in minhash_pairs_from_tables(spark, "t_cmp").collect()
     }
     assert len(before) > 0
+
+    def siblings(t):
+        # the warehouse outlives the session, so an aborted earlier run
+        # may have left entries here; compare against what was there
+        parent, base = os.path.split(_table_location(spark, f"t_cmp_{t}"))
+        return {e for e in os.listdir(parent) if e.startswith(base + ".")}
+
+    left = {t: siblings(t) for t in ("shingles", "bands")}
     stats = compact_minhash_tables(spark, "t_cmp", buckets=2)
     for t in ("shingles", "bands"):
         assert stats[t]["files_after"] <= 2  # one generation per bucket
         assert stats[t]["files_after"] < stats[t]["files_before"]
+        # the swap leaves no staging catalog entry, marker or sibling copy
+        assert not spark.catalog.tableExists(f"t_cmp_{t}__compacting")
+        assert siblings(t) <= left[t]
     out = minhash_pairs_from_tables(spark, "t_cmp")
     assert {tuple(r) for r in out.collect()} == before
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -982,17 +993,139 @@ def test_compact_minhash_tables_folds_generations(spark, sf_dir):
     with _pytest.raises(RuntimeError, match="did not complete"):
         compact_minhash_tables(spark, "t_cmp", buckets=2)
     os.remove(pend)
-    # crashed-swap recovery: original dropped, compacted copy cataloged →
-    # the next call promotes the copy and proceeds
-    n = spark.table("t_cmp_bands").count()
-    spark.sql("CREATE TABLE t_cmp_bands__compacting AS SELECT * FROM t_cmp_bands")
-    loc = _table_location(spark, "t_cmp_bands")
-    with open(loc.rstrip("/") + ".compact-pending", "w") as f:
-        f.write("t_cmp_bands__compacting")
-    spark.sql("DROP TABLE t_cmp_bands")
-    stats = compact_minhash_tables(spark, "t_cmp", buckets=2)
-    assert spark.table("t_cmp_bands").count() == n
-    assert stats["bands"]["rows"] == n
+
+
+def test_minhash_compaction_crash_recovery(spark, sf_dir):
+    """The bucketed MinHash tables compact through the same marker swap
+    as the partitioned tables, so every crash window recovers from the
+    files alone. Window B is the state a process crash leaves between
+    the two renames: the table directory is gone and the complete
+    compacted copy sits on disk, registered nowhere in the catalog; on
+    the shingle table it also takes the params sidecar away, and the
+    rewrite still keeps the table's bucket count. A stale copy of a
+    crashed attempt is swept. After each recovery the pairs are
+    unchanged and the bucketed join stays exchange-free."""
+    import json
+    import os
+    import shutil
+    import time
+    import uuid
+
+    from crawl4ai_spark.datapipe.dedup import (
+        _table_location,
+        append_minhash_tables,
+        compact_minhash_tables,
+        minhash_pairs_from_tables,
+        write_minhash_tables,
+    )
+    from crawl4ai_spark.storage import ORPHAN_SWEEP_MIN_AGE_S, _marker_path
+
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .filter("doc_id < 40")
+    )
+    write_minhash_tables(docs, "doc_id", "text", "t_crash", hash_fn=F.xxhash64,
+                         buckets=2)
+    append_minhash_tables(
+        spark,
+        docs.select((F.col("doc_id") + 1_000_000).alias("doc_id"),
+                    F.concat(F.lit(" "), "text").alias("text")),
+        "t_crash", hash_fn=F.xxhash64, buckets=2,
+    )
+    before = {tuple(r) for r in minhash_pairs_from_tables(spark, "t_crash").collect()}
+    assert before
+    loc = _table_location(spark, "t_crash_bands")
+    marker = _marker_path(loc)
+    # the warehouse outlives the session: name this run's copies apart
+    # from any an aborted earlier run left beside the table
+    run = uuid.uuid4().hex[:8]
+
+    def copy_renamed(src, dst):
+        # a copy whose data files carry other names, as a real rewrite's
+        # do; the trailing _<bucket id> Spark reads the bucket from stays
+        shutil.copytree(src, dst)
+        for f in os.listdir(dst):
+            if not f.startswith(("_", ".")):
+                os.rename(os.path.join(dst, f), os.path.join(dst, "r" + f))
+
+    def check():
+        out = minhash_pairs_from_tables(spark, "t_crash")
+        assert {tuple(r) for r in out.collect()} == before
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "hashpartitioning(band_key" not in plan
+        assert not os.path.exists(marker)
+
+    # window A: copy and marker written, swap not started → the copy is
+    # discarded and the call compacts afresh
+    tmp = loc + f".compacting-a{run}"
+    copy_renamed(loc, tmp)
+    with open(marker, "w") as f:
+        json.dump({"tmp": tmp, "old": loc + f".precompact-a{run}"}, f)
+    compact_minhash_tables(spark, "t_crash")
+    assert not os.path.exists(tmp)
+    check()
+
+    # window B: table dir renamed away, the copy complete but registered
+    # nowhere → recovery promotes the copy
+    tmp2, old2 = loc + f".compacting-b{run}", loc + f".precompact-b{run}"
+    os.rename(loc, old2)
+    copy_renamed(old2, tmp2)
+    with open(marker, "w") as f:
+        json.dump({"tmp": tmp2, "old": old2}, f)
+    assert not spark.catalog.tableExists("t_crash_bands__compacting")
+    stats = compact_minhash_tables(spark, "t_crash")
+    assert not os.path.exists(old2) and not os.path.exists(tmp2)
+    assert stats["bands"]["rows"] == spark.table("t_crash_bands").count()
+    check()
+
+    # window B on the shingle table, whose directory holds the params
+    # sidecar: the recovered copy keeps the catalog entry's 2 buckets
+    # although the call passes no bucket count
+    sh_loc = _table_location(spark, "t_crash_shingles")
+    sh_marker = _marker_path(sh_loc)
+    tmp4, old4 = sh_loc + f".compacting-b{run}", sh_loc + f".precompact-b{run}"
+    os.rename(sh_loc, old4)
+    copy_renamed(old4, tmp4)
+    with open(sh_marker, "w") as f:
+        json.dump({"tmp": tmp4, "old": old4}, f)
+    stats = compact_minhash_tables(spark, "t_crash")
+    assert not os.path.exists(old4) and not os.path.exists(tmp4)
+    assert not os.path.exists(sh_marker)
+    assert stats["shingles"]["files_after"] <= 2
+    check()
+
+    # a plain-text marker of the catalog-swap compactor this protocol
+    # replaced names a catalog table that is gone: it is removed
+    with open(marker, "w") as f:
+        f.write("t_crash_bands__compacting")
+    compact_minhash_tables(spark, "t_crash")
+    check()
+
+    # window C: promote landed, old copy not yet removed → cleanup
+    old3 = loc + f".precompact-c{run}"
+    shutil.copytree(loc, old3)
+    with open(marker, "w") as f:
+        json.dump({"tmp": loc + f".compacting-c{run}", "old": old3}, f)
+    compact_minhash_tables(spark, "t_crash")
+    assert not os.path.exists(old3)
+    check()
+
+    # a crashed attempt's copy older than the sweep gate is removed; a
+    # fresh one (a live swap) is not
+    orphan = sh_loc + f".compacting-orphan{run}"
+    live = sh_loc + f".compacting-live{run}"
+    shutil.copytree(sh_loc, orphan)
+    shutil.copytree(sh_loc, live)
+    aged = time.time() - ORPHAN_SWEEP_MIN_AGE_S - 60
+    os.utime(orphan, (aged, aged))
+    compact_minhash_tables(spark, "t_crash")
+    assert not os.path.exists(orphan) and os.path.exists(live)
+    shutil.rmtree(live)
+    check()
+    # an explicit bucket count must match the tables' own spec
+    with pytest.raises(ValueError, match="buckets=8"):
+        compact_minhash_tables(spark, "t_crash", buckets=8)
 
 
 def test_ivf_centroids_skips_null_and_wrong_dim(spark):
