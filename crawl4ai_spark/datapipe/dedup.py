@@ -467,6 +467,42 @@ def _write_minhash_params(
     )
 
 
+# the bucket (and sort) column of each MinHash table
+_MINHASH_KEYS = {"shingles": "doc_id", "bands": "band_key"}
+
+
+def _minhash_table(spark, name_prefix: str, table: str) -> str:
+    """The catalog name of MinHash table ``table`` ("shingles" or
+    "bands"), registered in this session's catalog first when only its
+    files are there. The session catalog is in-memory while the
+    warehouse directory persists, so a process that did not write the
+    tables finds their files but no entry. The entry is recreated over
+    the files with the bucket spec ``write_minhash_tables`` used (the
+    count from the params sidecar): a plain parquet read would lose the
+    bucketing, and every bucket-aligned join would shuffle."""
+    import os
+
+    name = f"{name_prefix}_{table}"
+    loc = _table_location(spark, name)
+    if spark.catalog.tableExists(name) or not os.path.isdir(loc):
+        return name
+    params = read_minhash_params(spark, name_prefix)
+    if params is None:
+        raise ValueError(
+            f"{name}: its files are at {loc} but no catalog entry names "
+            "the table, and there is no params sidecar to take its bucket "
+            "count from. Rebuild it with write_minhash_tables."
+        )
+    key = _MINHASH_KEYS[table]
+    ddl = spark.read.parquet(loc).schema.toDDL()
+    spark.sql(
+        f"CREATE TABLE {name} ({ddl}) USING parquet CLUSTERED BY ({key}) "
+        f"SORTED BY ({key}) INTO {params['buckets']} BUCKETS "
+        f"LOCATION '{loc}'"
+    )
+    return name
+
+
 def _check_minhash_params(
     spark,
     name_prefix: str,
@@ -702,7 +738,7 @@ def minhash_pairs_increment(
     # verify joins, batch-side restriction) — cache both batch frames
     sh_new = sh_new.cache()
     banded_new = banded_new.cache()
-    corpus_bands = spark.table(f"{name_prefix}_bands")
+    corpus_bands = spark.table(_minhash_table(spark, name_prefix, "bands"))
     if "sig_fp" not in corpus_bands.columns:  # pre-guard table layout
         corpus_bands = corpus_bands.withColumn("sig_fp", F.col("doc_id"))
     touched = corpus_bands.select("doc_id", "sig_fp", "band_key").join(
@@ -745,7 +781,7 @@ def minhash_pairs_increment(
     # table (bucketed by doc_id, co-located join) or the cached batch
     # frame (small ⇒ broadcast) — without unioning them, which would
     # discard the corpus side's bucket metadata and force an exchange
-    corpus_sh = spark.table(f"{name_prefix}_shingles")
+    corpus_sh = spark.table(_minhash_table(spark, name_prefix, "shingles"))
     verified = cand
     for side in ("id_a", "id_b"):
         verified = (
@@ -840,6 +876,7 @@ def append_minhash_tables(
         "the shingle/band tables may be torn (docs with shingles but no "
         "bands never surface as candidates; retrying would double-append).",
     )
+    tables = {t: _minhash_table(spark, name_prefix, t) for t in _MINHASH_KEYS}
     sc = spark.sparkContext
     nparts = max(new_docs.rdd.getNumPartitions(), sc.defaultParallelism)
     sh, banded = _folded_bands(
@@ -858,7 +895,7 @@ def append_minhash_tables(
             .format("parquet")
             .bucketBy(buckets, "doc_id")
             .sortBy("doc_id")
-            .saveAsTable(f"{name_prefix}_shingles")
+            .saveAsTable(tables["shingles"])
         )
         (
             banded.repartition(buckets, F.col("band_key"))
@@ -866,7 +903,7 @@ def append_minhash_tables(
             .format("parquet")
             .bucketBy(buckets, "band_key")
             .sortBy("band_key")
-            .saveAsTable(f"{name_prefix}_bands")
+            .saveAsTable(tables["bands"])
         )
         os.remove(marker)
     finally:
@@ -954,8 +991,10 @@ def compact_minhash_tables(
     _refuse_torn_append(
         spark, name_prefix, "compacting now would bake the torn state in."
     )
-    keys = {"shingles": "doc_id", "bands": "band_key"}
-    specs = {t: _bucket_count(spark, f"{name_prefix}_{t}") for t in keys}
+    specs = {
+        t: _bucket_count(spark, _minhash_table(spark, name_prefix, t))
+        for t in _MINHASH_KEYS
+    }
     if buckets is not None and set(specs.values()) != {buckets}:
         raise ValueError(
             f"{name_prefix}: buckets={buckets} disagrees with the value "
@@ -966,7 +1005,7 @@ def compact_minhash_tables(
         )
     return {
         t: _compact_bucketed_table(spark, f"{name_prefix}_{t}", key, specs[t])
-        for t, key in keys.items()
+        for t, key in _MINHASH_KEYS.items()
     }
 
 
@@ -990,11 +1029,11 @@ def minhash_pairs_from_tables(
     bucket rep), instead of crashing the amortized-table workflow; rewrite
     the tables with the current ``write_minhash_tables`` to get the
     identical-signature layer."""
-    banded = spark.table(f"{name_prefix}_bands")
+    banded = spark.table(_minhash_table(spark, name_prefix, "bands"))
     if "sig_fp" not in banded.columns:
         banded = banded.withColumn("sig_fp", F.col("doc_id"))
     cand = _guarded_band_candidates(banded, ["band_key"], hot_bucket_cap)
-    sh = spark.table(f"{name_prefix}_shingles")
+    sh = spark.table(_minhash_table(spark, name_prefix, "shingles"))
     return (
         cand.join(
             sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")),

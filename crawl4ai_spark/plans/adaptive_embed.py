@@ -157,16 +157,7 @@ class EmbeddingAdaptiveCrawl:
     def _admit_new_results(self) -> None:
         """Embed the results appended since the last KB commit, admit the
         non-duplicates, commit."""
-        # durable_only: the cursor must never land on a provisional
-        # snapshot — a crash rollback pops it and the re-executed
-        # iteration reuses its id, so a stale cursor would silently
-        # alias onto the re-executed snapshot and its results would
-        # never reach the KB. Called after
-        # run_iteration's frontier commit, so the durable tip IS the
-        # current tip on the clean path — this costs nothing.
-        cur, new = self.run.t_results.read_since(
-            self.spark, self._results_cursor, durable_only=True
-        )
+        cur, new = self.run.t_results.read_since(self.spark, self._results_cursor)
         if new is None:
             return
         batch = embed_results_batch(new, self.config.embedding_dim)

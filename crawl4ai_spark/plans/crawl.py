@@ -22,15 +22,18 @@ One iteration =
                                 exact anti-join vs seen (seen = ENQUEUED
                                 set, as in the reference: visited.add
                                 happens at enqueue, not fetch)
-  7. commit                   — results/seen appends + frontier replace
-                                submitted CONCURRENTLY (separate tables,
-                                separate manifests — wall time ≈ the
-                                slowest write, not the sum); the lineage
-                                rows were already collected alongside the
-                                counters, so they commit as a driver-side
-                                pyarrow write with NO Spark job. The
-                                iteration number in the manifest is the
-                                resume point.
+  7. commit                   — results/seen/frontier (+ host_state)
+                                writes staged CONCURRENTLY into invisible
+                                dirs (wall time ≈ the slowest write, not
+                                the sum); the lineage rows were already
+                                collected alongside the counters, so they
+                                stage as a driver-side pyarrow write with
+                                NO Spark job. The frontier replace commits
+                                FIRST: its meta holds the iteration number
+                                (the resume point) and the apply record,
+                                every other table's staged dir. Those
+                                tables commit after it, and a resumed run
+                                rolls forward any that a crash skipped.
 
 Job budget per iteration: the code issues about 7 actions — ONE count of
 the cached ranked slice (it materializes the cache the fetch job would
@@ -149,9 +152,9 @@ class CrawlConfig:
     # snapshots retained on the REPLACE-per-iteration tables (frontier,
     # host_state): each iteration leaves a full dead copy behind, so a
     # 10k-iteration crawl would hold 10k frontier copies on disk without
-    # expiry. Resume reconciliation only ever inspects the trailing
-    # record per table, so any value >= 2 is crash-safe; the default
-    # keeps a few extra for time-travel debugging. None = retain all.
+    # expiry. Resume only reads the current record per table, so any
+    # value >= 1 is crash-safe; the default keeps a few extra for
+    # time-travel debugging. None = retain all.
     snapshot_retention: int | None = 8
 
 
@@ -196,6 +199,13 @@ class CrawlRun:
         self.t_results = SnapshotTable(os.path.join(workdir, "results"))
         self.t_lineage = SnapshotTable(os.path.join(workdir, "lineage"))
         self.t_host_state = SnapshotTable(os.path.join(workdir, "host_state"))
+        # the tables the frontier's apply record names, by record key
+        self._tables = {
+            "results": self.t_results,
+            "seen": self.t_seen,
+            "lineage": self.t_lineage,
+            "host_state": self.t_host_state,
+        }
         self.scorer = self.config.scorer or _zero_scorer
         # the current iteration's bloom-bitset broadcast: created in step 6,
         # destroyed at the end of the SAME iteration (all jobs that read it
@@ -206,7 +216,7 @@ class CrawlRun:
         # iterations: built full once (first threshold crossing, resume or
         # after an expiry), then each iteration merges in only its own new
         # keys at the same geometry. May hold EXTRA keys
-        # relative to the committed seen table after a rolled-back
+        # relative to the committed seen table after a failed
         # iteration — harmless by construction (a filter positive still
         # passes through the exact anti-join); it can never be missing a
         # committed key (the merge precedes the commit point)
@@ -232,26 +242,72 @@ class CrawlRun:
                 pass  # session torn down mid-failure: nothing to release
         self._iter_caches.clear()
 
-    def _reconcile(self, next_iteration: int) -> None:
-        """Resume-time crash reconciliation. The commit protocol orders
-        every iteration-tagged manifest commit (results, lineage, seen,
-        host_state — all ``meta={'iteration': N}``) BEFORE the frontier
-        replace that advances to N+1, so after a crash the frontier's
-        iteration K is the WAL tip: any trailing snapshot on the other
-        tables tagged >= K belongs to a crashed, uncommitted iteration.
-        Roll those back before re-running iteration K — its deterministic
-        re-execution would otherwise double-append identical results and
-        lineage rows (duplicate visit_order values, doubled counters)."""
-        for t in (self.t_results, self.t_lineage, self.t_seen, self.t_host_state):
-            t.rollback_trailing(
-                lambda m: m.get("iteration", -(10**9)) >= next_iteration
+    def _commit(self, frontier, meta: dict, writes: dict) -> None:
+        """The multi-table commit of the bootstrap and of every iteration,
+        forward-only. ``writes`` maps an apply-record key to ``(data,
+        mode)``. Every write is staged concurrently into an invisible
+        ``.staging-*`` dir (separate tables, separate manifests: wall
+        time ≈ the slowest write, not the sum). Then the frontier replace
+        commits FIRST as the commit point; its meta carries the apply
+        record, ``{key: [staged dir, mode]}``. Then each staged dir
+        commits to its table, tagged with the iteration it belongs to.
+
+        A crash before the frontier commit leaves only ``.staging-*``
+        dirs, which the next commit's orphan sweep removes, and the
+        re-run stages afresh. A crash after it leaves the record, which
+        ``_roll_forward`` completes. No table is ever ahead of the
+        frontier, so every commit is final. (On a cluster: Iceberg
+        stage-commit per table with the frontier commit as the WAL tip,
+        same protocol.)"""
+        with ThreadPoolExecutor(max_workers=1 + len(writes)) as pool:
+            frontier_fut = pool.submit(self.t_frontier.stage, frontier)
+            futs = {
+                key: pool.submit(self._tables[key].stage, data)
+                for key, (data, _) in writes.items()
+            }
+            meta = {
+                **meta,
+                "apply": {
+                    key: [futs[key].result(), mode]
+                    for key, (_, mode) in writes.items()
+                },
+            }
+            frontier_dir = frontier_fut.result()
+        self.t_frontier.commit_staged(frontier_dir, meta, mode="replace")
+        self._apply(meta)
+
+    def _apply(self, meta: dict) -> None:
+        """Commit each entry of a frontier snapshot's apply record.
+        ``commit_staged`` skips a dir its table already references, so
+        this is both the forward path and the resume roll-forward."""
+        for key, (staged, mode) in meta.get("apply", {}).items():
+            self._tables[key].commit_staged(
+                staged, {"iteration": meta["iteration"] - 1}, mode=mode
             )
-            # everything that survived reconciliation is consistent with
-            # the frontier WAL tip, hence durable: advance the stream
-            # barrier so a crash AFTER the frontier commit but BEFORE the
-            # previous iteration's mark_durable calls cannot strand its
-            # rows undelivered (no-op when the barrier is already current)
-            t.mark_durable()
+
+    def _roll_forward(self) -> None:
+        """Resume: complete the current frontier snapshot's apply record.
+        Runs at every ``run_iteration`` entry and before ``expire_seen``
+        — driver-side manifest reads only, no Spark job, and nothing to
+        commit on the clean path.
+
+        Fails loud on a workdir left mid-commit by the older undo-style
+        protocol, which committed the other tables BEFORE the frontier:
+        a snapshot tagged at or above the frontier's iteration holds
+        rows the re-run iteration would append a second time."""
+        meta = self.t_frontier.snapshot_meta() or {}
+        iteration = meta.get("iteration", -1)
+        for key, t in self._tables.items():
+            tag = (t.snapshot_meta() or {}).get("iteration", -1)
+            if tag >= iteration:
+                raise RuntimeError(
+                    f"the {key} table at {t.root} holds a snapshot of "
+                    f"iteration {tag}, but the frontier is at iteration "
+                    f"{iteration}: the workdir was left mid-commit by a "
+                    "commit protocol that committed this table before the "
+                    "frontier; drop that snapshot before resuming"
+                )
+        self._apply(meta)
 
     def _destroy_bloom_bc(self) -> None:
         if self._bloom_bc is not None:
@@ -319,24 +375,13 @@ class CrawlRun:
             # them into ONE task that runs all those Python partition
             # computations SERIALLY (~8 s for 32 slices on a warm session);
             # parallelize(data, 1) does the same work in a single pass
-            local = self.spark.createDataFrame(
+            keyed = self.spark.createDataFrame(
                 self.spark.sparkContext.parallelize(
                     [(u, n) for n, u in dedup.items()], 1
                 ),
                 "url string, url_norm string",
             )
-            seeds = local.select(
-                "url",
-                "url_norm",
-                host_col(F.col("url")).alias("host"),
-                F.lit(0).alias("depth"),
-                F.lit(0.0).alias("score"),
-                F.lit(None).cast("string").alias("parent_url"),
-                F.lit(0).alias("discovered_iter"),
-            )
-            seeds = self._cache(seeds)
             n_seeds = len(dedup)
-            cached = seeds
         else:
             # keep the normalize UDF + dedup distributed (a resumed
             # mega-frontier is exactly the case one task can't hold);
@@ -352,7 +397,7 @@ class CrawlRun:
             par = self.spark.sparkContext.defaultParallelism
             if raw.rdd.getNumPartitions() < par:
                 raw = raw.repartition(par)
-            seeds = (
+            keyed = (
                 raw.select(
                     F.col("url"),
                     normalize_deep_udf(F.col("url"), F.col("url")).alias(
@@ -361,46 +406,37 @@ class CrawlRun:
                 )
                 .groupBy("url_norm")
                 .agg(F.min("url").alias("url"))
-                .select(
-                    "url",
-                    "url_norm",
-                    host_col(F.col("url")).alias("host"),
-                    F.lit(0).alias("depth"),
-                    F.lit(0.0).alias("score"),
-                    F.lit(None).cast("string").alias("parent_url"),
-                    F.lit(0).alias("discovered_iter"),
-                )
             )
-            cached = self._cache(seeds)
-            n_seeds = cached.count()
-            seeds = cached.coalesce(max(1, min(32, n_seeds // 50_000 + 1)))
-        # two-phase commit off the shared cache: the DATA writes (the Spark
-        # jobs) run concurrently into invisible staging dirs, then the O(1)
-        # manifest commits land seen-first, frontier-LAST — the frontier
-        # replace is the bootstrap's atomic commit point. A crash between
-        # the two leaves the frontier at iteration -1, so a resumed run
-        # simply re-bootstraps (replace is idempotent); the reverse order
-        # would leave a committed frontier over an EMPTY seen set and the
-        # seeds would be re-crawlable as later discoveries.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f1 = pool.submit(self.t_frontier.stage, seeds)
-            f2 = pool.submit(
-                self.t_seen.stage,
-                seeds.select("url_norm", F.xxhash64("url_norm").alias("url_hash"),
-                             "depth", F.lit(0).alias("first_iter")),
+            n_seeds = None
+        cached = self._cache(
+            keyed.select(
+                "url",
+                "url_norm",
+                host_col(F.col("url")).alias("host"),
+                F.lit(0).alias("depth"),
+                F.lit(0.0).alias("score"),
+                F.lit(None).cast("string").alias("parent_url"),
+                F.lit(0).alias("discovered_iter"),
             )
-            frontier_dir = f1.result()
-            seen_dir = f2.result()
-        self.t_seen.commit_staged(
-            seen_dir, {"iteration": -1}, mode="replace", durable=False
         )
-        self.t_frontier.commit_staged(
-            frontier_dir,
+        seeds = cached
+        if n_seeds is None:
+            n_seeds = cached.count()
+            seeds = cached.coalesce(_parts(n_seeds))
+        # both writes run off the shared cache; the seen replace is the
+        # bootstrap's one apply-record entry, so a crash before the
+        # frontier commit leaves the frontier at iteration -1 and a
+        # resumed run simply re-bootstraps
+        self._commit(
+            seeds,
             {"iteration": 0, "pages_crawled": 0, "n_visited": 0,
              "n_frontier": n_seeds, "n_seen": n_seeds},
-            mode="replace",
+            {"seen": (
+                seeds.select("url_norm", F.xxhash64("url_norm").alias("url_hash"),
+                             "depth", F.lit(0).alias("first_iter")),
+                "replace",
+            )},
         )
-        self.t_seen.mark_durable()
         cached.unpersist()
 
     # -- one iteration ---------------------------------------------------------
@@ -416,7 +452,7 @@ class CrawlRun:
         broadcasts and an in-process retry after a failure starts from a
         clean executor-memory slate. Only frames consumed mid-iteration
         (the flagged candidates) are released earlier. Nothing committed
-        is touched: crash reconciliation handles the snapshot side."""
+        is touched: the resume roll-forward handles the snapshot side."""
         try:
             return self._run_iteration_body()
         finally:
@@ -432,10 +468,8 @@ class CrawlRun:
             st = self.state()
         else:
             # resumed workdir OR in-process retry after a failed commit:
-            # roll back any crashed iteration's orphan commits before
-            # re-running it. Runs every entry — it is 4 driver-side JSON
-            # manifest reads (no Spark job) and a no-op on the clean path.
-            self._reconcile(st["iteration"])
+            # complete the last frontier commit's apply record
+            self._roll_forward()
         iteration = st["iteration"]
         pages_crawled = st["pages_crawled"]
         visit_base = st["n_visited"]
@@ -668,9 +702,8 @@ class CrawlRun:
         # the fetch slice is deduped to 1 row/url (pages_unique contract),
         # so every selected row becomes exactly one result row; any other
         # count means the manifest counters are about to corrupt — fail
-        # loud BEFORE the lineage commit below, or a retried iteration
-        # would double-append its lineage rows (a real raise, not an
-        # assert: this guard must survive python -O)
+        # loud before anything is staged (a real raise, not an assert:
+        # this guard must survive python -O)
         if n_results != n_selected:
             raise RuntimeError(
                 f"fetch fan-out: n_results={n_results} but "
@@ -681,7 +714,7 @@ class CrawlRun:
         # P2: evolve per-host delays from this iteration's statuses
         # (merge_host_state: first-seen hosts enter at base delay, hit
         # hosts evolve, idle hosts keep their delay — the reference
-        # touches DomainState on request). Built here, committed in the
+        # touches DomainState on request). Built here, staged in the
         # step-7 concurrent pool — a synchronous replace would add one
         # serial job per iteration.
         if cfg.adaptive_politeness:
@@ -841,7 +874,7 @@ class CrawlRun:
         # as balanced partition row counts here), 'discover' rows carry
         # per-partition emitted counts of the dedup output. Both were
         # already collected alongside the counters (≤ #partitions rows),
-        # so the lineage commit is a driver-side pyarrow parquet write —
+        # so the lineage write is a driver-side pyarrow parquet write —
         # zero Spark jobs.
         t_now = time.time()
         lineage_rows = [
@@ -865,10 +898,6 @@ class CrawlRun:
                 "t_end": pa.array([t_now] * len(lineage_rows), pa.float64()),
             }
         )
-        self.t_lineage.append_rows(
-            lineage_tbl, {"iteration": iteration}, durable=False
-        )
-
         if n_deferred == 0:
             # the whole frontier was selected (the common steady state under
             # a generous budget) — nothing is deferred, so the next frontier
@@ -912,50 +941,21 @@ class CrawlRun:
                     seen_append, num_bits=cfg.bloom_bits, hash_col="url_hash"
                 )
             )
-        # two-phase commit across independent tables (separate manifests):
-        # the Spark DATA writes run concurrently into invisible staging
-        # dirs (commit wall time = slowest write, not the sum), then the
-        # O(1) manifest commits land in a fixed order — every
-        # iteration-tagged table first, the frontier replace (carrying
-        # iteration+1) LAST as the atomic commit point. A crash anywhere
-        # before the frontier commit leaves the frontier at iteration N;
-        # the resume reconciliation (``_reconcile``) rolls back any
-        # trailing snapshot tagged >= N before re-running it, so the
-        # deterministic re-execution cannot double-append results or
-        # lineage. (On a cluster: Iceberg stage-commit per table with the
-        # frontier commit as the WAL tip, same protocol.)
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futs = [
-                pool.submit(
-                    self.t_results.stage, results.coalesce(_parts(n_results))
-                ),
-                pool.submit(self.t_seen.stage, seen_append),
-                pool.submit(
-                    self.t_frontier.stage,
-                    next_frontier.coalesce(_parts(n_deferred + n_new)),
-                ),
-            ]
-            if new_state is not None:
-                # fourth independent table; host count is bounded by the
-                # distinct hosts ever seen, so size the files like the
-                # other writes instead of a fixed single-task coalesce
-                futs.append(
-                    pool.submit(
-                        self.t_host_state.stage,
-                        new_state.coalesce(_parts(st["n_seen"] + n_results)),
-                    )
-                )
-            staged = [f.result() for f in futs]
-        self.t_results.commit_staged(
-            staged[0], {"iteration": iteration}, durable=False
-        )
-        self.t_seen.commit_staged(staged[1], {"iteration": iteration}, durable=False)
+        writes = {
+            "results": (results.coalesce(_parts(n_results)), "append"),
+            "seen": (seen_append, "append"),
+            "lineage": (lineage_tbl, "append"),
+        }
         if new_state is not None:
-            self.t_host_state.commit_staged(
-                staged[3], {"iteration": iteration}, mode="replace", durable=False
+            # host count is bounded by the distinct hosts ever seen, so
+            # size the files like the other writes instead of a fixed
+            # single-task coalesce
+            writes["host_state"] = (
+                new_state.coalesce(_parts(st["n_seen"] + n_results)),
+                "replace",
             )
-        self.t_frontier.commit_staged(
-            staged[2],
+        self._commit(
+            next_frontier.coalesce(_parts(n_deferred + n_new)),
             {
                 "iteration": iteration + 1,
                 "pages_crawled": pages_crawled + n_fetched,
@@ -963,14 +963,8 @@ class CrawlRun:
                 "n_frontier": n_deferred + n_new,
                 "n_seen": st["n_seen"] + n_seen_add,
             },
-            mode="replace",
+            writes,
         )
-        # the frontier commit is the WAL tip: the iteration is now durable
-        # (reconciliation can no longer roll it back), so advance each
-        # table's stream barrier — a stream() mirror delivers an
-        # iteration's rows exactly when it can never be re-delivered
-        for tbl in (self.t_results, self.t_seen, self.t_lineage, self.t_host_state):
-            tbl.mark_durable()
         # reclaim the dead full copies the replace-per-iteration tables
         # leave behind (append-only tables keep every dir live via the
         # tip, and external read_since tailers may hold cursors into
@@ -1025,7 +1019,7 @@ class CrawlRun:
         Call BETWEEN iterations (CrawlRun is not concurrent). One commit:
         the survivor set REPLACES the seen table (snapshot history keeps
         the old set for time travel), tagged with the last COMPLETED
-        iteration so crash-resume reconciliation never rolls it back.
+        iteration like the iteration's own commits.
         Results and lineage stay append-only — a re-crawled URL appends a
         fresh capture with a new visit_order, it does not rewrite history
         — and ``read_since`` tailers on the seen table fail loud on the
@@ -1045,14 +1039,13 @@ class CrawlRun:
         Returns ``{"n_expired": int, "n_seen": int}`` (survivor count)."""
         st = self.state()
         if st["iteration"] >= 0:
-            # reconcile FIRST, exactly as run_iteration does on entry: a
-            # crashed iteration may have committed its seen append without
-            # reaching the frontier WAL tip, and expiring over that state
-            # would bake the orphan rows into a rollback-proof replace —
-            # the re-run iteration's candidates would then anti-join away
-            # and never be crawled. Rolling the orphans back first keeps
-            # the replace a pure function of durable state.
-            self._reconcile(st["iteration"])
+            # roll forward FIRST, exactly as run_iteration does on entry:
+            # a crash after the frontier commit can leave the last
+            # iteration's seen append staged but uncommitted. The replace
+            # below would filter a seen set missing those keys (their
+            # URLs would be crawled again), and its orphan sweep would
+            # delete the staged dir the apply record still names.
+            self._roll_forward()
         seen_df = self.t_seen.read(self.spark)
         if seen_df is None:
             return {"n_expired": 0, "n_seen": 0}

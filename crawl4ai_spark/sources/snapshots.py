@@ -18,7 +18,12 @@ provides the minimal equivalent semantics on plain parquet:
 - readers pin a snapshot id → snapshot isolation / time travel;
 - the manifest is committed via write-temp-then-rename, so a crashed writer
   never corrupts the table and a resumed run continues from the last
-  committed snapshot (SURVEY.md §4 custom-work item 4).
+  committed snapshot (SURVEY.md §4 custom-work item 4);
+- ``stage`` writes the data invisibly and ``commit_staged`` publishes it
+  later, idempotently: a writer that records its staged dir names in
+  one table's commit can roll the other tables' commits forward after a
+  crash (the crawl loop's protocol, ``plans/crawl.py``). No commit is
+  ever retracted, so readers and ``stream()`` never see rows vanish.
 
 On a real cluster this class is swapped for Iceberg tables (writeTo(...)
 .append() / MERGE INTO); the crawl loop only touches this narrow interface.
@@ -55,16 +60,30 @@ class SnapshotTable:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
 
-    def _write_data(self, df: DataFrame) -> str:
+    def _write_data(self, df) -> str:
         """Write to a STAGING dir (dot-prefixed: invisible to Spark
         readers); ``_commit`` renames it to its ``data-*`` name just
         before the manifest commit. A writer that crashes mid-job
         therefore leaves only a ``.staging-*`` dir no reader can observe —
         without this, a resumed run's re-append would double its rows
-        downstream."""
+        downstream.
+
+        ``df`` is a Spark DataFrame or a driver-resident
+        ``pyarrow.Table``. The latter is for tiny metadata tables whose
+        rows the driver already holds (per-partition lineage: ≤
+        #partitions rows per iteration): a Spark write would cost a full
+        job round trip for a handful of rows, and pyarrow writes the same
+        footer-compatible parquet that ``spark.read.parquet`` unions with
+        Spark-written dirs."""
         name = ".staging-" + uuid.uuid4().hex
         path = os.path.join(self.root, name)
-        df.write.mode("overwrite").parquet(path)
+        if isinstance(df, DataFrame):
+            df.write.mode("overwrite").parquet(path)
+        else:
+            import pyarrow.parquet as pq
+
+            os.makedirs(path)
+            pq.write_table(df, os.path.join(path, "part-00000.parquet"))
         return name
 
     # -- public API ---------------------------------------------------------
@@ -90,99 +109,43 @@ class SnapshotTable:
         sid = snapshot_id if snapshot_id is not None else m["current"]
         return self._snapshot_dirs(m, sid)
 
-    def append(
-        self, df: DataFrame, meta: dict | None = None, durable: bool = True
-    ) -> int:
+    def append(self, df, meta: dict | None = None) -> int:
         m = self._read_manifest()
-        return self._commit(m, m["current"], [self._write_data(df)], meta, durable)
+        return self._commit(m, m["current"], [self._write_data(df)], meta)
 
-    def replace(self, df: DataFrame, meta: dict | None = None) -> int:
+    def replace(self, df, meta: dict | None = None) -> int:
         m = self._read_manifest()
         return self._commit(m, None, [self._write_data(df)], meta)
 
-    def stage(self, df: DataFrame) -> str:
-        """Phase 1 of a two-phase commit: run the (expensive) Spark data
-        write into an invisible ``.staging-*`` dir and return its name.
-        Publish later with ``commit_staged`` — until then no reader (or
-        crash-resumed run) can observe the rows. Lets a multi-table commit
-        stage all data writes concurrently, then order the O(1) manifest
-        commits so one designated table is the atomic commit point."""
+    def stage(self, df) -> str:
+        """Phase 1 of a two-phase commit: run the (expensive) data write
+        into an invisible ``.staging-*`` dir and return its name. Publish
+        later with ``commit_staged`` — until then no reader can observe
+        the rows. Lets a multi-table commit stage all data writes
+        concurrently, then order the O(1) manifest commits so one
+        designated table is the atomic commit point."""
         return self._write_data(df)
 
     def commit_staged(
-        self,
-        staged: str,
-        meta: dict | None = None,
-        mode: str = "append",
-        durable: bool = True,
-    ) -> int:
+        self, staged: str, meta: dict | None = None, mode: str = "append"
+    ) -> int | None:
         """Phase 2: publish a ``stage``d dir as a snapshot commit.
 
-        ``durable=False`` marks the commit as PROVISIONAL for streaming
-        delivery: it is immediately visible to batch readers (``read``,
-        ``read_since``), but the ``stream()`` mirror will not deliver its
-        files until ``mark_durable()`` advances the stream barrier past
-        it. The crawl loop commits per-iteration tables non-durable and
-        advances the barrier only after the frontier commit (the WAL tip)
-        lands — a commit that crash reconciliation can still roll back
-        must never reach a checkpointed stream, because its deterministic
-        re-execution would land under NEW file names and the stream would
-        deliver the same rows twice."""
+        Idempotent, so a writer that recorded ``staged`` before a crash
+        can roll the commit forward on resume: a dir some snapshot
+        already references is not committed again (returns None), and a
+        dir that a crash inside ``_commit``'s publish window left renamed
+        to ``data-*`` but unreferenced is committed under that name."""
         if mode not in ("append", "replace"):
             raise ValueError(f"unknown commit mode: {mode}")
         m = self._read_manifest()
+        published = "data-" + staged[len(".staging-"):]
+        if published in self._all_referenced(m):
+            return None
+        if os.path.isdir(os.path.join(self.root, published)):
+            staged = published
         base = m["current"] if mode == "append" else None
-        return self._commit(m, base, [staged], meta, durable)
-
-    def rollback_trailing(self, pred) -> int:
-        """Crash reconciliation (the Iceberg analog is
-        rollback_to_snapshot): pop trailing snapshots while ``pred(meta)``
-        is true, then sweep the data dirs no surviving snapshot references.
-        The crawl loop commits every per-iteration table with
-        ``meta={'iteration': N}`` BEFORE the frontier's replace (the
-        iteration's atomic commit point, carrying N+1) — so on resume any
-        trailing snapshot tagged >= the frontier's iteration is an orphan
-        of a crashed iteration and is rolled back before re-running it,
-        instead of double-appending its rows. Returns the number popped."""
-        m = self._read_manifest()
-        snaps = m["snapshots"]
-        popped = 0
-        while snaps and pred(snaps[-1].get("meta") or {}):
-            snaps.pop()
-            popped += 1
-        if popped:
-            m["current"] = snaps[-1]["id"] if snaps else None
-            # the barrier can never legally point past the new tip: under
-            # the crawl protocol only non-durable snapshots are rolled
-            # back, but clamp defensively so a barrier left dangling by a
-            # protocol bug degrades to "deliver the durable tip", never to
-            # a KeyError or a stale dir list
-            if m.get("stream_barrier") is not None and (
-                m["current"] is None or m["stream_barrier"] > m["current"]
-            ):
-                m["stream_barrier"] = m["current"]
-            self._commit_manifest(m)
-            self._sweep_orphans(keep=set(), manifest=m)
-            # drop links of rolled-back dirs; prune_min_age_s=0 is safe
-            # here: rollback runs on THE writer (serial-writer contract),
-            # so no concurrent commit can race the prune
-            self._sync_stream_dir(full=True, manifest=m)
-        return popped
-
-    def mark_durable(self) -> None:
-        """Advance the stream barrier to the current snapshot, making
-        every commit up to it deliverable to ``stream()`` mirrors. The
-        crawl loop calls this AFTER the frontier commit (the iteration's
-        atomic commit point) lands and from resume reconciliation — at
-        both points everything at or below the current snapshot is
-        guaranteed to survive any future ``rollback_trailing``, so the
-        mirror's no-re-delivery contract holds."""
-        m = self._read_manifest()
-        bar = self._barrier(m)
-        if bar != m["current"]:
-            m["stream_barrier"] = m["current"]
-            self._commit_manifest(m)
-        self._sync_stream_dir(manifest=m)
+        return self._commit(m, base, [staged], meta)
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
         """Iceberg-style ``expire_snapshots``: drop all but the newest
@@ -201,27 +164,14 @@ class SnapshotTable:
         Trades away history: time travel below the new anchor is gone,
         and a ``read_since`` cursor older than the anchor raises the
         rebuilt-table error on its next read (pick ``keep_last`` to
-        cover the longest tailing lag; the crawl loop's own resume
-        reconciliation only ever inspects the trailing record per table,
-        so ``keep_last=2`` is safe for it). WRITER-ONLY, like every
-        mutation here (serial-writer contract).
-
-        Never expires past the stream barrier: provisional (non-durable)
-        records must stay individually resolvable — folding one into the
-        anchor would let ``_barrier_target``'s vanished-barrier fallback
-        degrade to the tip and deliver rows a rollback could still
-        retract. Returns the number of records dropped."""
+        cover the longest tailing lag). WRITER-ONLY, like every mutation
+        here (serial-writer contract). Returns the number of records
+        dropped."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         m = self._read_manifest()
         snaps = m["snapshots"]
         cut = len(snaps) - keep_last
-        bar = self._barrier(m)
-        if bar is not None:
-            for i, s in enumerate(snaps):
-                if s["id"] == bar:
-                    cut = min(cut, i)
-                    break
         if cut <= 0:
             return 0
         by_id = {s["id"]: s for s in snaps}
@@ -241,28 +191,7 @@ class SnapshotTable:
         self._sync_stream_dir(full=True, manifest=m)
         return cut
 
-    def append_rows(
-        self, table, meta: dict | None = None, durable: bool = True
-    ) -> int:
-        """Append driver-resident rows (a ``pyarrow.Table``) WITHOUT a Spark
-        job — for tiny metadata tables whose rows were already collected on
-        the driver (e.g. per-partition lineage: ≤ #partitions rows per
-        iteration). A Spark write here would cost a full job round-trip for
-        a handful of rows; pyarrow writes the same footer-compatible parquet
-        that ``spark.read.parquet`` unions with Spark-written dirs."""
-        import pyarrow.parquet as pq
-
-        # staged like _write_data: published to data-* by _commit
-        name = ".staging-" + uuid.uuid4().hex
-        path = os.path.join(self.root, name)
-        os.makedirs(path, exist_ok=True)
-        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-        m = self._read_manifest()
-        return self._commit(m, m["current"], [name], meta, durable)
-
-    def _sweep_orphans(
-        self, keep: set[str], min_age_s: float = 0.0, manifest: dict | None = None
-    ) -> None:
+    def _sweep_orphans(self, keep: set[str], manifest: dict | None = None) -> None:
         """Garbage-collect crash debris (the Iceberg analog is
         remove_orphan_files): ``.staging-*`` dirs from writers that died
         mid-job, and ``data-*`` dirs from writers that died in the instant
@@ -271,73 +200,34 @@ class SnapshotTable:
         time-travel readers keep old dirs live) nor in ``keep`` (the commit
         in flight) is unreachable garbage under this table's serial-writer
         contract (concurrent commits in the crawl loop always target
-        DIFFERENT tables), so it is deleted. (stream() no longer reads the
-        data-* glob — its mirror is manifest-driven — so the sweep is disk
-        hygiene and batch-glob cleanliness, not stream correctness.)
-
-        ``min_age_s``: on the COMMIT path the sweep is unconditional
-        (min_age_s=0) — the serial-writer contract means the committing
-        writer is THE writer, so every unreferenced dir is dead debris and
-        erasing it immediately closes the uncommitted-row delivery window
-        for any stream created afterwards. The READ path (stream()) passes
-        a 300 s cutoff instead — the same age cutoff Iceberg's
-        remove_orphan_files applies, and for the same reason: a reader
-        cannot know whether an unreferenced dir belongs to a LIVE writer
-        whose manifest commit simply hasn't landed yet. Age is measured as
-        the newest mtime anywhere in the dir TREE, not the top-level dir —
-        Spark's parquet job writes part files under ``_temporary/``
-        without touching the staging dir's own mtime, so a top-level-mtime
-        heuristic would sweep a >300 s in-flight write out from under its
-        writer.
+        DIFFERENT tables), so it is deleted. Only writers sweep, and
+        unconditionally: the committing writer is THE writer, so every
+        unreferenced dir is dead. (stream() does not read the data-* glob
+        — its mirror is manifest-driven — so the sweep is disk hygiene and
+        batch-glob cleanliness, not stream correctness.)
 
         ``manifest``: commit-path callers pass the manifest dict already
         in hand, skipping a redundant O(total-dirs) JSON parse per sweep
         (same rationale as ``_sync_stream_dir``'s parameter — the
         delta-encoded manifest exists to keep per-commit driver cost flat
         on 10k-iteration crawls)."""
-        import time as _time
-
         m = manifest if manifest is not None else self._read_manifest()
         referenced = set(keep) | self._all_referenced(m)
-        cutoff = _time.time() - min_age_s
         for name in os.listdir(self.root):
             if not (name.startswith(".staging-") or name.startswith("data-")):
                 continue
-            if name in referenced:
-                continue
-            path = os.path.join(self.root, name)
-            if min_age_s > 0:
-                try:
-                    if self._tree_newest_mtime(path) > cutoff:
-                        continue
-                except OSError:
-                    continue  # vanished concurrently — nothing to sweep
-            shutil.rmtree(path, ignore_errors=True)
-
-    @staticmethod
-    def _tree_newest_mtime(path: str) -> float:
-        """Newest mtime of the dir or anything under it (a write in flight
-        keeps SOME entry fresh even when the top-level dir mtime is stale)."""
-        newest = os.path.getmtime(path)
-        for dirpath, dirnames, filenames in os.walk(path):
-            for entry in dirnames + filenames:
-                try:
-                    mt = os.path.getmtime(os.path.join(dirpath, entry))
-                except OSError:
-                    continue  # file vanished mid-walk (job commit rename)
-                if mt > newest:
-                    newest = mt
-        return newest
+            if name not in referenced:
+                shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
 
     @staticmethod
     def _dirs_of(by_id: dict, sid: int | None) -> list[str] | None:
         """Resolve a snapshot's full dir list by walking its base chain
         (oldest dirs first). ``by_id`` is ``{s["id"]: s}`` over the
         manifest's snapshot records. Returns None for an unknown id.
-        Legacy records carrying a full ``dirs`` list terminate the walk.
-        Rollback only ever pops from the TAIL of the snapshot list, so a
-        surviving record's base (an earlier commit) always survives —
-        the chain cannot dangle."""
+        Full ``dirs`` records (legacy ones and ``expire_snapshots``'
+        anchor) terminate the walk. Records are only ever appended, and
+        expiry re-anchors the oldest survivor, so a surviving record's
+        base always survives — the chain cannot dangle."""
         rec = by_id.get(sid)
         if rec is None:
             return None
@@ -374,7 +264,6 @@ class SnapshotTable:
         base_sid: int | None,
         new_dirs: list[str],
         meta: dict | None,
-        durable: bool = True,
     ) -> int:
         # publish staged dirs: rename .staging-<hex> -> data-<hex> (atomic
         # on POSIX) immediately before the manifest commit. The window in
@@ -394,8 +283,7 @@ class SnapshotTable:
                 os.replace(os.path.join(self.root, d), os.path.join(self.root, new))
                 d = new
             published.append(d)
-        prev = manifest["current"]
-        sid = (prev or 0) + 1
+        sid = (manifest["current"] or 0) + 1
         # DELTA record: base + added keeps the manifest O(total dirs);
         # a full dir list per snapshot would make it O(dirs²) and the
         # per-commit manifest rewrite the dominant cost on long crawls
@@ -403,12 +291,6 @@ class SnapshotTable:
             {"id": sid, "base": base_sid, "added": published, "meta": meta or {}}
         )
         manifest["current"] = sid
-        if durable:
-            manifest["stream_barrier"] = sid
-        elif "stream_barrier" not in manifest:
-            # first non-durable commit on a legacy/fresh manifest: pin the
-            # barrier at the previous tip so the mirror holds there
-            manifest["stream_barrier"] = prev
         self._commit_manifest(manifest)
         # AFTER the manifest commit: publish to any live stream() mirror —
         # ordering means the mirror only ever holds manifest-committed
@@ -420,30 +302,6 @@ class SnapshotTable:
     @property
     def _stream_path(self) -> str:
         return os.path.join(self.root, "stream")
-
-    @staticmethod
-    def _barrier(m: dict) -> int | None:
-        """The persisted stream barrier; absent → the current snapshot
-        (legacy all-commits-durable manifests). The ONE spelling of the
-        legacy fallback — ``mark_durable``, ``_barrier_target`` and
-        ``read_since`` all resolve through here so a semantics change
-        lands in one place."""
-        return m["stream_barrier"] if "stream_barrier" in m else m["current"]
-
-    def _barrier_target(self, m: dict) -> tuple[int | None, list[str]]:
-        """Resolve the snapshot the stream mirror should deliver up to:
-        the stream barrier (see ``_barrier``) clamped to the current
-        tip. Returns ``(snapshot_id, dirs)``."""
-        cur = m["current"]
-        sid = self._barrier(m)
-        if sid is None or cur is None:
-            return None, []
-        sid = min(sid, cur)
-        dirs = self._snapshot_dirs(m, sid)
-        if dirs is None:  # barrier snapshot vanished — degrade to the tip
-            sid = cur
-            dirs = self._snapshot_dirs(m, cur)
-        return sid, list(dirs)
 
     @staticmethod
     def _link_or_copy(src: str, dst: str) -> None:
@@ -471,20 +329,18 @@ class SnapshotTable:
         manifest: dict | None = None,
     ) -> None:
         """Reconcile the ``stream/`` mirror with the manifest: hardlink
-        every parquet file of the BARRIER snapshot's dirs in (named
+        every parquet file of the current snapshot's dirs in (named
         ``<dir>__<file>`` — unique and stable, so the file-source
         checkpoint never re-delivers), and on a ``full`` sync drop links
-        whose source dir no snapshot references any more
-        (rollback_trailing). The mirror is created lazily by ``stream()``;
+        whose source dir no snapshot references any more. The mirror is
+        created lazily by ``stream()``;
         until then commits skip the sync (``create=False`` no-ops), so
         tables nobody tails pay nothing.
 
         This is what makes ``stream()`` MANIFEST-DRIVEN: the streaming
         file source globs the mirror, and the mirror is only ever written
-        AFTER a manifest commit, from the manifest's own dir list —
-        truncated at the stream barrier, so provisional commits that
-        crash reconciliation could still roll back are never delivered.
-        Crash debris — published-but-uncommitted ``data-*`` dirs, orphan
+        AFTER a manifest commit, from the manifest's own dir list. Crash
+        debris — published-but-uncommitted ``data-*`` dirs, orphan
         ``.staging-*`` dirs — can therefore never reach a stream, closing
         the window a raw ``data-*`` glob source had. Hardlinks keep the
         mirror O(1) in size and alive even across a sweep of its source
@@ -494,17 +350,13 @@ class SnapshotTable:
         (hidden from Spark's file source) records the mirrored dir list,
         so each commit links only dirs the marker hasn't seen — O(new
         files), not O(table files), keeping a 10k-iteration crawl's
-        per-commit cost flat. The marker stores DIR NAMES, not a snapshot
-        id: snapshot ids are reused after ``rollback_trailing`` pops them
-        (sid = current + 1), so an id-based marker could alias a popped
-        snapshot onto its replacement in the crash window between the
-        rollback's manifest write and its full sync. A missing/stale
-        marker (first sync, crash between link phase and marker write,
-        rollback) degrades to a full link+prune pass.
+        per-commit cost flat. A missing marker, or one naming a dir the
+        current snapshot lacks (first sync, a crash between link phase
+        and marker write), degrades to a full link+prune pass.
 
         ``prune_min_age_s``: the full-sync prune deletes links whose
         source dir no manifest snapshot references. On WRITER paths
-        (``rollback_trailing``) that judgment is exact — the serial-writer
+        (``expire_snapshots``) that judgment is exact — the serial-writer
         contract means no commit can land mid-prune. A READER-side full
         sync (``stream()``) races live commits: its manifest read can
         predate a commit whose link phase has already populated the
@@ -522,15 +374,12 @@ class SnapshotTable:
         bytes were written (the copy fallback's ctime is the copy time —
         same property). Writers only ever ADD new uuid-named dirs, never
         resurrect old names, so pruning genuinely old unreferenced links
-        never races anything; under the barrier protocol non-durable
-        commits are never linked at all, making the reader-side prune
-        pure debris hygiene, not delivery correctness.
+        never races anything.
 
         ``manifest``: commit-path callers pass the manifest dict already
         in hand, skipping a redundant O(total-dirs) JSON parse per sync
         (the delta-encoded manifest exists to keep per-commit cost flat
-        on 10k-iteration crawls). The marker write is likewise skipped
-        when the sync linked nothing new."""
+        on 10k-iteration crawls)."""
         import time as _time
 
         sd = self._stream_path
@@ -540,7 +389,7 @@ class SnapshotTable:
             os.makedirs(sd, exist_ok=True)
             full = True
         m = manifest if manifest is not None else self._read_manifest()
-        _sid, target_dirs = self._barrier_target(m)
+        target_dirs = self._snapshot_dirs(m, m["current"]) or []
         marker = os.path.join(sd, "_synced")
         synced_dirs: list[str] | None = None
         if not full:
@@ -582,14 +431,12 @@ class SnapshotTable:
             try:
                 names = os.listdir(src_dir)
             except OSError:
-                continue  # dir vanished (concurrent rollback) — next sync heals
+                continue  # dir vanished (a writer's sweep) — next sync heals
             for fn in names:
                 if fn.endswith(".parquet"):
                     self._link_or_copy(
                         os.path.join(src_dir, fn), os.path.join(sd, f"{d}__{fn}")
                     )
-        if not full and not new_dirs:
-            return  # marker already records exactly target_dirs — no-op
         tmp = marker + "." + uuid.uuid4().hex + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"dirs": target_dirs}, f)
@@ -622,22 +469,18 @@ class SnapshotTable:
         a processing-time trigger to tail a live crawl.
 
         The source is MANIFEST-DRIVEN: it globs the ``stream/`` mirror,
-        which ``_sync_stream_dir`` populates with hardlinks to the
-        snapshot at the STREAM BARRIER (commits marked ``durable=False``
-        stay invisible until ``mark_durable`` advances the barrier) —
-        written only AFTER each manifest commit, from the manifest's own
-        dir list. Crash debris (published-but-uncommitted ``data-*``
-        dirs, orphan ``.staging-*`` dirs) and provisional commits that
-        crash reconciliation may still roll back (whose deterministic
-        re-execution would re-deliver the same rows under new file names)
-        therefore can never reach a stream, with no age heuristics: a
-        writer that crashes between its manifest commit and the mirror
-        sync merely DELAYS that commit's delivery until the next commit,
-        the next ``mark_durable`` (the crawl loop runs one per resume
-        reconciliation), or the next ``stream()`` call repairs the mirror
-        — committed-but-late, never re-delivered, never
-        uncommitted-but-delivered. The append-only contract is enforced
-        (a table that ever saw ``replace()`` would re-emit dropped dirs):
+        which ``_sync_stream_dir`` populates with hardlinks to the current
+        snapshot — written only AFTER each manifest commit, from the
+        manifest's own dir list. Crash debris (published-but-uncommitted
+        ``data-*`` dirs, orphan ``.staging-*`` dirs) therefore can never
+        reach a stream, with no age heuristics: a writer that crashes
+        between its manifest commit and the mirror sync merely DELAYS that
+        commit's delivery until the next commit or the next ``stream()``
+        call repairs the mirror — committed-but-late, never re-delivered,
+        never uncommitted-but-delivered. No commit is ever retracted, so
+        no delivered row is ever taken back. The append-only contract is
+        enforced (a table that ever saw ``replace()`` would re-emit
+        dropped dirs):
         any snapshot whose dir set is not a superset of its predecessor's
         raises. The read path does NOT sweep orphan data/staging dirs:
         the mirror is manifest-driven so debris can't reach the stream
@@ -678,10 +521,7 @@ class SnapshotTable:
         return spark.readStream.schema(current.schema).parquet(self._stream_path)
 
     def read_since(
-        self,
-        spark: SparkSession,
-        after_snapshot_id: int | None,
-        durable_only: bool = False,
+        self, spark: SparkSession, after_snapshot_id: int | None
     ) -> tuple[int | None, DataFrame | None]:
         """Incremental read: rows appended AFTER ``after_snapshot_id``
         (None = from the beginning). Returns (current_snapshot_id, df) with
@@ -695,46 +535,9 @@ class SnapshotTable:
         dir would look "new" and previously-delivered rows would be
         re-emitted. Such a gap raises so the caller resets its cursor
         instead of silently double-reading.
-
-        ``durable_only=True`` tails only up to the stream barrier, giving
-        batch tailers the same exactly-once contract as ``stream()``: the
-        returned cursor can never point at a provisional snapshot. Without
-        it the failure is SILENT: crash rollback pops the provisional
-        snapshot and the re-executed iteration reuses its id, so a stale
-        cursor aliases onto the re-executed snapshot and its rows are
-        never delivered. A cursor already ahead of the barrier (a prior
-        non-durable read, or a racing commit whose ``mark_durable`` hasn't
-        landed) holds in place — ``(cursor, None)`` — until the barrier
-        catches up; snapshot ids are contiguous and monotone, so holding
-        can never skip a delivery the caller hasn't already consumed.
-        The hold applies ONLY to cursors the manifest still knows (ids
-        ≤ the current tip): a cursor above the tip means the table was
-        rebuilt under the caller, and holding there would stall forever —
-        silently — instead of raising the same rebuilt-table error the
-        non-durable path raises (worse, once the rebuilt table grew past
-        the stale id the cursor would alias onto an unrelated snapshot
-        and skip every earlier row).
         """
         m = self._read_manifest()
         cur = m["current"]
-        if durable_only:
-            bar = self._barrier(m)
-            if after_snapshot_id is not None and (
-                cur is None or after_snapshot_id > cur
-            ):
-                raise ValueError(
-                    f"snapshot {after_snapshot_id} not found in {self.root}: "
-                    "the table was rebuilt under this cursor — reset the "
-                    "cursor and re-read"
-                )
-            if bar is None:
-                cur = None
-            elif cur is not None:
-                cur = min(bar, cur)
-            if after_snapshot_id is not None and (
-                cur is None or after_snapshot_id > cur
-            ):
-                return after_snapshot_id, None
         if cur is None or cur == after_snapshot_id:
             return cur, None
         cur_dirs = self._snapshot_dirs(m, cur)

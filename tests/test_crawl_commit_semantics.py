@@ -1,19 +1,21 @@
 """Round-5 semantics fixes: success-only page budget (reference
 bfs_strategy.py:172-174), seen-before-capacity-slice (bfs_strategy.py:121
-vs :124-130), best-first capacity trim direction, the two-phase commit
-protocol with resume reconciliation, read_since cursor validation, and the
-bloom hash_col fast path.
+vs :124-130), best-first capacity trim direction, the forward-only
+multi-table commit and its resume roll-forward, read_since cursor
+validation, and the bloom hash_col fast path.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from crawl4ai_spark.plans.crawl import CrawlConfig, CrawlRun
+from crawl4ai_spark.sources.snapshots import SnapshotTable
 from crawl4ai_spark.sources.synthetic import build_robots, build_seeds
 
 
@@ -91,8 +93,11 @@ def test_capacity_topk_ascending_keeps_lowest(spark):
 
 
 def test_resume_reconciles_crashed_iteration(spark, pages):
-    """Orphan commits from an iteration that crashed before the frontier
-    replace are rolled back on resume instead of double-appending."""
+    """A workdir left mid-commit by the undo-style protocol (other tables
+    committed BEFORE the frontier replace) holds snapshots tagged with
+    the iteration the frontier has not reached. Resume refuses it loudly,
+    naming the table, instead of re-running the iteration over those rows
+    and appending them a second time."""
     wd = tempfile.mkdtemp(prefix="reconcile_")
     cfg = CrawlConfig(mode="bfs", max_pages=100000, max_depth=3,
                       host_budget=100000, include_external=True)
@@ -100,21 +105,171 @@ def test_resume_reconciles_crashed_iteration(spark, pages):
                    wd, cfg)
     run.run_iteration()
     n0 = run.results().count()
-    # simulate iteration 1 crashing after its results/lineage commits but
-    # before the frontier commit point: orphan appends tagged iteration=1
-    # while the frontier meta still says iteration 1 is next
+    # iteration 1 as the undo protocol left it on a crash: results
+    # committed and tagged 1, while the frontier still says 1 is next
     run.t_results.append(run.results(), {"iteration": 1})
-    run.t_lineage.append(run.lineage(), {"iteration": 1})
-    assert run.results().count() == 2 * n0
-    # a fresh CrawlRun over the same workdir reconciles, then re-runs
     run2 = CrawlRun(spark, pages, build_robots(spark), build_seeds(spark, 3),
                     wd, cfg)
-    run2.run_iteration()
-    res = run2.results()
-    # the orphan rows are gone: iteration 0 appears exactly once
-    assert res.filter("iteration = 0").count() == n0
-    dup = res.groupBy("visit_order").count().filter("count > 1").count()
-    assert dup == 0
+    with pytest.raises(RuntimeError, match="results table"):
+        run2.run_iteration()
+    with pytest.raises(RuntimeError, match="results table"):
+        run2.expire_seen(F.lit(True))
+    # refused, not repaired: nothing was committed or removed
+    assert run2.results().count() == 2 * n0
+    assert run2.state()["iteration"] == 1
+
+
+class _Crash(Exception):
+    """Stands in for the process dying at a chosen manifest commit."""
+
+
+# three iterations (0, 1, 2) over the test corpus; adaptive politeness
+# puts host_state in every apply record
+_CRASH_CFG = dict(
+    mode="bfs", max_pages=30, max_depth=2, host_budget=3,
+    include_external=True, adaptive_politeness=True,
+)
+# manifest commits in order: the frontier commit point, then the apply
+# record's entries
+_COMMIT_ORDER = {
+    "bootstrap": ["frontier", "seen"],
+    "steady": ["frontier", "results", "seen", "lineage", "host_state"],
+}
+# (phase, k, when): crash at the k-th manifest commit of the phase,
+# "before" its manifest write (its dir is already renamed to data-*: the
+# publish window) or right "after" it
+_CRASH_POINTS = [
+    ("bootstrap", 0, "before"),
+    ("bootstrap", 1, "before"),
+    ("bootstrap", 1, "after"),
+    ("steady", 0, "before"),
+    ("steady", 1, "before"),
+    ("steady", 2, "before"),
+    ("steady", 3, "before"),
+    ("steady", 4, "before"),
+    ("steady", 4, "after"),
+]
+
+
+def _crash_run(spark, pages, wd):
+    return CrawlRun(spark, pages, build_robots(spark), build_seeds(spark, 2),
+                    wd, CrawlConfig(**_CRASH_CFG))
+
+
+def _crawl_tables(run) -> dict:
+    return {
+        "results": sorted(
+            tuple(r) for r in run.results()
+            .select("url", "depth", "visit_order", "iteration").collect()
+        ),
+        "seen": sorted(r.url_norm for r in run.seen().collect()),
+        "lineage": sorted(
+            tuple(r) for r in run.lineage().select(
+                "iteration", "stage", "partition_id", "urls_in", "fetched",
+                "robots_blocked", "emitted",
+            ).collect()
+        ),
+        "host_state": sorted(tuple(r) for r in run.host_state().collect()),
+    }
+
+
+def _drain(spark, table, ck: str, out: str) -> list:
+    """Run a checkpointed results stream to the end of what is committed
+    (availableNow) and return everything it has delivered so far."""
+    q = (
+        table.stream(spark).writeStream.format("parquet")
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start(out)
+    )
+    q.awaitTermination()
+    return sorted(
+        tuple(r) for r in spark.read.parquet(out)
+        .select("url", "visit_order").collect()
+    )
+
+
+@pytest.fixture(scope="module")
+def crash_reference(spark, pages, tmp_path_factory):
+    """The uninterrupted crawl's tables after iteration 0 and at the end,
+    plus a copy of its workdir after iteration 0 for the steady-iteration
+    crashes to start from."""
+    wd = str(tmp_path_factory.mktemp("crash_ref") / "wd")
+    run = _crash_run(spark, pages, wd)
+    assert not run.run_iteration()["done"]
+    base = str(tmp_path_factory.mktemp("crash_base") / "wd")
+    shutil.copytree(wd, base)
+    after_bootstrap = _crawl_tables(run)
+    stats = run.run(max_iterations=10)
+    assert [s["iteration"] for s in stats[:-1]] == [1, 2]
+    return base, {"bootstrap": after_bootstrap, "steady": _crawl_tables(run)}
+
+
+@pytest.mark.parametrize(
+    "phase,k,when", _CRASH_POINTS,
+    ids=[f"{p}-{_COMMIT_ORDER[p][k]}-{w}" for p, k, w in _CRASH_POINTS],
+)
+def test_crash_matrix_resumes_to_uninterrupted_crawl(
+    spark, pages, crash_reference, tmp_path, monkeypatch, phase, k, when
+):
+    """A crash at any manifest commit of the bootstrap or of a steady
+    iteration, then a resume with a fresh CrawlRun, ends with the same
+    results, seen, lineage and host_state as a crawl that never crashed:
+    after iteration 0 for a bootstrap crash, at the end of the crawl for
+    a steady one. A results stream started before the crash delivers
+    every row exactly once, and a crash before the frontier commit
+    leaves nothing visible."""
+    base, expected = crash_reference
+    wd = str(tmp_path / "wd")
+    stream = (str(tmp_path / "ck"), str(tmp_path / "out"))
+    if phase == "steady":
+        shutil.copytree(base, wd)
+    run = _crash_run(spark, pages, wd)
+    if phase == "steady":
+        delivered = _drain(spark, run.t_results, *stream)
+        tips = {key: t.current_snapshot_id() for key, t in run._tables.items()}
+        rows = {key: t.read(spark).count() for key, t in run._tables.items()}
+
+    committed: list[str] = []
+    real_commit = SnapshotTable._commit_manifest
+
+    def crashing_commit(self, manifest):
+        committed.append(os.path.basename(self.root))
+        if len(committed) == k + 1 and when == "before":
+            raise _Crash()
+        real_commit(self, manifest)
+        if len(committed) == k + 1:
+            raise _Crash()
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "_commit_manifest", crashing_commit)
+        with pytest.raises(_Crash):
+            run.run_iteration()
+    assert committed[k] == _COMMIT_ORDER[phase][k]
+
+    if k == 0 and when == "before":
+        # the commit point never landed: no table shows the iteration
+        if phase == "bootstrap":
+            assert run.t_frontier.read(spark) is None
+            assert run.t_seen.read(spark) is None
+            assert run.t_seen.read_since(spark, None) == (None, None)
+        else:
+            assert run.state()["iteration"] == 1
+            for key, t in run._tables.items():
+                assert t.current_snapshot_id() == tips[key]
+                assert t.read(spark).count() == rows[key]
+                if key != "host_state":  # the one replace-mode table
+                    assert t.read_since(spark, tips[key]) == (tips[key], None)
+            assert _drain(spark, run.t_results, *stream) == delivered
+
+    resumed = _crash_run(spark, pages, wd)
+    resumed.run(max_iterations=1 if phase == "bootstrap" else 10)
+    got = _crawl_tables(resumed)
+    assert got == expected[phase]
+    if phase == "steady":
+        assert _drain(spark, resumed.t_results, *stream) == sorted(
+            (url, visit_order) for url, _, visit_order, _ in got["results"]
+        )
 
 
 def test_read_since_unknown_cursor_raises(spark, tmp_path):
@@ -131,38 +286,6 @@ def test_read_since_unknown_cursor_raises(spark, tmp_path):
 
 def _mirror_files(sd: str) -> set[str]:
     return {f for f in os.listdir(sd) if f.endswith(".parquet")}
-
-
-def test_stream_barrier_holds_provisional_commits(spark, tmp_path):
-    """durable=False commits are visible to batch readers immediately but
-    reach the stream mirror only after mark_durable advances the barrier —
-    so a commit that crash reconciliation can still roll back is never
-    delivered to a checkpointed stream (whose deterministic re-execution
-    would otherwise re-deliver the same rows under new file names)."""
-    from crawl4ai_spark.sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    t.append(spark.range(3).toDF("id"))  # durable bootstrap
-    t.stream(spark)  # creates the mirror
-    sd = t._stream_path
-    base = _mirror_files(sd)
-    assert base
-    t.append(spark.range(3, 6).toDF("id"), {"iteration": 1}, durable=False)
-    assert t.read(spark).count() == 6  # batch readers see it...
-    assert _mirror_files(sd) == base  # ...the stream mirror does not
-    # crash before the WAL tip: the provisional commit rolls back, then
-    # the iteration re-executes and lands under a NEW data dir name
-    t.rollback_trailing(lambda m: m.get("iteration", -1) >= 1)
-    assert _mirror_files(sd) == base
-    t.append(spark.range(3, 6).toDF("id"), {"iteration": 1}, durable=False)
-    t.mark_durable()  # the frontier commit landed — now deliverable
-    after = _mirror_files(sd)
-    assert after > base
-    # exactly ONE dir beyond the base was ever mirrored: the checkpoint
-    # cannot have consumed a rolled-back twin of these rows
-    assert len({f.split("__", 1)[0] for f in after - base}) == 1
-    rows = sorted(r.id for r in spark.read.parquet(sd).collect())
-    assert rows == [0, 1, 2, 3, 4, 5]
 
 
 def test_stream_mirror_copy_fallback(spark, tmp_path, monkeypatch):
@@ -210,62 +333,20 @@ def test_stream_sync_incremental_touches_only_new_dirs(spark, tmp_path, monkeypa
     assert len(data_dirs_listed) == 1  # only the dir this commit added
 
 
-def test_read_since_durable_only_skips_provisional(spark, tmp_path):
-    """A durable_only batch tailer never sees (or cursors onto) a
-    provisional snapshot: its cursor survives crash rollback, so it
-    re-reads nothing after the iteration re-executes."""
-    from crawl4ai_spark.sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    t.append(spark.range(3).toDF("id"))  # durable
-    cur, delta = t.read_since(spark, None, durable_only=True)
-    assert delta.count() == 3
-    t.append(spark.range(3, 6).toDF("id"), {"iteration": 1}, durable=False)
-    cur2, delta2 = t.read_since(spark, cur, durable_only=True)
-    assert delta2 is None and cur2 == cur  # held at the barrier
-    # non-durable tailing WOULD have cursored onto the doomed snapshot
-    t.rollback_trailing(lambda m: m.get("iteration", -1) >= 1)
-    t.append(spark.range(3, 6).toDF("id"), {"iteration": 1}, durable=False)
-    t.mark_durable()
-    cur3, delta3 = t.read_since(spark, cur2, durable_only=True)
-    assert sorted(r.id for r in delta3.collect()) == [3, 4, 5]  # exactly once
-
-
-def test_read_since_durable_only_holds_cursor_ahead_of_barrier(spark, tmp_path):
-    """A cursor that got ahead of the stream barrier (a prior
-    non-durable read) HOLDS — (cursor, None) — rather than raising the
-    misleading replace() error, whose reset-and-re-read advice would
-    cause exactly the double delivery durable_only exists to prevent.
-    Once the barrier catches up, tailing resumes from the held cursor."""
-    from crawl4ai_spark.sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    t.append(spark.range(3).toDF("id"))  # durable
-    t.append(spark.range(3, 6).toDF("id"), durable=False)
-    cur, delta = t.read_since(spark, None)  # non-durable read: cursor = 2
-    assert delta.count() == 6
-    held, nothing = t.read_since(spark, cur, durable_only=True)
-    assert nothing is None and held == cur  # held, not raised
-    t.append(spark.range(6, 9).toDF("id"), durable=False)
-    t.mark_durable()  # barrier now past the held cursor
-    cur2, delta2 = t.read_since(spark, held, durable_only=True)
-    assert sorted(r.id for r in delta2.collect()) == [6, 7, 8]
-
-
 def test_manifest_is_delta_encoded(spark, tmp_path):
     """Snapshot records store (base, added) deltas, so each data dir name
     appears ONCE in the manifest no matter how many later snapshots
     include it — full per-snapshot dir lists would make the manifest
     O(dirs²) and its per-commit rewrite the dominant driver cost on a
-    10k-iteration crawl. Chain resolution, time travel, and rollback all
-    operate on the resolved lists."""
+    10k-iteration crawl. Chain resolution, time travel and read_since
+    all operate on the resolved lists."""
     import pyarrow as pa
 
     from crawl4ai_spark.sources.snapshots import SnapshotTable
 
     t = SnapshotTable(str(tmp_path / "tbl"))
     for i in range(8):
-        t.append_rows(pa.table({"id": [i]}), {"iteration": i})
+        t.append(pa.table({"id": [i]}), {"iteration": i})
     raw = open(t._manifest_path).read()
     dirs = t.snapshot_dirs()
     assert len(dirs) == 8
@@ -275,13 +356,9 @@ def test_manifest_is_delta_encoded(spark, tmp_path):
     for k, s in enumerate(t.snapshots()):
         assert t.snapshot_dirs(s["id"]) == dirs[: k + 1]
     assert t.read(spark, snapshot_id=3).count() == 3  # time travel intact
-    # rollback pops tail records; surviving chains still resolve
-    t.rollback_trailing(lambda m: m.get("iteration", -1) >= 6)
-    assert t.snapshot_dirs() == dirs[:6]
-    assert t.read(spark).count() == 6
     # read_since over the delta chain still yields only the new dirs
     cur, delta = t.read_since(spark, t.snapshots()[2]["id"])
-    assert delta.count() == 3
+    assert delta.count() == 5
 
 
 def test_reader_full_sync_spares_racing_commit_links(spark, tmp_path):
@@ -339,54 +416,6 @@ def test_reader_full_sync_spares_racing_commit_links(spark, tmp_path):
     assert spark.read.parquet(sd).count() == 6
     marker = json.load(open(os.path.join(sd, "_synced")))
     assert set(marker["dirs"]) <= set(t.snapshot_dirs())
-
-
-def test_commit_sync_skips_noop_marker_rewrite(spark, tmp_path):
-    """mark_durable with nothing new must not rewrite the _synced marker
-    (the crawl loop calls it on several tables every iteration entry —
-    a no-op rewrite per call re-adds the very I/O the incremental sync
-    exists to avoid)."""
-    from crawl4ai_spark.sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    t.append(spark.range(3).toDF("id"))
-    t.stream(spark)
-    marker = os.path.join(t._stream_path, "_synced")
-    st0 = os.stat(marker)
-    t.mark_durable()  # barrier already current, mirror already synced
-    t.mark_durable()
-    st1 = os.stat(marker)
-    assert (st0.st_mtime_ns, st0.st_ino) == (st1.st_mtime_ns, st1.st_ino)
-    t.append(spark.range(3, 6).toDF("id"))  # a real commit DOES advance it
-    assert os.stat(marker).st_mtime_ns > st0.st_mtime_ns
-
-
-def test_read_since_durable_only_raises_on_rebuilt_table(spark, tmp_path):
-    """A durable-only cursor above the table's current tip means the
-    table was rebuilt under the caller. That must raise the same
-    rebuilt-table error as the non-durable path — holding (cursor, None)
-    would stall the tailer forever with no signal, then alias onto an
-    unrelated snapshot once ids grew past the stale cursor."""
-    import shutil
-
-    from crawl4ai_spark.sources.snapshots import SnapshotTable
-
-    root = str(tmp_path / "tbl")
-    t = SnapshotTable(root)
-    for i in range(5):
-        t.append(spark.range(i, i + 1).toDF("id"))
-    cur, _ = t.read_since(spark, None, durable_only=True)
-    assert cur == 5
-    shutil.rmtree(root)  # the table is rebuilt from scratch...
-    t2 = SnapshotTable(root)
-    t2.append(spark.range(9).toDF("id"), durable=False)  # ...provisionally
-    with pytest.raises(ValueError, match="rebuilt"):
-        t2.read_since(spark, cur, durable_only=True)
-    # the legitimate hold (cursor known, merely ahead of the barrier)
-    # still holds: a non-durable read cursors onto snapshot 1
-    nd_cur, _ = t2.read_since(spark, None)
-    held, nothing = t2.read_since(spark, nd_cur, durable_only=True)
-    assert (held, nothing) == (nd_cur, None)
 
 
 def test_build_bloom_hash_col_matches_string_path(spark):
@@ -468,25 +497,6 @@ def test_expire_snapshots_append_only_keeps_data_compacts_manifest(
     # instead of silently re-delivering
     with pytest.raises(ValueError, match="not found"):
         t.read_since(spark, 2)
-
-
-def test_expire_snapshots_never_crosses_stream_barrier(spark, tmp_path):
-    """Provisional (non-durable) records must stay individually
-    resolvable: folding one into the anchor would let the vanished-
-    barrier fallback degrade to the tip and deliver rows a rollback
-    could still retract."""
-    from crawl4ai_spark.sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(str(tmp_path / "tbl"))
-    t.append(spark.range(2).toDF("id"))  # durable: barrier = 1
-    t.append(spark.range(2, 4).toDF("id"), durable=False)
-    t.append(spark.range(4, 6).toDF("id"), durable=False)
-    # keep_last=1 would cut at the tip, but the barrier pins snapshot 1
-    assert t.expire_snapshots(keep_last=1) == 0
-    assert len(t.snapshots()) == 3
-    t.mark_durable()
-    assert t.expire_snapshots(keep_last=1) == 2
-    assert t.read(spark).count() == 6
 
 
 def test_failed_iteration_releases_caches_and_bloom(spark, pages):

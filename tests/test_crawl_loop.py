@@ -397,8 +397,7 @@ def test_stream_mirror_is_manifest_driven(spark, tmp_path):
     between the publish rename and the manifest commit, seconds ago —
     can never be delivered (the old data-* glob source had a documented
     300 s residual window here). Writer-side commits keep the mirror in
-    sync without another stream() call, and rollback_trailing prunes the
-    rolled-back dirs' links."""
+    sync without another stream() call."""
     import glob as _glob
     import os
 
@@ -408,8 +407,8 @@ def test_stream_mirror_is_manifest_driven(spark, tmp_path):
     df = spark.range(5).withColumnRenamed("id", "v")
     t.append(df, {"iteration": 0})
 
-    # publish-rename crash, NOT backdated: fresh debris the age-gated
-    # sweep must spare but the stream must still never deliver
+    # publish-rename crash, NOT backdated: fresh debris the read path
+    # leaves alone but the stream must still never deliver
     staged = t._write_data(spark.range(100, 103).withColumnRenamed("id", "v"))
     orphan = "data-" + staged[len(".staging-"):]
     os.replace(os.path.join(t.root, staged), os.path.join(t.root, orphan))
@@ -426,15 +425,11 @@ def test_stream_mirror_is_manifest_driven(spark, tmp_path):
         if not f.startswith(("_", "."))
     )
     assert not any(f.startswith(orphan) for f in os.listdir(mirror))
-    assert os.path.exists(os.path.join(t.root, orphan))  # debris spared (young)
+    assert os.path.exists(os.path.join(t.root, orphan))  # readers never sweep
 
     # a writer-side commit syncs the live mirror with NO further stream()
     t.append(spark.range(10, 14).withColumnRenamed("id", "v"), {"iteration": 1})
     assert spark.read.schema(src.schema).parquet(mirror).count() == 9
-
-    # rollback prunes the rolled-back iteration's links from the mirror
-    t.rollback_trailing(lambda m: m.get("iteration", -1) >= 1)
-    assert spark.read.schema(src.schema).parquet(mirror).count() == 5
     surviving = set(t.snapshot_dirs())
     assert {
         f.split("__", 1)[0]

@@ -995,6 +995,70 @@ def test_compact_minhash_tables_folds_generations(spark, sf_dir):
     os.remove(pend)
 
 
+def test_minhash_tables_survive_a_process_restart(spark, sf_dir, tmp_path):
+    """The session catalog is in-memory while the warehouse directory
+    persists, so tables written by another process have files but no
+    catalog entry here. The readers register the entry over the files
+    with the bucket spec from the params sidecar: the pairs equal the
+    writer's, and the band_key self-join stays exchange-free. A table
+    with no sidecar is refused by name."""
+    import json
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import uuid
+
+    from crawl4ai_spark.datapipe.dedup import (
+        _drop_table,
+        _table_location,
+        minhash_pairs_from_tables,
+    )
+
+    prefix = f"t_restart_{uuid.uuid4().hex[:8]}"
+    orphan = f"{prefix}x"
+    out = tmp_path / "pairs.json"
+    writer = f"""
+import json
+from pyspark.sql import functions as F
+from crawl4ai_spark.session import get_spark
+from crawl4ai_spark.datapipe.dedup import (
+    minhash_pairs_from_tables, write_minhash_tables,
+)
+spark = get_spark(app_name="minhash-writer", cores=2, shuffle_partitions=4)
+docs = (spark.read.parquet({sf_dir!r} + "/documents.parquet")
+        .select("doc_id", "text").filter("doc_id < 60"))
+write_minhash_tables(docs, "doc_id", "text", {prefix!r}, hash_fn=F.xxhash64,
+                     buckets=4)
+pairs = [list(r) for r in minhash_pairs_from_tables(spark, {prefix!r}).collect()]
+json.dump(pairs, open({str(out)!r}, "w"))
+spark.stop()
+"""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_WAREHOUSE=spark.conf.get("spark.sql.warehouse.dir"),
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    try:
+        subprocess.run([sys.executable, "-c", writer], cwd=repo, env=env,
+                       check=True, timeout=600)
+        expected = {tuple(r) for r in json.load(open(out))}
+        assert expected
+        assert not spark.catalog.tableExists(f"{prefix}_bands")
+        got = minhash_pairs_from_tables(spark, prefix)
+        assert {tuple(r) for r in got.collect()} == expected
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "hashpartitioning(band_key" not in plan
+        # the same files under a name whose sidecar is missing
+        shutil.copytree(_table_location(spark, f"{prefix}_bands"),
+                        _table_location(spark, f"{orphan}_bands"))
+        with pytest.raises(ValueError, match=f"{orphan}_bands"):
+            minhash_pairs_from_tables(spark, orphan)
+    finally:
+        for name in (f"{prefix}_shingles", f"{prefix}_bands", f"{orphan}_bands"):
+            _drop_table(spark, name)
+
+
 def test_minhash_compaction_crash_recovery(spark, sf_dir):
     """The bucketed MinHash tables compact through the same marker swap
     as the partitioned tables, so every crash window recovers from the

@@ -49,58 +49,63 @@ def test_expire_seen_recrawls_and_preserves_survivors(spark, pages):
     }
     assert survivors == seen_before & frontier_urls  # exactly the pending
     assert run._seen_filter is None  # blooms cannot delete → rebuild
+    # crash-resume safety, made to bite: run the roll-forward a resume
+    # actually performs and assert it does NOT re-commit the last
+    # iteration's seen append over the expiry replace — that append is
+    # no longer in the current snapshot, and re-committing it would bring
+    # the expired keys back
+    resumed = CrawlRun(
+        spark, pages, build_robots(spark), build_seeds(spark, 2), wd, cfg
+    )
+    resumed._roll_forward()
+    assert {
+        r.url_norm for r in resumed.seen().select("url_norm").collect()
+    } == survivors
     # continue crawling: rediscovered expired urls must be RE-crawled
     run.run(max_iterations=2)
     res = run.results().select("url").collect()
     urls = [r.url for r in res]
     assert len(urls) > n_results_before
     assert len(urls) > len(set(urls)), "no url was re-crawled after expiry"
-    # crash-resume safety, made to bite: run the reconciliation a resume
-    # actually performs (rollback_trailing against the WAL tip) and
-    # assert it does NOT roll the expiry replace back — a replace
-    # mistagged at/past the next iteration would be popped here and the
-    # seen set would revert
-    resumed = CrawlRun(
-        spark, pages, build_robots(spark), build_seeds(spark, 2), wd, cfg
-    )
-    post = {r.url_norm for r in run.seen().select("url_norm").collect()}
-    resumed._reconcile(resumed.state()["iteration"])
-    post_reconcile = {
-        r.url_norm for r in resumed.seen().select("url_norm").collect()
-    }
-    assert post_reconcile == post
 
 
-def test_expire_seen_reconciles_crashed_iteration_first(spark, pages):
-    """A crashed iteration can leave an orphan seen append (committed
-    seen, never reached the frontier WAL tip). expire_seen must roll it
-    back BEFORE filtering — otherwise the orphan rows bake into the
-    rollback-proof replace and the re-run iteration's candidates
-    anti-join away against them: URLs silently never crawled."""
-    wd = tempfile.mkdtemp(prefix="expire_orphan_")
+def test_expire_seen_reconciles_crashed_iteration_first(spark, pages, monkeypatch):
+    """A crash after an iteration's frontier commit can leave its seen
+    append staged but not yet committed. expire_seen must roll it forward
+    BEFORE filtering: otherwise the replace filters a seen set missing
+    those keys (their URLs would be crawled again) and its orphan sweep
+    deletes the staged dir the frontier's apply record still names."""
+    import os
+
+    wd = tempfile.mkdtemp(prefix="expire_pending_")
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 2), wd, _config()
     )
     run.run(max_iterations=2)
-    nxt = run.state()["iteration"]
-    # simulate the crash window: a seen append tagged with the iteration
-    # about to run, committed non-durable (exactly what the two-phase
-    # commit leaves behind when the frontier replace never lands)
-    orphan = run.spark.createDataFrame(
-        [("https://orphan.example/x", 1234567, 1, 99)],
-        "url_norm string, url_hash long, depth int, first_iter int",
-    )
-    run.t_seen.append(orphan, {"iteration": nxt}, durable=False)
+    # the crash window: the frontier commit landed, no other table did
+    with monkeypatch.context() as mp:
+        mp.setattr(CrawlRun, "_apply", lambda self, meta: None)
+        assert not run.run_iteration()["done"]
+    staged, mode = run.t_frontier.snapshot_meta()["apply"]["seen"]
+    pending = {
+        r.url_norm
+        for r in spark.read.parquet(os.path.join(run.t_seen.root, staged))
+        .select("url_norm").collect()
+    }
+    assert mode == "append" and pending
+    assert not pending & {r.url_norm for r in run.seen().collect()}
     # expire with a condition that matches REAL rows (the crawled seeds)
-    # but not the orphan: the replace path runs, and without the
-    # reconcile-first fix the orphan would survive into the replace
+    # but none of the pending ones: the replace path runs over the seen
+    # set with the pending append already committed
     out = run.expire_seen(F.col("first_iter") <= 0)
     assert out["n_expired"] > 0
     seen_urls = {r.url_norm for r in run.seen().select("url_norm").collect()}
-    assert "https://orphan.example/x" not in seen_urls, (
-        "orphan seen rows laundered into the expiry replace"
-    )
+    assert pending <= seen_urls, "pending seen append lost by the expiry"
     assert out["n_seen"] == len(seen_urls)
+    # the next iteration's roll-forward finds every entry committed
+    assert not run.run_iteration()["done"]
+    res = run.results()
+    assert res.groupBy("visit_order").count().filter("count > 1").count() == 0
     # consecutive expiries report the EXACT survivor count, not the
     # historical-upper-bound subtraction
     out2 = run.expire_seen(F.lit(True))
