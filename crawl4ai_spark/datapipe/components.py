@@ -18,8 +18,8 @@ Two algorithms, same exact output (differential-tested):
 - LARGE-STAR/SMALL-STAR CONTRACTION (Kiveris et al., "Connected
   Components in MapReduce and Beyond", SoCC'14) — O(log n) rounds on ANY
   graph shape, including the pathological chains where propagation's
-  round cap trips. ``algorithm='auto'`` (the default) runs propagation
-  and falls back to the contraction on cap overrun.
+  round cap trips. ``connected_components`` runs propagation and falls
+  back to the contraction on cap overrun.
 Every round localCheckpoints its state table: it truncates the
 exponentially-growing lineage AND decouples round n+1 from recomputing
 rounds 1..n.
@@ -36,18 +36,16 @@ from pyspark.sql import functions as F
 from crawl4ai_spark.datapipe.dedup import HOT_BUCKET_CAP, minhash_dedup_pairs
 
 
-# auto mode probes label propagation for this many rounds before falling
-# back to star contraction: near-duplicate graphs are quasi-cliques that
-# converge in 2-4 rounds, so a graph still unconverged after 8 is
-# chain-shaped — exactly where the O(log n) contraction wins. Without the
-# lower probe cap, auto paid the FULL max_rounds (25 joins + groupBys +
-# checkpoints) of doomed propagation before the fallback even started.
+# connected_components probes label propagation for this many rounds
+# before falling back to star contraction: near-duplicate graphs are
+# quasi-cliques that converge in 2-4 rounds, so a graph still unconverged
+# after 8 is chain-shaped — exactly where the O(log n) contraction wins.
 AUTO_PROBE_ROUNDS = 8
 
 
 class ConvergenceError(RuntimeError):
     """Label propagation exceeded its round cap (graph diameter too
-    large). A distinct type so ``algorithm='auto'`` falls back to star
+    large). A distinct type so ``connected_components`` falls back to star
     contraction ONLY for this case — any other RuntimeError from the
     rounds (library failures, future guards) propagates to the caller
     instead of being masked by a silent full re-run."""
@@ -57,36 +55,20 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_rounds: int = 25,
-    algorithm: str = "auto",
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``; component =
     min node id of the connected component.
 
-    ``algorithm``:
-    - ``"label"`` — min-label propagation (below); rounds = graph diameter.
-    - ``"star"`` — large-star/small-star contraction
-      (``connected_components_star``); O(log n) rounds on ANY graph shape.
-    - ``"auto"`` (default) — label propagation probed for
-      ``min(max_rounds, AUTO_PROBE_ROUNDS)`` rounds, falling back to star
-      contraction on cap overrun (near-duplicate graphs are quasi-cliques
-      where label propagation converges in a handful of cheaper rounds; a
-      graph that hasn't converged by then is chain-shaped, where paying
-      the rest of the propagation budget is pure waste before the
-      contraction runs anyway)."""
-    if algorithm not in ("auto", "label", "star"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}: expected 'auto', 'label' or "
-            "'star'"
-        )
-    if algorithm == "star":
-        return connected_components_star(edges, src, dst)
-    cap = max_rounds if algorithm == "label" else min(max_rounds, AUTO_PROBE_ROUNDS)
+    Label propagation is probed for ``AUTO_PROBE_ROUNDS`` rounds, falling
+    back to star contraction (``connected_components_star``, O(log n)
+    rounds on ANY graph shape) if it has not converged by then:
+    near-duplicate graphs are quasi-cliques where propagation converges
+    in a handful of cheaper rounds, and a graph that hasn't is
+    chain-shaped, where more propagation rounds are pure waste before the
+    contraction runs anyway."""
     try:
-        return _connected_components_label(edges, src, dst, cap)
+        return _connected_components_label(edges, src, dst, AUTO_PROBE_ROUNDS)
     except ConvergenceError:
-        if algorithm == "label":
-            raise
         return connected_components_star(edges, src, dst)
 
 
@@ -130,7 +112,7 @@ def _connected_components_label(
             return labels
     raise ConvergenceError(
         f"connected_components did not converge in {max_rounds} rounds — "
-        "graph diameter exceeds the cap; algorithm='auto' falls back to "
+        "graph diameter exceeds the cap; connected_components falls back to "
         "connected_components_star for such chain-shaped graphs"
     )
 

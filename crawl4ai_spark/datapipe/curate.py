@@ -3,7 +3,7 @@ pipeline as ONE composition of the datapipe kernels, in the published
 stage order (FineWeb / CCNet / Gopher lineage):
 
   1. language ID gate                     (textstats.lang_id_col)
-  2. Gopher quality gate                  (webquality.gopher_metrics/gate)
+  2. Gopher quality gate                  (webquality.gopher_metrics_*/gate)
   3. Gopher full repetition gate          (webquality.gopher_repetition_*)
   4. C4 line clean + page gate            (webquality.c4_clean_col)
   4b. (optional) model-based quality gate (qualityclf.score_quality)

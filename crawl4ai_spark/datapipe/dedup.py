@@ -34,7 +34,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawl4ai_spark.datapipe.textstats import fingerprint_col, portable_hash, tokens_col
-from crawl4ai_spark.storage import read_sidecar, rewrite_table, write_sidecar
+from crawl4ai_spark.storage import (
+    discard_rewrite_debris,
+    read_sidecar,
+    recover_rewrite,
+    rewrite_table,
+    write_sidecar,
+)
 
 # LSH band buckets larger than this are DIVERTED from the quadratic
 # self-join to a linear two-layer star expansion (see
@@ -392,14 +398,17 @@ def _table_location(spark, name: str) -> str:
 def _drop_table(spark, name: str) -> None:
     """DROP IF EXISTS plus location cleanup: the warehouse directory
     outlives the in-memory catalog, so a fresh session's overwrite would
-    otherwise fail with LOCATION_ALREADY_EXISTS on the orphaned dir."""
+    otherwise fail with LOCATION_ALREADY_EXISTS on the orphaned dir. A
+    crashed compaction's marker and copies beside the dir go with it."""
     import os
     import shutil
 
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     loc = _table_location(spark, name)
-    if os.path.dirname(loc) and os.path.exists(loc):
-        shutil.rmtree(loc, ignore_errors=True)
+    if os.path.dirname(loc):
+        if os.path.exists(loc):
+            shutil.rmtree(loc, ignore_errors=True)
+        discard_rewrite_debris(loc)
 
 
 def _hash_fn_name(hash_fn) -> str:
@@ -479,11 +488,14 @@ def _minhash_table(spark, name_prefix: str, table: str) -> str:
     tables finds their files but no entry. The entry is recreated over
     the files with the bucket spec ``write_minhash_tables`` used (the
     count from the params sidecar): a plain parquet read would lose the
-    bucketing, and every bucket-aligned join would shuffle."""
+    bucketing, and every bucket-aligned join would shuffle. A compaction
+    that crashed between its renames left no directory, so it is
+    recovered first."""
     import os
 
     name = f"{name_prefix}_{table}"
     loc = _table_location(spark, name)
+    recover_rewrite(loc)
     if spark.catalog.tableExists(name) or not os.path.isdir(loc):
         return name
     params = read_minhash_params(spark, name_prefix)

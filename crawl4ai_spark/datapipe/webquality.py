@@ -13,17 +13,18 @@ expression with an exact DuckDB-SQL twin in the contract oracle — no UDFs,
 so the whole gate runs inside whole-stage codegen, shuffle-free, and scales
 linearly with cores. The per-document repetition metrics that are
 quadratic in the number of lines/n-grams (dup_line_char_frac,
-top_ngram_frac) stay O(L²) with L = lines-per-document (tens), never
-corpus-sized.
+top_2gram_frac) stay O(L²) with L = lines-per-document (tens), never
+corpus-sized. Both metric suites are frame functions
+(``gopher_metrics_frame``, ``gopher_repetition_frame``) that stage the
+word, line and n-gram arrays as columns once per row; the gates
+(``gopher_gate_col``, ``gopher_repetition_gate_col``) read their output.
 
 Documented divergences from the papers (kept deliberately, both engines
 compute the same value):
 - stop-word gate counts distinct hits from the paper's 8-word list
   ("the, be, to, of, and, that, have, with"); the paper requires ≥ 2.
 (The quality gate's top-2-gram screen uses the paper-exact CHARACTER
-fraction — ``top_ngram_char_frac_col``, the same machinery as the full
-repetition suite; the legacy token-fraction form survives only as the
-explicitly-named ``top_ngram_token_frac_col`` for callers that want it.)
+fraction, the same machinery as the full repetition suite.)
 """
 
 from __future__ import annotations
@@ -105,107 +106,41 @@ def stopword_types_col(
     )
 
 
-def dup_line_frac_col(text: Column | str) -> Column:
-    """Fraction of lines that are repeats of an earlier line (the
-    line-array instance of ``dup_frac_from_parts`` — one formula)."""
-    return dup_frac_from_parts(lines_col(text))
-
-
-def dup_line_char_frac_col(text: Column | str) -> Column:
-    """Fraction of (non-empty-line) characters inside lines that occur more
-    than once — the paper's definition: ALL copies of a duplicated line
-    count, not just the extras (``dup_char_frac_from_parts`` over the line
-    array — one formula). O(L²) per document via a nested array lambda; L
-    is lines-per-document, so this never touches corpus scale."""
-    return dup_char_frac_from_parts(lines_col(text))
-
-
-def top_ngram_token_frac_col(text: Column | str, n: int = 2) -> Column:
-    """Token fraction covered by the most frequent word n-gram:
-    max_count · n / n_words — a legacy alternative to the paper's
-    char-based form (``top_ngram_char_frac_col``, which ``gopher_metrics``
-    uses). O(G²) in grams-per-document."""
-    ws = F.transform(words_col(text), F.lower)
-    n_w = F.size(ws)
-    grams = F.transform(
-        F.sequence(F.lit(1), n_w - (n - 1)),
-        lambda i: F.array_join(F.slice(ws, i, n), " "),
-    )
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(grams),
-            lambda g: F.size(F.filter(grams, lambda x: x == g)),
-        )
-    )
-    return F.when(
-        n_w >= n, top.cast("double") * n / n_w.cast("double")
-    ).otherwise(F.lit(0.0))
-
-
-def _gopher_struct(
-    c: Column, gw: Column, gwl: Column, gls: Column, gtot: Column, gg2: Column
-) -> Column:
-    """THE Gopher screening-metric formula, written once: (raw text, word
-    array, lowered words, lines, lowered-token chars, guarded 2-grams) →
-    the metrics struct. ``gopher_metrics`` feeds it inline expressions;
-    ``gopher_metrics_frame`` feeds it staged columns — so the two paths
-    cannot drift (a formula tweak lands in both or neither)."""
-    return F.struct(
-        F.size(gw).cast("long").alias("n_words"),
-        F.round(mean_word_len_col(c, ws=gw), 6).alias("mean_word_len"),
-        F.round(symbol_word_ratio_col(c, ws=gw), 6).alias("symbol_word_ratio"),
-        F.round(alpha_word_ratio_col(c, ws=gw), 6).alias("alpha_word_ratio"),
-        stopword_types_col(c, lower_ws=gwl).alias("stopword_types"),
-        F.round(dup_frac_from_parts(gls), 6).alias("dup_line_frac"),
-        F.round(dup_char_frac_from_parts(gls), 6).alias("dup_line_char_frac"),
-        # paper-exact char fraction (Table A1 row 12), shared with the
-        # full repetition suite below
-        F.round(_top_frac_from_grams(gg2, gtot, 2), 6).alias("top_2gram_frac"),
-    )
-
-
-def gopher_metrics(text: Column | str) -> Column:
-    """All Gopher screening metrics as one struct column (rounded to 6 dp
-    where fractional, so the oracle compare is exact). Single-Column form —
-    each metric's tokenization is inlined (Catalyst does not de-duplicate
-    across lambda boundaries); prefer ``gopher_metrics_frame`` in hot
-    paths, which stages the arrays once. Both produce the identical struct
-    via ``_gopher_struct``."""
-    c = _c(text)
-    gw = words_col(c)
-    gwl = F.transform(gw, F.lower)
-    return _gopher_struct(
-        c, gw, gwl, lines_col(c), _token_chars(gwl), grams_guarded_col(gwl, 2)
-    )
-
-
 def gopher_metrics_frame(df, text_col: str, struct_col: str = "m"):
-    """Staged equivalent of ``select(gopher_metrics(text_col))``: the word /
-    lowered-word / line / 2-gram arrays are materialized as real columns
-    first so each is computed once per row. The single-Column
-    ``gopher_metrics`` inlines the tokenization into every metric lambda,
-    which Catalyst neither de-duplicates across lambda boundaries nor
-    codegens compactly (same pathology, and same fix, as
+    """All Gopher screening metrics as one struct column ``struct_col``
+    added to ``df`` (rounded to 6 dp where fractional, so the oracle
+    compare is exact). The word / lowered-word / line / 2-gram arrays are
+    staged as real columns first, so each is computed once per row:
+    inlined into every metric lambda, Catalyst would neither de-duplicate
+    them across lambda boundaries nor codegen them compactly (same fix as
     ``gopher_repetition_frame``). Still shuffle-free — a chain of per-row
-    projections. Returns ``df`` + one struct column with the exact
-    ``gopher_metrics`` fields."""
+    projections."""
     c = F.col(text_col)
+    gw, gwl, gls, gtot, gg2 = (
+        F.col(n) for n in ("_gw", "_gwl", "_gls", "_gtot", "_gg2")
+    )
     staged = (
         df.withColumn("_gw", words_col(c))
-        .withColumn("_gwl", F.transform(F.col("_gw"), F.lower))
+        .withColumn("_gwl", F.transform(gw, F.lower))
         .withColumn("_gls", lines_col(c))
-        .withColumn("_gtot", _token_chars(F.col("_gwl")))
-        .withColumn("_gg2", grams_guarded_col(F.col("_gwl"), 2))
+        .withColumn("_gtot", _token_chars(gwl))
+        .withColumn("_gg2", grams_guarded_col(gwl, 2))
     )
     out = staged.withColumn(
         struct_col,
-        _gopher_struct(
-            c,
-            F.col("_gw"),
-            F.col("_gwl"),
-            F.col("_gls"),
-            F.col("_gtot"),
-            F.col("_gg2"),
+        F.struct(
+            F.size(gw).cast("long").alias("n_words"),
+            F.round(mean_word_len_col(c, ws=gw), 6).alias("mean_word_len"),
+            F.round(symbol_word_ratio_col(c, ws=gw), 6).alias(
+                "symbol_word_ratio"
+            ),
+            F.round(alpha_word_ratio_col(c, ws=gw), 6).alias("alpha_word_ratio"),
+            stopword_types_col(c, lower_ws=gwl).alias("stopword_types"),
+            F.round(dup_frac_from_parts(gls), 6).alias("dup_line_frac"),
+            F.round(dup_char_frac_from_parts(gls), 6).alias("dup_line_char_frac"),
+            # paper-exact char fraction (Table A1 row 12), shared with the
+            # full repetition suite below
+            F.round(_top_frac_from_grams(gg2, gtot, 2), 6).alias("top_2gram_frac"),
         ),
     )
     return out.drop("_gw", "_gwl", "_gls", "_gtot", "_gg2")
@@ -224,8 +159,8 @@ def gopher_gate_col(
     max_dup_line_char_frac: float = 0.2,
     max_top_2gram_frac: float = 0.2,
 ) -> Column:
-    """The Gopher keep/reject decision over a ``gopher_metrics`` struct;
-    defaults are the paper's published thresholds."""
+    """The Gopher keep/reject decision over a ``gopher_metrics_frame``
+    struct; defaults are the paper's published thresholds."""
     m = metrics
     return (
         (m["n_words"] >= min_words)
@@ -300,27 +235,6 @@ def _token_chars(ws: Column) -> Column:
     return F.aggregate(ws, F.lit(0).cast("long"), lambda a, w: a + F.length(w))
 
 
-def top_ngram_char_frac_col(text: Column | str, n: int) -> Column:
-    """Paper rows 12-14: fraction of token characters covered by the most
-    frequent word n-gram = max_g(count(g) · token_chars(g)) / total token
-    chars. Single-Column instance of ``_top_frac_from_grams`` — one
-    formula (the guarded gram array is empty below n tokens, which is the
-    same zero the old inline n_w ≥ n condition produced)."""
-    ws = F.transform(words_col(text), F.lower)
-    return _top_frac_from_grams(grams_guarded_col(ws, n), _token_chars(ws), n)
-
-
-def dup_ngram_char_frac_col(text: Column | str, n: int) -> Column:
-    """Paper rows 15-20: fraction of token characters covered by ANY word
-    n-gram that occurs more than once. Coverage is positional (overlapping
-    duplicated grams never double-count a token): token j is covered iff
-    some duplicated gram starts in [j-n+1, j]. Single-Column instance of
-    ``_dup_frac_from_flags`` — one formula."""
-    ws = F.transform(words_col(text), F.lower)
-    flags = dupflags_col(grams_guarded_col(ws, n))
-    return _dup_frac_from_flags(ws, flags, _token_chars(ws), n)
-
-
 def grams_guarded_col(ws: Column, n: int) -> Column:
     """n-grams of a word array, empty (not descending!) when the document
     is shorter than n tokens."""
@@ -376,13 +290,14 @@ def _dup_frac_from_flags(
 
 
 def gopher_repetition_frame(df, text_col: str, out_prefix: str = ""):
-    """Add all 13 Table A1 repetition metrics as columns. Unlike the
-    single-Column forms below, the word/gram/dup-flag arrays are STAGED as
-    real columns first, so each is computed once per row — the
-    single-expression form inlines the gram construction into every
-    lambda, which Catalyst neither de-duplicates across lambda boundaries
-    nor codegens compactly (a 13-metric struct stalls compilation).
-    Still shuffle-free: a chain of per-row projections."""
+    """Add all 13 Table A1 repetition metrics (rows 9-20) as columns:
+    line/paragraph dup fractions by count and by chars, top 2/3/4-gram
+    char fractions, dup 5..10-gram char fractions, rounded to 6 dp so the
+    oracle compare is exact. The word/gram/dup-flag arrays are STAGED as
+    real columns first, so each is computed once per row — inlined into
+    every lambda, the gram construction is neither de-duplicated across
+    lambda boundaries nor codegened compactly (a 13-metric struct stalls
+    compilation). Still shuffle-free: a chain of per-row projections."""
     ws = F.transform(words_col(F.col(text_col)), F.lower)
     staged = df.withColumn("_ws", ws).withColumn("_tot", _token_chars(F.col("_ws")))
     for n in (2, 3, 4, 5, 6, 7, 8, 9, 10):
@@ -421,37 +336,9 @@ def gopher_repetition_frame(df, text_col: str, out_prefix: str = ""):
     return out.drop(*drop)
 
 
-def gopher_repetition_metrics(text: Column | str) -> Column:
-    """The paper's full repetition screen (Table A1 rows 9-20) as one
-    struct: line/paragraph dup fractions (by count and by chars), top
-    2/3/4-gram char fractions, dup 5..10-gram char fractions. Rounded to
-    6 dp so the oracle compare is exact."""
-    c = _c(text)
-    ls = lines_col(c)
-    ps = paragraphs_col(c)
-    fields = [
-        F.round(dup_frac_from_parts(ls), 6).alias("dup_line_frac"),
-        F.round(dup_char_frac_from_parts(ls), 6).alias("dup_line_char_frac"),
-        F.round(dup_frac_from_parts(ps), 6).alias("dup_para_frac"),
-        F.round(dup_char_frac_from_parts(ps), 6).alias("dup_para_char_frac"),
-    ]
-    for n in (2, 3, 4):
-        fields.append(
-            F.round(top_ngram_char_frac_col(c, n), 6).alias(
-                f"top_{n}gram_char_frac"
-            )
-        )
-    for n in range(5, 11):
-        fields.append(
-            F.round(dup_ngram_char_frac_col(c, n), 6).alias(
-                f"dup_{n}gram_char_frac"
-            )
-        )
-    return F.struct(*fields)
-
-
 def gopher_repetition_gate_col(metrics: Column) -> Column:
-    """Keep/reject over ``gopher_repetition_metrics`` with the paper's
+    """Keep/reject over a struct of ``gopher_repetition_frame``'s 13
+    columns (un-prefixed field names) with the paper's
     published thresholds (Table A1): dup line/para frac ≤ 0.30/0.30,
     dup line/para char frac ≤ 0.20/0.20, top 2/3/4-gram ≤ 0.20/0.18/0.16,
     dup 5..10-gram ≤ 0.15/0.14/0.13/0.12/0.11/0.10."""

@@ -23,7 +23,10 @@ provides the minimal equivalent semantics on plain parquet:
   later, idempotently: a writer that records its staged dir names in
   one table's commit can roll the other tables' commits forward after a
   crash (the crawl loop's protocol, ``plans/crawl.py``). No commit is
-  ever retracted, so readers and ``stream()`` never see rows vanish.
+  ever retracted, so readers and ``stream()`` never see rows vanish;
+- ``stream()`` tails an append-only table through ``stream/``, a
+  hardlink mirror of the committed dirs that every commit brings up to
+  date after its manifest commit.
 
 On a real cluster this class is swapped for Iceberg tables (writeTo(...)
 .append() / MERGE INTO); the crawl loop only touches this narrow interface.
@@ -37,6 +40,10 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+# the ``stream/`` mirror's sentinel prefix: ``.linked-<dir>`` marks a dir
+# whose files are all linked (hidden from Spark's file source)
+_LINKED = ".linked-"
 
 
 class SnapshotTable:
@@ -185,10 +192,7 @@ class SnapshotTable:
         ] + snaps[cut + 1:]
         self._commit_manifest(m)
         self._sweep_orphans(keep=set(), manifest=m)
-        # a stream mirror only exists on (append-only) streamed tables,
-        # where expiry frees nothing — but a full writer-side sync is
-        # cheap and heals any stale links if one exists anyway
-        self._sync_stream_dir(full=True, manifest=m)
+        self._sync_stream_dir(manifest=m)
         return cut
 
     def _sweep_orphans(self, keep: set[str], manifest: dict | None = None) -> None:
@@ -208,9 +212,8 @@ class SnapshotTable:
 
         ``manifest``: commit-path callers pass the manifest dict already
         in hand, skipping a redundant O(total-dirs) JSON parse per sweep
-        (same rationale as ``_sync_stream_dir``'s parameter — the
-        delta-encoded manifest exists to keep per-commit driver cost flat
-        on 10k-iteration crawls)."""
+        (the delta-encoded manifest exists to keep per-commit driver cost
+        flat on 10k-iteration crawls)."""
         m = manifest if manifest is not None else self._read_manifest()
         referenced = set(keep) | self._all_referenced(m)
         for name in os.listdir(self.root):
@@ -266,13 +269,12 @@ class SnapshotTable:
         meta: dict | None,
     ) -> int:
         # publish staged dirs: rename .staging-<hex> -> data-<hex> (atomic
-        # on POSIX) immediately before the manifest commit. The window in
-        # which an uncommitted data-* dir can exist (and pollute stream()'s
-        # glob on a crash) is now the instant between this rename and the
-        # manifest replace — and _sweep_orphans erases any debris a crash
-        # in that instant (or mid-write) left behind, on the next commit,
-        # UNCONDITIONALLY: under the serial-writer contract the committing
-        # writer is the only live writer, so no age protection is needed.
+        # on POSIX) immediately before the manifest commit. An uncommitted
+        # data-* dir exists only if a crash lands between this rename and
+        # the manifest replace, and _sweep_orphans erases such debris (and
+        # a mid-write crash's) on the next commit, UNCONDITIONALLY: under
+        # the serial-writer contract the committing writer is the only
+        # live writer, so no age protection is needed.
         # (keep= only needs THIS commit's dirs: the base snapshot's dirs
         # are already manifest-referenced and the sweep spares those.)
         self._sweep_orphans(keep=set(new_dirs), manifest=manifest)
@@ -321,126 +323,62 @@ class SnapshotTable:
             shutil.copy2(src, tmp)
             os.replace(tmp, dst)
 
-    def _sync_stream_dir(
-        self,
-        create: bool = False,
-        full: bool = False,
-        prune_min_age_s: float = 0.0,
-        manifest: dict | None = None,
-    ) -> None:
+    def _sync_stream_dir(self, manifest: dict | None = None) -> None:
         """Reconcile the ``stream/`` mirror with the manifest: hardlink
-        every parquet file of the current snapshot's dirs in (named
-        ``<dir>__<file>`` — unique and stable, so the file-source
-        checkpoint never re-delivers), and on a ``full`` sync drop links
-        whose source dir no snapshot references any more. The mirror is
-        created lazily by ``stream()``;
-        until then commits skip the sync (``create=False`` no-ops), so
-        tables nobody tails pay nothing.
+        each parquet file of the current snapshot's dirs in as
+        ``<dir>__<file>`` (unique and stable, so the file-source
+        checkpoint never re-delivers a file), and delete every entry whose
+        dir the manifest no longer references. Tables nobody streams have
+        no mirror and pay one failed ``listdir`` per commit.
 
-        This is what makes ``stream()`` MANIFEST-DRIVEN: the streaming
-        file source globs the mirror, and the mirror is only ever written
-        AFTER a manifest commit, from the manifest's own dir list. Crash
-        debris — published-but-uncommitted ``data-*`` dirs, orphan
-        ``.staging-*`` dirs — can therefore never reach a stream, closing
-        the window a raw ``data-*`` glob source had. Hardlinks keep the
-        mirror O(1) in size and alive even across a sweep of its source
-        dir (the inode survives until the link is pruned).
+        The mirror is listed BEFORE the manifest is read, which makes the
+        prune exact for readers and writers alike. A link is created only
+        after the manifest commit that references its dir, and dir names
+        are uuids that are never reused, so a listed entry whose dir the
+        later-read manifest does not reference is debris, never a racing
+        commit. Commit paths pass the manifest they just wrote: the writer
+        is the only committer, so it is the newest one.
 
-        The sync is INCREMENTAL on the commit path: a ``_synced`` marker
-        (hidden from Spark's file source) records the mirrored dir list,
-        so each commit links only dirs the marker hasn't seen — O(new
-        files), not O(table files), keeping a 10k-iteration crawl's
-        per-commit cost flat. A missing marker, or one naming a dir the
-        current snapshot lacks (first sync, a crash between link phase
-        and marker write), degrades to a full link+prune pass.
-
-        ``prune_min_age_s``: the full-sync prune deletes links whose
-        source dir no manifest snapshot references. On WRITER paths
-        (``expire_snapshots``) that judgment is exact — the serial-writer
-        contract means no commit can land mid-prune. A READER-side full
-        sync (``stream()``) races live commits: its manifest read can
-        predate a commit whose link phase has already populated the
-        mirror, and pruning those fresh links while the writer's marker
-        records them as synced would silently drop the commit from the
-        stream forever. Readers therefore pass an age cutoff — a link
-        younger than the cutoff is spared. Age is judged by ``st_ctime``,
-        NOT mtime: hardlinks share the source parquet's mtime, which is
-        the file's WRITE time — under the two-phase ``stage()`` /
-        ``commit_staged`` split a dir can be committed (and linked)
-        arbitrarily long after its files were written while a sibling
-        stage finishes, so "written long ago" says nothing about "linked
-        long ago". Creating a hardlink updates the inode's ctime, so a
-        just-linked file is always ctime-young regardless of when its
-        bytes were written (the copy fallback's ctime is the copy time —
-        same property). Writers only ever ADD new uuid-named dirs, never
-        resurrect old names, so pruning genuinely old unreferenced links
-        never races anything.
-
-        ``manifest``: commit-path callers pass the manifest dict already
-        in hand, skipping a redundant O(total-dirs) JSON parse per sync
-        (the delta-encoded manifest exists to keep per-commit cost flat
-        on 10k-iteration crawls)."""
-        import time as _time
-
+        A dir counts as linked once its hidden sentinel ``.linked-<dir>``
+        exists. The sentinel is written after the dir's last file is
+        linked, so a sync cut off halfway finishes that dir the next time
+        (``_link_or_copy`` skips files already there), and each commit
+        lists only the dirs it adds."""
         sd = self._stream_path
-        if not os.path.isdir(sd):
-            if not create:
-                return
-            os.makedirs(sd, exist_ok=True)
-            full = True
+        try:
+            listed = os.listdir(sd)
+        except FileNotFoundError:
+            return
         m = manifest if manifest is not None else self._read_manifest()
-        target_dirs = self._snapshot_dirs(m, m["current"]) or []
-        marker = os.path.join(sd, "_synced")
-        synced_dirs: list[str] | None = None
-        if not full:
-            try:
-                with open(marker) as f:
-                    mdirs = json.load(f).get("dirs")
-                if isinstance(mdirs, list) and set(mdirs) <= set(target_dirs):
-                    synced_dirs = mdirs
-            except (OSError, ValueError):
-                pass
-            if synced_dirs is None:
-                full = True
-        if full:
-            synced_dirs = []
-            referenced = self._all_referenced(m)
-            cutoff = _time.time() - prune_min_age_s
-            for fn in os.listdir(sd):
-                if fn.startswith((".", "_")):
-                    continue
-                if fn.split("__", 1)[0] not in referenced:
-                    path = os.path.join(sd, fn)
-                    if prune_min_age_s > 0:
-                        try:
-                            # ctime = link-creation time (see docstring);
-                            # mtime would be the source file's WRITE time,
-                            # stale for staged-then-committed dirs
-                            if os.stat(path).st_ctime > cutoff:
-                                continue  # fresh: possibly a racing commit
-                        except OSError:
-                            continue  # vanished concurrently
-                    try:
-                        os.remove(path)
-                    except OSError:
-                        pass
-        done = set(synced_dirs)
-        new_dirs = [d for d in target_dirs if d not in done]
-        for d in new_dirs:
+        referenced = self._all_referenced(m)
+        linked = set()
+        for fn in listed:
+            sentinel = fn.startswith(_LINKED)
+            # a link, a sentinel, or a copy fallback's hidden temp file
+            d = fn[len(_LINKED):] if sentinel else fn.lstrip(".").split("__", 1)[0]
+            if not d.startswith("data-"):
+                continue  # not the mirror's (e.g. an old ``_synced`` marker)
+            if d not in referenced:
+                try:
+                    os.remove(os.path.join(sd, fn))
+                except OSError:
+                    pass
+            elif sentinel:
+                linked.add(d)
+        for d in self._snapshot_dirs(m, m["current"]) or []:
+            if d in linked:
+                continue
             src_dir = os.path.join(self.root, d)
             try:
                 names = os.listdir(src_dir)
             except OSError:
-                continue  # dir vanished (a writer's sweep) — next sync heals
+                continue  # swept by expiry since this manifest was read
             for fn in names:
                 if fn.endswith(".parquet"):
                     self._link_or_copy(
                         os.path.join(src_dir, fn), os.path.join(sd, f"{d}__{fn}")
                     )
-        tmp = marker + "." + uuid.uuid4().hex + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"dirs": target_dirs}, f)
-        os.replace(tmp, marker)
+            open(os.path.join(sd, _LINKED + d), "w").close()
 
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame | None:
         m = self._read_manifest()
@@ -469,27 +407,17 @@ class SnapshotTable:
         a processing-time trigger to tail a live crawl.
 
         The source is MANIFEST-DRIVEN: it globs the ``stream/`` mirror,
-        which ``_sync_stream_dir`` populates with hardlinks to the current
-        snapshot — written only AFTER each manifest commit, from the
-        manifest's own dir list. Crash debris (published-but-uncommitted
-        ``data-*`` dirs, orphan ``.staging-*`` dirs) therefore can never
-        reach a stream, with no age heuristics: a writer that crashes
-        between its manifest commit and the mirror sync merely DELAYS that
-        commit's delivery until the next commit or the next ``stream()``
-        call repairs the mirror — committed-but-late, never re-delivered,
-        never uncommitted-but-delivered. No commit is ever retracted, so
-        no delivered row is ever taken back. The append-only contract is
-        enforced (a table that ever saw ``replace()`` would re-emit
-        dropped dirs):
-        any snapshot whose dir set is not a superset of its predecessor's
-        raises. The read path does NOT sweep orphan data/staging dirs:
-        the mirror is manifest-driven so debris can't reach the stream
-        anyway, and a reader cannot distinguish dead debris from a LIVE
-        writer's quiescent ``stage()``d dir awaiting a slow sibling's
-        two-phase commit (that gap is unbounded by design — an age
-        heuristic here once deleted such a dir and crashed the writer's
-        later ``commit_staged``). Writers sweep on every commit; debris
-        hygiene is theirs alone."""
+        which ``_sync_stream_dir`` fills with hardlinks to the current
+        snapshot's files only AFTER each manifest commit. Crash debris
+        (published-but-uncommitted ``data-*`` dirs, orphan ``.staging-*``
+        dirs) therefore never reaches a stream, and a writer that crashes
+        between its manifest commit and the sync only delays that commit's
+        delivery until the next commit or ``stream()`` call. No commit is
+        ever retracted, so no delivered row is taken back. The append-only
+        contract is enforced: a snapshot whose dir set is not a superset of
+        its predecessor's (a ``replace()``) raises. The read path sweeps
+        no data or staging dirs: a reader cannot tell debris from a live
+        writer's ``stage()``d dir, so that hygiene is the writer's."""
         current = self.read(spark)
         if current is None:
             raise ValueError(f"cannot stream {self.root}: no committed snapshot")
@@ -511,13 +439,8 @@ class SnapshotTable:
                     f"dirs of snapshot {prev['id']} (a replace() happened) — "
                     "stream() only tails append-only tables"
                 )
-        # reader-side full sync: age-gate the prune (300 s, same cutoff as
-        # _sweep_orphans' read path) so a live writer's just-linked commit
-        # — invisible in this reader's manifest snapshot but already
-        # recorded in the writer's _synced marker — is never deleted out
-        # from under the stream (it would be skipped by every later
-        # incremental sync and silently lost)
-        self._sync_stream_dir(create=True, full=True, prune_min_age_s=300.0)
+        os.makedirs(self._stream_path, exist_ok=True)
+        self._sync_stream_dir()
         return spark.readStream.schema(current.schema).parquet(self._stream_path)
 
     def read_since(

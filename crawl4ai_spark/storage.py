@@ -108,7 +108,9 @@ def _count_data_files(path: str) -> int:
 ORPHAN_SWEEP_MIN_AGE_S = 3600
 
 
-def _sweep_orphan_compaction_dirs(path: str) -> None:
+def _sweep_orphan_compaction_dirs(
+    path: str, min_age_s: float = ORPHAN_SWEEP_MIN_AGE_S
+) -> None:
     """Remove sibling ``<name>.compacting-*`` / ``<name>.precompact-*``
     dirs left by crashed compactions. The tmp name is a fresh uuid per
     attempt, so a crash BEFORE the marker write (mid-copy, or a failed
@@ -118,7 +120,8 @@ def _sweep_orphan_compaction_dirs(path: str) -> None:
     sibling with these prefixes older than ``ORPHAN_SWEEP_MIN_AGE_S`` is
     an orphan — the marker window's tmp/old were just resolved, the names
     are unique per attempt, and the age gate excludes the one thing the
-    single-writer contract can't (another attempt started moments ago)."""
+    single-writer contract can't (another attempt started moments ago).
+    ``min_age_s=0`` sweeps every such sibling."""
     import time
 
     base = path.rstrip("/")
@@ -127,12 +130,12 @@ def _sweep_orphan_compaction_dirs(path: str) -> None:
         siblings = os.listdir(parent)
     except FileNotFoundError:
         return
-    cutoff = time.time() - ORPHAN_SWEEP_MIN_AGE_S
+    cutoff = time.time() - min_age_s
     for entry in siblings:
         if entry.startswith((f"{name}.compacting-", f"{name}.precompact-")):
             full = os.path.join(parent, entry)
             try:
-                if os.path.getmtime(full) > cutoff:
+                if min_age_s and os.path.getmtime(full) > cutoff:
                     continue
             except OSError:
                 continue
@@ -185,6 +188,29 @@ def _recover_compaction(path: str, marker: str) -> None:
     os.remove(marker)
 
 
+def recover_rewrite(path: str) -> None:
+    """Finish or roll back a rewrite of ``path`` that crashed inside its
+    marker window (``_recover_compaction``); a no-op without a marker.
+    Call it before judging from the filesystem whether the table at
+    ``path`` exists: a crash between the two renames leaves no directory
+    there, only the marker and the two copies beside it."""
+    marker = _marker_path(path)
+    if os.path.exists(marker):
+        _recover_compaction(path, marker)
+
+
+def discard_rewrite_debris(path: str) -> None:
+    """Remove what crashed rewrites of ``path`` left beside it: the
+    marker and every ``.compacting-*`` / ``.precompact-*`` copy, whatever
+    its age. For a caller that deletes the table at ``path``; the copies
+    would otherwise stay until a later rewrite of the path swept them."""
+    try:
+        os.remove(_marker_path(path))
+    except FileNotFoundError:
+        pass
+    _sweep_orphan_compaction_dirs(path, min_age_s=0)
+
+
 def rewrite_table(
     spark, path: str, write_copy: Callable[[str], None]
 ) -> dict:
@@ -192,7 +218,7 @@ def rewrite_table(
     safely. ``write_copy(tmp)`` writes the rewritten copy of the table
     to the directory ``tmp``; the protocol does everything else:
 
-    1. recover a leftover marker (``_recover_compaction``), then sweep
+    1. recover a leftover marker (``recover_rewrite``), then sweep
        orphaned copies of earlier crashed attempts
        (``_sweep_orphan_compaction_dirs``);
     2. write the copy to the sibling ``<path>.compacting-<hex>``;
@@ -215,10 +241,9 @@ def rewrite_table(
     its entry, and the caller refreshes it.
 
     Returns {rows, files_before, files_after}."""
-    marker = _marker_path(path)
-    if os.path.exists(marker):
-        _recover_compaction(path, marker)
+    recover_rewrite(path)
     _sweep_orphan_compaction_dirs(path)
+    marker = _marker_path(path)
     hexid = uuid.uuid4().hex
     tmp = path.rstrip("/") + f".compacting-{hexid}"
     old = path.rstrip("/") + f".precompact-{hexid}"

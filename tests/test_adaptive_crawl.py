@@ -2,16 +2,14 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from crawl4ai_spark.plans.adaptive import AdaptiveConfig, AdaptiveCrawl
 from crawl4ai_spark.sources.synthetic import build_robots, build_seeds
 
 
-def test_adaptive_crawl_until_confident(spark, pages):
+def test_adaptive_crawl_until_confident(spark, pages, tmp_path):
     ac = AdaptiveCrawl(
         spark, pages, build_robots(spark), build_seeds(spark, 5),
-        tempfile.mkdtemp(prefix="adaptive_loop_"),
+        str(tmp_path),
         query="data value spark window",
         config=AdaptiveConfig(confidence_threshold=0.55, max_pages=30,
                               batch_size=8, max_depth=3),
@@ -31,10 +29,10 @@ def test_adaptive_crawl_until_confident(spark, pages):
     assert abs(out["confidence"] - round(want, 6)) < 1e-5
 
 
-def test_adaptive_metrics_monotone_pages(spark, pages):
+def test_adaptive_metrics_monotone_pages(spark, pages, tmp_path):
     ac = AdaptiveCrawl(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="adaptive_steps_"),
+        str(tmp_path),
         query="data value",
         config=AdaptiveConfig(confidence_threshold=0.99, max_pages=25,
                               batch_size=5, max_depth=3),
@@ -49,7 +47,7 @@ def test_adaptive_metrics_monotone_pages(spark, pages):
     assert ac.new_terms_history[1] <= max(ac.new_terms_history[0], ac.new_terms_history[1])
 
 
-def test_adaptive_step_builds_term_stats_once(spark, pages, monkeypatch):
+def test_adaptive_step_builds_term_stats_once(spark, pages, monkeypatch, tmp_path):
     """Job hygiene (VERDICT r02 #8): one kb_term_stats construction per
     step — the saturation update and every metric share the cached table."""
     import crawl4ai_spark.plans.adaptive as ad
@@ -64,7 +62,7 @@ def test_adaptive_step_builds_term_stats_once(spark, pages, monkeypatch):
     monkeypatch.setattr(ad, "kb_term_stats", counting)
     ac = AdaptiveCrawl(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="adaptive_once_"),
+        str(tmp_path),
         query="data value",
         config=AdaptiveConfig(confidence_threshold=0.99, max_pages=25,
                               batch_size=5, max_depth=3),

@@ -5,8 +5,6 @@ cover the loop semantics and the reference quirks the oracle can't reach."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -192,10 +190,10 @@ class TestKernels:
 
 
 class TestLoop:
-    def _crawl(self, spark, pages, workdir=None, **cfg):
+    def _crawl(self, spark, pages, workdir, **cfg):
         return EmbeddingAdaptiveCrawl(
             spark, pages, build_robots(spark), build_seeds(spark, 5),
-            workdir or tempfile.mkdtemp(prefix="emb_adaptive_"),
+            workdir,
             query="data value spark window",
             query_variations=VARIATIONS,
             config=EmbeddingAdaptiveConfig(
@@ -203,15 +201,15 @@ class TestLoop:
             ),
         )
 
-    def test_train_val_split_keeps_query_in_training(self, spark, pages):
-        ac = self._crawl(spark, pages)
+    def test_train_val_split_keeps_query_in_training(self, spark, pages, tmp_path):
+        ac = self._crawl(spark, pages, str(tmp_path))
         assert ac.train_queries[0] == "data value spark window"
         # max(2, 20% of 5) = 2 held out, the LAST two variations
         assert ac.val_queries == VARIATIONS[-2:]
         assert len(ac.train_queries) == 1 + 3
 
-    def test_crawl_until_confident(self, spark, pages):
-        ac = self._crawl(spark, pages)
+    def test_crawl_until_confident(self, spark, pages, tmp_path):
+        ac = self._crawl(spark, pages, str(tmp_path))
         out = ac.crawl_until_confident(max_iterations=6)
         assert out["stop_reason"] in {
             "confident", "max_pages", "frontier_empty", "max_iterations",
@@ -225,10 +223,10 @@ class TestLoop:
         results = ac.run.results().filter("success").count()
         assert ac.kb().count() <= results
 
-    def test_converged_validated_stop(self, spark, pages):
+    def test_converged_validated_stop(self, spark, pages, tmp_path):
         """With a permissive validation floor, a flat confidence history
         stops as converged_validated (should_stop :1118-1135)."""
-        ac = self._crawl(spark, pages, validation_min_score=0.01)
+        ac = self._crawl(spark, pages, str(tmp_path), validation_min_score=0.01)
         out = ac.crawl_until_confident(max_iterations=6)
         # two flat iterations trigger convergence; validation passes at the
         # permissive floor unless the frontier drained first
@@ -238,13 +236,13 @@ class TestLoop:
             # validated systems map into the 0.7+ quality band
             assert ac.quality_confidence() >= 0.7 * 0.999
 
-    def test_irrelevance_floor_stops(self, spark, pages):
-        ac = self._crawl(spark, pages, min_confidence_threshold=0.99)
+    def test_irrelevance_floor_stops(self, spark, pages, tmp_path):
+        ac = self._crawl(spark, pages, str(tmp_path), min_confidence_threshold=0.99)
         out = ac.crawl_until_confident(max_iterations=3)
         assert out["stop_reason"] == "below_minimum_relevance_threshold"
 
-    def test_resume_continues_kb(self, spark, pages):
-        wd = tempfile.mkdtemp(prefix="emb_resume_")
+    def test_resume_continues_kb(self, spark, pages, tmp_path):
+        wd = str(tmp_path)
         ac1 = self._crawl(spark, pages, workdir=wd)
         ac1.step()
         kb1 = ac1.kb().count()

@@ -2,19 +2,17 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from crawl4ai_spark.plans.crawl import CrawlConfig, CrawlRun
 from crawl4ai_spark.sources.synthetic import build_robots, build_seeds
 
 
-def test_adaptive_budget_and_state_evolution(spark, pages, sf_dir):
+def test_adaptive_budget_and_state_evolution(spark, pages, sf_dir, tmp_path):
     run = CrawlRun(
         spark,
         pages,
         build_robots(spark),
         build_seeds(spark, 6),
-        tempfile.mkdtemp(prefix="adaptive_"),
+        str(tmp_path),
         CrawlConfig(
             mode="bfs",
             max_pages=100,

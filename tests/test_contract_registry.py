@@ -99,11 +99,3 @@ def test_hot_bucket_stats_accepts_bands_table_schema(spark):
     assert [(r["band_id"], r["band_key"], r["n_docs"]) for r in rows] == [
         (0, "k0", 12)
     ]
-
-
-def test_connected_components_rejects_unknown_algorithm(spark):
-    from crawl4ai_spark.datapipe.components import connected_components
-
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(edges, algorithm="lable")

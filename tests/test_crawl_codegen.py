@@ -16,7 +16,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pandas as pd
 import pyarrow as pa
@@ -52,10 +51,10 @@ CRAWLS = {
 
 
 @pytest.fixture(scope="module", params=sorted(CRAWLS))
-def crawl(request, spark, pages):
+def crawl(request, spark, pages, tmp_path_factory):
     run = CrawlRun(
         spark, pages, build_robots(spark), _seeds(pages, 200, 259),
-        tempfile.mkdtemp(prefix=f"c4ai_codegen_{request.param}_"),
+        str(tmp_path_factory.mktemp(f"c4ai_codegen_{request.param}")),
         CrawlConfig(
             mode="bfs", max_pages=10**9, max_depth=30, bloom_min_seen=1,
             **CRAWLS[request.param],
@@ -170,11 +169,13 @@ def test_range_rank_covering_k_keeps_every_row_without_a_filter(spark, pages):
     assert _codegen_compiles(spark) - before == 0
 
 
-def test_distributed_bootstrap_normalizes_in_parallel(spark, pages, monkeypatch):
+def test_distributed_bootstrap_normalizes_in_parallel(
+    spark, pages, monkeypatch, tmp_path
+):
     """A one-file seed parquet above ``broadcast_frontier_max`` takes the
     distributed bootstrap; its normalize stage runs ``defaultParallelism``
     tasks, and the frontier and seen rows equal the fast path's."""
-    tmp = tempfile.mkdtemp(prefix="c4ai_boot_")
+    tmp = str(tmp_path)
     urls = [r.url for r in pages.select("url").orderBy("url").collect()]
     path = os.path.join(tmp, "seeds.parquet")
     pq.write_table(pa.table({"url": urls}), path)

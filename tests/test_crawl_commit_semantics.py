@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,10 +18,10 @@ from crawl4ai_spark.sources.snapshots import SnapshotTable
 from crawl4ai_spark.sources.synthetic import build_robots, build_seeds
 
 
-def test_budget_counts_only_successes(spark, pages):
+def test_budget_counts_only_successes(spark, pages, tmp_path):
     """max_pages consumes only success=True rows; robots-403 rows are
     results but never budget. visit_order stays dense over ALL rows."""
-    wd = tempfile.mkdtemp(prefix="budget_")
+    wd = str(tmp_path)
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3), wd,
         CrawlConfig(mode="bfs", max_pages=25, max_depth=4, host_budget=100000,
@@ -56,11 +55,11 @@ def test_budget_counts_only_successes(spark, pages):
     assert sorted(orders) == list(range(1, n_all + 1))
 
 
-def test_seen_includes_capacity_dropped(spark, pages):
+def test_seen_includes_capacity_dropped(spark, pages, tmp_path):
     """Capacity-trimmed discoveries still enter the seen set (the
     reference's visited.add runs before the trim), so a later iteration
     can never re-enqueue them; the frontier gets only the kept rows."""
-    wd = tempfile.mkdtemp(prefix="captrim_")
+    wd = str(tmp_path)
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3), wd,
         CrawlConfig(mode="bfs", max_pages=5, max_depth=4, host_budget=100000,
@@ -92,13 +91,13 @@ def test_capacity_topk_ascending_keeps_lowest(spark):
     assert lo == {f"u{i:02d}" for i in range(5)}
 
 
-def test_resume_reconciles_crashed_iteration(spark, pages):
+def test_resume_reconciles_crashed_iteration(spark, pages, tmp_path):
     """A workdir left mid-commit by the undo-style protocol (other tables
     committed BEFORE the frontier replace) holds snapshots tagged with
     the iteration the frontier has not reached. Resume refuses it loudly,
     naming the table, instead of re-running the iteration over those rows
     and appending them a second time."""
-    wd = tempfile.mkdtemp(prefix="reconcile_")
+    wd = str(tmp_path)
     cfg = CrawlConfig(mode="bfs", max_pages=100000, max_depth=3,
                       host_budget=100000, include_external=True)
     run = CrawlRun(spark, pages, build_robots(spark), build_seeds(spark, 3),
@@ -361,61 +360,114 @@ def test_manifest_is_delta_encoded(spark, tmp_path):
     assert delta.count() == 5
 
 
-def test_reader_full_sync_spares_racing_commit_links(spark, tmp_path):
-    """stream()'s reader-side full sync races live commits: its manifest
-    read can predate a commit whose files are already linked into the
-    mirror (and recorded in the writer's _synced marker). The age-gated
-    prune must spare those fresh links — deleting them would skip the
-    commit in every later incremental sync, silently and forever. Old
-    unreferenced links (genuine debris) must still be pruned."""
-    import json
-    import time
+def _drain_ids(spark, src, ck: str, out: str) -> list:
+    """Run a checkpointed query over the stream ``src`` to the end of
+    what the mirror holds (availableNow) and return every id delivered
+    so far. Reusing one ``src`` syncs the mirror only at ``stream()``."""
+    q = (
+        src.writeStream.format("parquet")
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True)
+        .start(out)
+    )
+    q.awaitTermination()
+    return sorted(r.id for r in spark.read.parquet(out).collect())
 
-    from crawl4ai_spark.sources.snapshots import SnapshotTable
 
-    t = SnapshotTable(str(tmp_path / "tbl"))
+def test_reader_full_sync_spares_racing_commit_links(spark, tmp_path, monkeypatch):
+    """stream()'s sync lists the mirror before it reads the manifest, so
+    its prune is exact. A fresh link whose dir no snapshot references is
+    debris and goes at once. A commit that lands between the reader's
+    listing and its manifest read is absent from the listing, so none of
+    its links can be pruned, and the stream delivers its rows."""
+    from crawl4ai_spark.sources import snapshots as snap
+
+    t = snap.SnapshotTable(str(tmp_path / "tbl"))
     t.append(spark.range(3).toDF("id"))
     t.stream(spark)  # creates the mirror
-    stale = t._read_manifest()  # the reader's (soon-to-be-stale) view
-    t.append(spark.range(3, 6).toDF("id"))  # racing commit: links + marker
     sd = t._stream_path
-    n_before = len([f for f in os.listdir(sd) if f.endswith(".parquet")])
-    # plant genuine debris: an unreferenced link old enough to prune.
-    # Age is judged by ctime (link-creation time — utime can't fake it),
-    # so age the debris by patching os.stat for that one path.
     debris = os.path.join(sd, "data-debris__part-0.parquet")
     open(debris, "wb").close()
-    import unittest.mock
+    src = t.stream(spark)
+    assert not os.path.exists(debris)
 
-    real_stat = os.stat
+    # the racing commit lands right after whichever of the listing and
+    # the manifest read the reader's sync makes first
+    writer = snap.SnapshotTable(t.root)
+    raced: list[int] = []
 
-    class _Aged:
-        def __init__(self, st):
-            self._st = st
+    def commit_once():
+        if not raced:
+            raced.append(1)
+            writer.append(spark.range(3, 6).toDF("id"))
 
-        st_ctime = property(lambda self: time.time() - 3600)
+    real_listdir, real_read = os.listdir, t._read_manifest
 
-        def __getattr__(self, name):
-            return getattr(self._st, name)
+    def listdir(path="."):
+        out = real_listdir(path)
+        if os.fspath(path) == sd:
+            commit_once()
+        return out
 
-    def fake_stat(path, *a, **kw):
-        st = real_stat(path, *a, **kw)
-        return _Aged(st) if os.fspath(path) == debris else st
+    def read_manifest():
+        m = real_read()
+        commit_once()
+        return m
 
-    # replay the reader's prune with its stale manifest (the race, made
-    # deterministic): fresh commit links must survive, debris must not
-    with unittest.mock.patch(
-        "crawl4ai_spark.sources.snapshots.os.stat", side_effect=fake_stat
-    ):
-        t._sync_stream_dir(full=True, prune_min_age_s=300.0, manifest=stale)
-    names = set(os.listdir(sd))
-    assert "data-debris__part-0.parquet" not in names  # old debris pruned
-    kept = [f for f in names if f.endswith(".parquet")]
-    assert len(kept) == n_before  # racing commit's links all survived
-    # and the writer's marker still delivers them: stream reads 6 rows
-    assert spark.read.parquet(sd).count() == 6
-    marker = json.load(open(os.path.join(sd, "_synced")))
-    assert set(marker["dirs"]) <= set(t.snapshot_dirs())
+    with monkeypatch.context() as mp:
+        mp.setattr(snap.os, "listdir", listdir)
+        mp.setattr(t, "_read_manifest", read_manifest)
+        t._sync_stream_dir()
+    assert raced
+    new_dir = t.snapshot_dirs()[-1]
+    files = {f for f in os.listdir(os.path.join(t.root, new_dir))
+             if f.endswith(".parquet")}
+    assert files and {f"{new_dir}__{f}" for f in files} <= set(os.listdir(sd))
+    out = str(tmp_path / "out")
+    assert _drain_ids(spark, src, str(tmp_path / "ck"), out) == list(range(6))
+
+
+def test_stream_sync_cut_off_mid_dir_finishes_on_next_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A sync that stops after the first file of a two-file dir leaves
+    the dir without its ``.linked-`` sentinel, so the next commit links
+    the rest of it, and a drain delivers every row exactly once."""
+    from crawl4ai_spark.sources import snapshots as snap
+
+    t = snap.SnapshotTable(str(tmp_path / "tbl"))
+    t.append(spark.range(2).toDF("id"))
+    src = t.stream(spark)
+    ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
+    assert _drain_ids(spark, src, ck, out) == [0, 1]
+
+    class _Cut(Exception):
+        pass
+
+    real_link = snap.SnapshotTable._link_or_copy
+    linked: list[str] = []
+
+    def link_one(src, dst):
+        if linked:
+            raise _Cut()
+        linked.append(dst)
+        real_link(src, dst)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(snap.SnapshotTable, "_link_or_copy", staticmethod(link_one))
+        with pytest.raises(_Cut):
+            t.append(spark.range(2, 6, numPartitions=2).toDF("id"))
+    cut_dir = t.snapshot_dirs()[-1]
+    assert len([f for f in os.listdir(os.path.join(t.root, cut_dir))
+                if f.endswith(".parquet")]) == 2
+    assert len(linked) == 1
+    assert not os.path.exists(os.path.join(t._stream_path, ".linked-" + cut_dir))
+    # the stream already delivers the half-linked dir's first file
+    got = _drain_ids(spark, src, ck, out)
+    assert len(got) == 4 and set(got) < set(range(6))
+    t.append(spark.range(6, 8).toDF("id"))
+    assert os.path.exists(os.path.join(t._stream_path, ".linked-" + cut_dir))
+    assert _drain_ids(spark, src, ck, out) == list(range(8))
 
 
 def test_build_bloom_hash_col_matches_string_path(spark):
@@ -499,12 +551,12 @@ def test_expire_snapshots_append_only_keeps_data_compacts_manifest(
         t.read_since(spark, 2)
 
 
-def test_failed_iteration_releases_caches_and_bloom(spark, pages):
+def test_failed_iteration_releases_caches_and_bloom(spark, pages, tmp_path):
     """A raise mid-iteration (here: the fail-loud fetch fan-out guard)
     must release every frame the iteration persisted and the bloom
     broadcast — an in-process retry after a failure must start from a
     clean executor-memory slate, not accumulate dead caches per attempt."""
-    wd = tempfile.mkdtemp(prefix="leak_")
+    wd = str(tmp_path)
     # duplicate every page row while claiming pages_unique=True: the
     # left join fans out and the n_deferred<0 guard raises after the
     # fetch caches are built
@@ -523,11 +575,11 @@ def test_failed_iteration_releases_caches_and_bloom(spark, pages):
     assert run._iter_caches == []
 
 
-def test_replace_tables_hold_bounded_snapshots(spark, pages):
+def test_replace_tables_hold_bounded_snapshots(spark, pages, tmp_path):
     """The crawl loop expires frontier/host_state history every
     iteration: a long crawl holds O(retention) data dirs on the
     replace-per-iteration tables, not one dead full copy per iteration."""
-    wd = tempfile.mkdtemp(prefix="retain_")
+    wd = str(tmp_path)
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3), wd,
         CrawlConfig(mode="bfs", max_pages=100000, max_depth=10,
@@ -556,7 +608,7 @@ def test_replace_tables_hold_bounded_snapshots(spark, pages):
     assert not s.get("done") or s.get("reason") != "error"
 
 
-def test_bootstrap_dedup_is_min_url_wins_on_both_paths(spark, pages):
+def test_bootstrap_dedup_is_min_url_wins_on_both_paths(spark, pages, tmp_path):
     """When two raw seed URLs normalize to the same key, BOTH bootstrap
     paths (driver-side fast path, distributed mega-frontier path) keep
     the lexicographic-min raw URL — dropDuplicates would pick whichever
@@ -570,7 +622,7 @@ def test_bootstrap_dedup_is_min_url_wins_on_both_paths(spark, pages):
     seeds = spark.createDataFrame([(u,) for u in raw], "url string")
     reps = {}
     for path, max_rows in (("fast", 200_000), ("distributed", 1)):
-        wd = tempfile.mkdtemp(prefix=f"minwins_{path}_")
+        wd = str(tmp_path / f"minwins_{path}")
         run = CrawlRun(
             spark, pages, build_robots(spark), seeds, wd,
             CrawlConfig(mode="bfs", max_pages=10, max_depth=1,
@@ -591,7 +643,7 @@ def test_host_state_join_broadcasts_by_stats_not_hint(spark, tmp_path, pages):
     and a forced hint must NOT appear, or a 100M-host crawl would OOM
     the driver. Proxy: with broadcasting disabled the join must degrade
     to a shuffle (a hinted join would broadcast regardless)."""
-    wd = tempfile.mkdtemp(prefix="hsplan_")
+    wd = str(tmp_path / "hsplan")
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3), wd,
         CrawlConfig(mode="bfs", max_pages=50, max_depth=2,

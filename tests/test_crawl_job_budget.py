@@ -12,8 +12,6 @@ iteration fails here.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from crawl4ai_spark.plans.crawl import CrawlConfig, CrawlRun
@@ -31,12 +29,12 @@ def _jobs_started(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
-def test_steady_iteration_job_ceiling(spark, pages):
+def test_steady_iteration_job_ceiling(spark, pages, tmp_path):
     doc_id = F.regexp_extract("url", "/p/([0-9]+)$", 1).cast("int")
     run = CrawlRun(
         spark, pages, build_robots(spark),
         pages.select("url").where(doc_id.between(200, 259)),
-        tempfile.mkdtemp(prefix="c4ai_jobs_"),
+        str(tmp_path),
         CrawlConfig(
             mode="bfs", max_pages=10**9, max_depth=30, bloom_min_seen=1,
             host_budget=1,

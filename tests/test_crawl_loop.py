@@ -8,8 +8,6 @@ north rule) in pure Python over the same deterministic corpus graph.
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,10 +64,10 @@ def python_bfs(n_docs: int, seeds: list[int], max_depth: int) -> dict[int, int]:
 
 
 @pytest.fixture(scope="module")
-def crawl_run(spark, sf_dir, pages):
+def crawl_run(spark, sf_dir, pages, tmp_path_factory):
     robots = build_robots(spark)
     seeds = build_seeds(spark, 3)
-    wd = tempfile.mkdtemp(prefix="crawl_test_")
+    wd = str(tmp_path_factory.mktemp("crawl_test"))
     cfg = CrawlConfig(
         mode="bfs",
         max_pages=100000,
@@ -138,10 +136,10 @@ def test_lineage_written(crawl_run):
     assert disc_emitted == crawl_run.seen().count() - n_seeds
 
 
-def test_politeness_budget_enforced(spark, pages):
+def test_politeness_budget_enforced(spark, pages, tmp_path):
     robots = build_robots(spark)
     seeds = build_seeds(spark, 3)
-    wd = tempfile.mkdtemp(prefix="crawl_budget_")
+    wd = str(tmp_path)
     cfg = CrawlConfig(
         mode="bfs", max_pages=200, host_budget=5, salt=4, include_external=True
     )
@@ -154,7 +152,7 @@ def test_politeness_budget_enforced(spark, pages):
     assert worst <= 5
 
 
-def test_resume_equivalence(spark, pages):
+def test_resume_equivalence(spark, pages, tmp_path):
     """Running 4 iterations in one go == 2 + (new CrawlRun) + 2 over the
     same workdir — snapshot checkpointing makes the crawl resumable."""
     robots = build_robots(spark)
@@ -164,11 +162,11 @@ def test_resume_equivalence(spark, pages):
         include_external=True,
     )
 
-    wd_a = tempfile.mkdtemp(prefix="crawl_once_")
+    wd_a = str(tmp_path / "crawl_once")
     run_a = CrawlRun(spark, pages, robots, seeds, wd_a, cfg)
     run_a.run(max_iterations=4)
 
-    wd_b = tempfile.mkdtemp(prefix="crawl_resumed_")
+    wd_b = str(tmp_path / "crawl_resumed")
     run_b1 = CrawlRun(spark, pages, robots, seeds, wd_b, cfg)
     run_b1.run(max_iterations=2)
     # simulate a fresh driver process picking up the same workdir
@@ -181,13 +179,13 @@ def test_resume_equivalence(spark, pages):
     assert run_a.state() == run_b2.state()
 
 
-def test_best_first_min_score_first(spark, pages):
+def test_best_first_min_score_first(spark, pages, tmp_path):
     """Best-first pops LOWEST score first (reference quirk O1)."""
     from crawl4ai_spark.operators import path_depth_score
 
     robots = build_robots(spark)
     seeds = build_seeds(spark, 1)
-    wd = tempfile.mkdtemp(prefix="crawl_bff_")
+    wd = str(tmp_path)
     cfg = CrawlConfig(
         mode="best_first",
         max_pages=40,
@@ -210,14 +208,13 @@ def test_best_first_min_score_first(spark, pages):
 
 def test_stream_results_tailing(spark, pages, tmp_path):
     """Snapshot tailing = the batch analog of stream=True delivery."""
-    import tempfile
 
     from crawl4ai_spark.plans.crawl import CrawlConfig, CrawlRun
     from crawl4ai_spark.sources.synthetic import build_robots, build_seeds
 
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 4),
-        tempfile.mkdtemp(prefix="tail_"),
+        str(tmp_path / "tail"),
         CrawlConfig(mode="bfs", max_pages=60, max_depth=2, host_budget=5),
     )
     seen_rows = 0
@@ -239,16 +236,15 @@ def test_stream_results_tailing(spark, pages, tmp_path):
     assert nothing is None
 
 
-def test_streaming_tail_of_results(spark, pages, sf_dir):
+def test_streaming_tail_of_results(spark, pages, sf_dir, tmp_path):
     """Structured Streaming over the results snapshot table: an
     availableNow pass delivers exactly the committed rows, and a second
     pass after another iteration delivers only the delta."""
-    import tempfile
 
     from crawl4ai_spark.plans.crawl import CrawlConfig, CrawlRun
     from crawl4ai_spark.sources.synthetic import build_robots, build_seeds
 
-    wd = tempfile.mkdtemp(prefix="stream_")
+    wd = str(tmp_path / "stream")
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3), wd,
         CrawlConfig(mode="bfs", max_pages=40, max_depth=3, iteration_budget=10),
@@ -256,8 +252,8 @@ def test_streaming_tail_of_results(spark, pages, sf_dir):
     run.run_iteration()
     committed = run.results().count()
 
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    out_dir = tempfile.mkdtemp(prefix="stream_out_")
+    ckpt = str(tmp_path / "stream_ckpt")
+    out_dir = str(tmp_path / "stream_out")
 
     def drain():
         q = (
@@ -283,7 +279,6 @@ def test_streaming_tail_of_results(spark, pages, sf_dir):
 def test_kb_export_import_roundtrip(spark, pages, tmp_path):
     """S12: export the crawl results as a JSONL knowledge base (one JSON
     doc per line, distributed part files) and read it back losslessly."""
-    import tempfile
 
     from crawl4ai_spark.plans.crawl import CrawlConfig, CrawlRun
     from crawl4ai_spark.sources.kb_export import (
@@ -294,7 +289,7 @@ def test_kb_export_import_roundtrip(spark, pages, tmp_path):
 
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="kb_"),
+        str(tmp_path / "kb"),
         CrawlConfig(mode="bfs", max_pages=20, max_depth=2, iteration_budget=10),
     )
     run.run(max_iterations=2)
@@ -322,7 +317,7 @@ def test_kb_export_import_roundtrip(spark, pages, tmp_path):
     assert import_knowledge_base(spark, pout, fmt="parquet").count() == results.count()
 
 
-def test_multi_capture_pages_fetch_latest_and_counters_sane(spark, pages):
+def test_multi_capture_pages_fetch_latest_and_counters_sane(spark, pages, tmp_path):
     """A WARC-style corpus with several captures per URL must not fan out
     the fetch join: one result row per selected URL (the latest capture by
     warc_ts), manifest counters consistent, n_deferred never negative."""
@@ -339,7 +334,7 @@ def test_multi_capture_pages_fetch_latest_and_counters_sane(spark, pages):
         dup_pages,
         build_robots(spark),
         build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="c4ai_dup_"),
+        str(tmp_path / "c4ai_dup"),
         CrawlConfig(mode="bfs", max_pages=30, max_depth=2, host_budget=5),
     )
     stats = run.run(max_iterations=3)
@@ -356,7 +351,7 @@ def test_multi_capture_pages_fetch_latest_and_counters_sane(spark, pages):
     # and identical visit set to the clean single-capture corpus
     clean = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="c4ai_clean_"),
+        str(tmp_path / "c4ai_clean"),
         CrawlConfig(mode="bfs", max_pages=30, max_depth=2, host_budget=5),
     )
     clean.run(max_iterations=3)
@@ -366,7 +361,7 @@ def test_multi_capture_pages_fetch_latest_and_counters_sane(spark, pages):
     assert got == want
 
 
-def test_pages_unique_fanout_raises_before_lineage_commit(spark, pages):
+def test_pages_unique_fanout_raises_before_lineage_commit(spark, pages, tmp_path):
     """pages_unique=True on a corpus that actually has duplicate captures
     must fail loud (RuntimeError naming the fan-out) and must raise BEFORE
     the iteration's lineage commit — a retried iteration must not
@@ -379,7 +374,7 @@ def test_pages_unique_fanout_raises_before_lineage_commit(spark, pages):
         dup_pages,
         build_robots(spark),
         build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="c4ai_fanout_"),
+        str(tmp_path),
         CrawlConfig(
             mode="bfs", max_pages=30, max_depth=2, host_budget=5,
             pages_unique=True,
@@ -416,8 +411,8 @@ def test_stream_mirror_is_manifest_driven(spark, tmp_path):
     src = t.stream(spark)
     mirror = os.path.join(t.root, "stream")
     assert os.path.isdir(mirror)
-    # the mirror holds exactly the committed snapshot's files (plus the
-    # _synced incremental-sync marker, hidden from Spark's file source)
+    # the mirror holds exactly the committed snapshot's files (plus one
+    # .linked-<dir> sentinel per dir, hidden from Spark's file source)
     assert spark.read.schema(src.schema).parquet(mirror).count() == 5
     assert all(
         f.startswith("data-")
@@ -520,7 +515,7 @@ def test_crash_debris_swept_on_commit_and_stream(spark, tmp_path):
     # time-travel dirs are NEVER swept: snapshot 1 still reads in full
     assert t.read(spark, snapshot_id=1).count() == 5
 
-def test_bootstrap_fast_path_is_one_probe_job(spark, pages):
+def test_bootstrap_fast_path_is_one_probe_job(spark, pages, tmp_path):
     """The config-sized seed bootstrap pays exactly ONE driver-thread Spark
     job: limit(max+1).collect() both decides the path and delivers the rows
     (the old protocol paid a separate count()). The snapshot commits run in
@@ -528,7 +523,7 @@ def test_bootstrap_fast_path_is_one_probe_job(spark, pages):
     the driver thread's control-flow jobs."""
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="c4ai_boot_"),
+        str(tmp_path),
         CrawlConfig(mode="bfs", max_pages=20, max_depth=1),
     )
     sc = spark.sparkContext
@@ -544,7 +539,9 @@ def test_bootstrap_fast_path_is_one_probe_job(spark, pages):
     assert run.state()["n_frontier"] == 3
 
 
-def test_bloom_broadcasts_destroyed_per_iteration(spark, pages, monkeypatch):
+def test_bloom_broadcasts_destroyed_per_iteration(
+    spark, pages, monkeypatch, tmp_path
+):
     """Long-crawl broadcast hygiene: the loop builds a fresh bloom bitset
     broadcast every iteration — each must be destroy()ed by the end of its
     iteration, or a 10k-iteration crawl accumulates ~10 GiB of dead
@@ -572,7 +569,7 @@ def test_bloom_broadcasts_destroyed_per_iteration(spark, pages, monkeypatch):
     monkeypatch.setattr(SparkContext, "broadcast", spy_broadcast)
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="c4ai_bloomgc_"),
+        str(tmp_path),
         CrawlConfig(
             mode="bfs", max_pages=100000, max_depth=30, host_budget=1,
             bloom_min_seen=1, bloom_bits=1 << 16, include_external=True,
@@ -590,7 +587,7 @@ def test_bloom_broadcasts_destroyed_per_iteration(spark, pages, monkeypatch):
     assert run._bloom_bc is None
 
 
-def test_bloom_path_visit_set_matches_exact_path(spark, pages):
+def test_bloom_path_visit_set_matches_exact_path(spark, pages, tmp_path):
     """Force the bloom pre-filter on (bloom_min_seen=1: engages from
     iteration 2) — the visit set must equal the exact anti-join run's,
     exercising the precomputed-flag split end-to-end."""
@@ -602,7 +599,7 @@ def test_bloom_path_visit_set_matches_exact_path(spark, pages):
     ):
         run = CrawlRun(
             spark, pages, build_robots(spark), build_seeds(spark, 3),
-            tempfile.mkdtemp(prefix=f"c4ai_bloom_{tag}_"),
+            str(tmp_path / tag),
             CrawlConfig(**base, **extra),
         )
         run.run(max_iterations=4)

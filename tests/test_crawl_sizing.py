@@ -11,8 +11,6 @@ holds, not from ``max_pages`` or the frontier size.
 
 from __future__ import annotations
 
-import tempfile
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -35,10 +33,10 @@ def _spy_range_rank(monkeypatch) -> list[int]:
     return calls
 
 
-def _visits(spark, pages, tag: str) -> set[tuple[str, int]]:
+def _visits(spark, pages, workdir: str) -> set[tuple[str, int]]:
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix=f"c4ai_rank_{tag}_"),
+        workdir,
         CrawlConfig(mode="bfs", max_pages=10**9, max_depth=2, host_budget=5),
     )
     run.run(max_iterations=2)
@@ -48,23 +46,23 @@ def _visits(spark, pages, tag: str) -> set[tuple[str, int]]:
     }
 
 
-def test_rank_budget_clamped_to_frontier(spark, pages, monkeypatch):
+def test_rank_budget_clamped_to_frontier(spark, pages, monkeypatch, tmp_path):
     """max_pages=10**9 on a frontier far below LARGE_K_ROWS ranks with
     the plain window; range_rank still runs once the frontier itself
     exceeds LARGE_K_ROWS, and both regimes visit the same pages."""
     calls = _spy_range_rank(monkeypatch)
-    plain = _visits(spark, pages, "plain")
+    plain = _visits(spark, pages, str(tmp_path / "plain"))
     assert calls == []
 
     monkeypatch.setattr(rk, "LARGE_K_ROWS", 2)  # below the 3-seed frontier
-    ranged = _visits(spark, pages, "ranged")
+    ranged = _visits(spark, pages, str(tmp_path / "ranged"))
     assert calls, "range_rank never ran with the frontier above LARGE_K_ROWS"
     # the clamped budget is the frontier size, never max_pages
     assert max(calls) < 10**9
     assert ranged == plain
 
 
-def test_python_stage_width_tracks_selected_rows(spark, pages):
+def test_python_stage_width_tracks_selected_rows(spark, pages, tmp_path):
     """A frontier wider than 4·16·defaultParallelism whose host budget
     selects only a few rows: the extract stage gets ⌈n/16⌉ partitions,
     plus at most one for the robots-blocked rows."""
@@ -72,7 +70,7 @@ def test_python_stage_width_tracks_selected_rows(spark, pages):
     n_seeds = 4 * 16 * par + 100
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, n_seeds),
-        tempfile.mkdtemp(prefix="c4ai_width_"),
+        str(tmp_path),
         CrawlConfig(mode="bfs", max_pages=10**9, max_depth=2, host_budget=1),
     )
     stats = run.run_iteration()
@@ -85,7 +83,9 @@ def test_python_stage_width_tracks_selected_rows(spark, pages):
     )
 
 
-def test_incremental_filter_build_is_snapshot_sized(spark, pages, monkeypatch):
+def test_incremental_filter_build_is_snapshot_sized(
+    spark, pages, monkeypatch, tmp_path
+):
     """The partial bloom build reads a _parts(n_seen_add)-partition input,
     and after several incremental merges the in-memory bitset equals a
     fresh build over the committed seen table."""
@@ -98,7 +98,7 @@ def test_incremental_filter_build_is_snapshot_sized(spark, pages, monkeypatch):
     monkeypatch.setattr(crawl_mod, "build_bloom", spy)
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 3),
-        tempfile.mkdtemp(prefix="c4ai_partial_"),
+        str(tmp_path),
         CrawlConfig(
             mode="bfs", max_pages=100000, max_depth=30, host_budget=1,
             bloom_min_seen=1, bloom_bits=1 << 16, include_external=True,

@@ -280,24 +280,27 @@ def test_connected_components_chain_and_star(spark):
 def test_connected_components_round_cap(spark):
     import pytest
 
-    from crawl4ai_spark.datapipe.components import connected_components
+    from crawl4ai_spark.datapipe.components import (
+        _connected_components_label,
+        connected_components,
+    )
 
-    # a 12-node path needs ~11 label rounds; cap at 3 must raise under
-    # algorithm='label' (never silently return partial labels) ...
+    # a 12-node path needs ~11 label rounds; propagation capped at 3 must
+    # raise (never silently return partial labels) ...
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_rounds=3, algorithm="label")
-    # ... while the default 'auto' falls back to star contraction and
-    # completes despite the cap
-    full = connected_components(edges, max_rounds=3)
+        _connected_components_label(edges, max_rounds=3)
+    # ... while connected_components falls back to star contraction when
+    # its probe cap trips, and completes
+    full = connected_components(edges)
     assert {r.component for r in full.collect()} == {0}
 
 
 def test_connected_components_auto_probes_before_fallback(spark, monkeypatch):
-    """'auto' must NOT pay the full max_rounds of doomed propagation on a
-    chain-shaped graph: the propagation probe is capped at
+    """connected_components must NOT pay a long run of doomed propagation
+    on a chain-shaped graph: the propagation probe is capped at
     AUTO_PROBE_ROUNDS, then the star contraction takes over — and the
     result is still the exact components."""
     import crawl4ai_spark.datapipe.components as comp
@@ -315,14 +318,9 @@ def test_connected_components_auto_probes_before_fallback(spark, monkeypatch):
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
     got = {r.node: r.component
-           for r in comp.connected_components(edges, max_rounds=25).collect()}
+           for r in comp.connected_components(edges).collect()}
     assert got == {i: 0 for i in range(41)}
     assert seen_caps == [comp.AUTO_PROBE_ROUNDS]
-    # algorithm='label' keeps the caller's full budget (no hidden clamp)
-    seen_caps.clear()
-    small = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    comp.connected_components(small, max_rounds=25, algorithm="label").collect()
-    assert seen_caps == [25]
 
 
 def test_connected_components_star_matches_label(spark):
@@ -1057,6 +1055,120 @@ spark.stop()
     finally:
         for name in (f"{prefix}_shingles", f"{prefix}_bands", f"{orphan}_bands"):
             _drop_table(spark, name)
+
+
+def test_minhash_window_b_crash_recovers_in_a_fresh_process(spark, sf_dir, tmp_path):
+    """A compaction that crashed between its two renames leaves the bands
+    table's directory renamed to ``.precompact-*``, the compacted copy in
+    ``.compacting-*`` and the marker beside them; the catalog entry died
+    with the process. A fresh session's accessor recovers the swap before
+    it registers the table, so the pairs equal the pre-crash ones and the
+    next compaction runs."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import uuid
+
+    from crawl4ai_spark.datapipe.dedup import (
+        _drop_table,
+        _table_location,
+        compact_minhash_tables,
+        minhash_pairs_from_tables,
+    )
+    from crawl4ai_spark.storage import _marker_path
+
+    prefix = f"t_winb_{uuid.uuid4().hex[:8]}"
+    out = tmp_path / "pairs.json"
+    writer = f"""
+import json, os, shutil
+from pyspark.sql import functions as F
+from crawl4ai_spark.session import get_spark
+from crawl4ai_spark.datapipe.dedup import (
+    _table_location, minhash_pairs_from_tables, write_minhash_tables,
+)
+from crawl4ai_spark.storage import _marker_path
+spark = get_spark(app_name="minhash-crash", cores=2, shuffle_partitions=4)
+docs = (spark.read.parquet({sf_dir!r} + "/documents.parquet")
+        .select("doc_id", "text").filter("doc_id < 60"))
+write_minhash_tables(docs, "doc_id", "text", {prefix!r}, hash_fn=F.xxhash64,
+                     buckets=4)
+pairs = [list(r) for r in minhash_pairs_from_tables(spark, {prefix!r}).collect()]
+json.dump(pairs, open({str(out)!r}, "w"))
+loc = _table_location(spark, {prefix!r} + "_bands")
+old, tmp = loc + ".precompact-crash", loc + ".compacting-crash"
+os.rename(loc, old)
+shutil.copytree(old, tmp)
+json.dump({{"tmp": tmp, "old": old}}, open(_marker_path(loc), "w"))
+spark.stop()
+"""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_WAREHOUSE=spark.conf.get("spark.sql.warehouse.dir"),
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    loc = _table_location(spark, f"{prefix}_bands")
+    try:
+        subprocess.run([sys.executable, "-c", writer], cwd=repo, env=env,
+                       check=True, timeout=600)
+        expected = {tuple(r) for r in json.load(open(out))}
+        assert expected
+        assert not os.path.exists(loc) and os.path.exists(_marker_path(loc))
+        assert not spark.catalog.tableExists(f"{prefix}_bands")
+        got = minhash_pairs_from_tables(spark, prefix)
+        assert {tuple(r) for r in got.collect()} == expected
+        assert not os.path.exists(_marker_path(loc))
+        assert not os.path.exists(loc + ".precompact-crash")
+        assert not os.path.exists(loc + ".compacting-crash")
+        stats = compact_minhash_tables(spark, prefix)
+        assert stats["bands"]["rows"] == spark.table(f"{prefix}_bands").count()
+        again = minhash_pairs_from_tables(spark, prefix)
+        assert {tuple(r) for r in again.collect()} == expected
+    finally:
+        for name in (f"{prefix}_shingles", f"{prefix}_bands"):
+            _drop_table(spark, name)
+
+
+def test_write_minhash_tables_discards_crash_debris(spark, sf_dir):
+    """Rebuilding MinHash tables drops the old ones with everything a
+    crashed compaction left beside them: the ``.compact-pending`` marker
+    and the ``.compacting-*`` / ``.precompact-*`` copies."""
+    import os
+    import uuid
+
+    from crawl4ai_spark.datapipe.dedup import (
+        _drop_table,
+        _table_location,
+        write_minhash_tables,
+    )
+    from crawl4ai_spark.storage import _marker_path
+
+    prefix = f"t_debris_{uuid.uuid4().hex[:8]}"
+    locs = [_table_location(spark, f"{prefix}{s}") for s in ("_shingles", "_bands")]
+    for loc in locs:
+        for sibling in (".compacting-dead", ".precompact-dead"):
+            os.makedirs(loc + sibling)
+            open(os.path.join(loc + sibling, "part-0.parquet"), "w").close()
+        with open(_marker_path(loc), "w") as f:
+            f.write("{}")
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .filter("doc_id < 20")
+    )
+    try:
+        write_minhash_tables(docs, "doc_id", "text", prefix, hash_fn=F.xxhash64,
+                             buckets=2)
+        for loc in locs:
+            name = os.path.basename(loc)
+            assert os.path.isdir(loc)
+            assert not [
+                e for e in os.listdir(os.path.dirname(loc))
+                if e.startswith(name + ".")
+            ]
+    finally:
+        for loc in locs:
+            _drop_table(spark, os.path.basename(loc))
 
 
 def test_minhash_compaction_crash_recovery(spark, sf_dir):

@@ -347,7 +347,7 @@ def test_embedding_confidence_broadcasts_queries_not_corpus(spark, sf_dir):
     assert "partial_max" in plan
 
 
-def test_link_preview_scores_single_pages_scan(spark):
+def test_link_preview_scores_single_pages_scan(spark, tmp_path):
     """The link-preview pass head-fetches via ONE scan of the pages
     corpus; the BM25 scoring pipeline afterwards must only touch the
     (bounded) selected-link rows, never re-scan pages."""
@@ -359,9 +359,8 @@ def test_link_preview_scores_single_pages_scan(spark):
         " intrinsic_score double, ord int",
     )
     pages_dir = None
-    import tempfile
 
-    pages_dir = tempfile.mkdtemp(prefix="lp_pages_")
+    pages_dir = str(tmp_path)
     spark.createDataFrame(
         [("https://a.test/p1", "<html><head><title>T</title></head></html>")],
         "url string, html_str string",

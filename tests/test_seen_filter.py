@@ -9,8 +9,6 @@ twice.
 
 from __future__ import annotations
 
-import tempfile
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -26,14 +24,14 @@ def _config(**kw) -> CrawlConfig:
     return CrawlConfig(**{**base, **kw})
 
 
-def test_expire_seen_recrawls_and_preserves_survivors(spark, pages):
+def test_expire_seen_recrawls_and_preserves_survivors(spark, pages, tmp_path):
     """TTL/recrawl expiry (the reference's cache invalidation,
     cache_context.py + async_database.py aclear_db, restated over
     snapshot tables): expiring seen URLs between iterations makes the
     crawl RE-crawl them on rediscovery. The bloom cannot delete, so the
     in-memory filter is dropped and rebuilt over the survivors."""
     cfg = _config()
-    wd = tempfile.mkdtemp(prefix="expire_bloom_")
+    wd = str(tmp_path)
     run = CrawlRun(spark, pages, build_robots(spark), build_seeds(spark, 2), wd, cfg)
     run.run(max_iterations=2)
     seen_before = {r.url_norm for r in run.seen().select("url_norm").collect()}
@@ -69,7 +67,9 @@ def test_expire_seen_recrawls_and_preserves_survivors(spark, pages):
     assert len(urls) > len(set(urls)), "no url was re-crawled after expiry"
 
 
-def test_expire_seen_reconciles_crashed_iteration_first(spark, pages, monkeypatch):
+def test_expire_seen_reconciles_crashed_iteration_first(
+    spark, pages, monkeypatch, tmp_path
+):
     """A crash after an iteration's frontier commit can leave its seen
     append staged but not yet committed. expire_seen must roll it forward
     BEFORE filtering: otherwise the replace filters a seen set missing
@@ -77,7 +77,7 @@ def test_expire_seen_reconciles_crashed_iteration_first(spark, pages, monkeypatc
     deletes the staged dir the frontier's apply record still names."""
     import os
 
-    wd = tempfile.mkdtemp(prefix="expire_pending_")
+    wd = str(tmp_path)
     run = CrawlRun(
         spark, pages, build_robots(spark), build_seeds(spark, 2), wd, _config()
     )
@@ -112,7 +112,7 @@ def test_expire_seen_reconciles_crashed_iteration_first(spark, pages, monkeypatc
     assert out2["n_seen"] == run.seen().count()
 
 
-def test_crawl_filter_equivalence(spark, pages):
+def test_crawl_filter_equivalence(spark, pages, tmp_path):
     """The pre-filter must not change results at all: it is a
     no-false-negative pre-filter ahead of the exact anti-join, so the
     crawl's results table (urls, depths, visit order) and seen set are
@@ -128,7 +128,7 @@ def test_crawl_filter_equivalence(spark, pages):
     for kind, min_seen in (("bloom", 0), ("off", 10**12)):
         run = CrawlRun(
             spark, pages, robots, seeds,
-            tempfile.mkdtemp(prefix=f"seen_{kind}_"),
+            str(tmp_path / f"seen_{kind}"),
             _config(max_depth=2, bloom_min_seen=min_seen),
         )
         run.run(max_iterations=4)

@@ -4,7 +4,6 @@ evolve_host_state, including checkpointed cross-run state continuity."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -65,10 +64,10 @@ def _final_state(spark, out_dir):
     }
 
 
-def test_stream_host_state_matches_batch_fold(spark):
-    src = tempfile.mkdtemp(prefix="shs_src_")
-    ckpt = tempfile.mkdtemp(prefix="shs_ckpt_")
-    out = tempfile.mkdtemp(prefix="shs_out_")
+def test_stream_host_state_matches_batch_fold(spark, tmp_path):
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     spark.createDataFrame(ROWS, SCHEMA).coalesce(1).write.mode("append").parquet(src)
     _drain(spark, src, ckpt, out)
 
@@ -84,12 +83,12 @@ def test_stream_host_state_matches_batch_fold(spark):
     assert audit.count() == audit.select("host", "iteration").distinct().count() == 7
 
 
-def test_stream_host_state_resumes_from_checkpoint(spark):
+def test_stream_host_state_resumes_from_checkpoint(spark, tmp_path):
     """State survives a query restart: a second availableNow run over newly
     appended files continues evolving from the checkpointed delays."""
-    src = tempfile.mkdtemp(prefix="shs2_src_")
-    ckpt = tempfile.mkdtemp(prefix="shs2_ckpt_")
-    out = tempfile.mkdtemp(prefix="shs2_out_")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     phase1 = [r for r in ROWS if r[1] < 2]
     phase2 = [r for r in ROWS if r[1] == 2]
     spark.createDataFrame(phase1, SCHEMA).coalesce(1).write.mode("append").parquet(src)
@@ -106,13 +105,13 @@ def test_stream_host_state_resumes_from_checkpoint(spark):
     assert os.path.isdir(ckpt)
 
 
-def test_stream_host_state_iteration_split_across_batches_folds_once(spark):
+def test_stream_host_state_iteration_split_across_batches_folds_once(spark, tmp_path):
     """maxFilesPerTrigger pacing can split one iteration's files across
     micro-batches; the done_iter state guard must fold that iteration
     ONCE (no double-doubled delay, no duplicate audit row)."""
-    src = tempfile.mkdtemp(prefix="shs3_src_")
-    ckpt = tempfile.mkdtemp(prefix="shs3_ckpt_")
-    out = tempfile.mkdtemp(prefix="shs3_out_")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     # one host, one iteration, a 429 in EVERY file: two files → without
     # the guard the stream evolves twice (0.5→1.0→2.0) and audits twice
     rows = [("a", 0, 429), ("a", 0, 429)]

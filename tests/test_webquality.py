@@ -15,7 +15,7 @@ from crawl4ai_spark.datapipe.webquality import (
     c4_clean_col,
     c4_page_gate_col,
     gopher_gate_col,
-    gopher_metrics,
+    gopher_metrics_frame,
 )
 
 
@@ -29,7 +29,7 @@ def test_gopher_metrics_empty_and_degenerate(spark):
     df = spark.createDataFrame(
         [(1, ""), (2, "x"), (3, "word word word word word")], "id long, text string"
     )
-    rows = {r.id: r.m for r in df.select("id", gopher_metrics("text").alias("m")).collect()}
+    rows = {r.id: r.m for r in gopher_metrics_frame(df, "text").collect()}
     assert rows[1].n_words == 0 and rows[1].mean_word_len == 0.0
     assert rows[1].top_2gram_frac == 0.0 and rows[1].dup_line_frac == 0.0
     assert rows[2].n_words == 1 and rows[2].top_2gram_frac == 0.0
@@ -45,8 +45,8 @@ def test_gopher_gate_published_thresholds(spark):
     df = spark.createDataFrame([(1, good), (2, spammy)], "id long, text string")
     got = {
         r.id: r.keep
-        for r in df.select(
-            "id", gopher_gate_col(gopher_metrics("text")).alias("keep")
+        for r in gopher_metrics_frame(df, "text").select(
+            "id", gopher_gate_col(F.col("m")).alias("keep")
         ).collect()
     }
     # "good" has 65 words, stopword types (the,that,to,with), sane lengths
