@@ -2552,32 +2552,35 @@ def _run_crawl_query(spark, sf_dir, mode):
         def scorer(url_col):
             return keyword_relevance_score(url_col, ["7"], weight=1.0)
 
-    run = CrawlRun(
-        spark,
-        build_pages(spark, sf_dir),
-        build_robots(spark),
-        build_seeds(spark, 20),
-        _tf.mkdtemp(prefix=f"c4ai_{mode}_"),
-        CrawlConfig(
-            mode=mode,
-            max_pages=1_000_000,
-            max_depth=_CRAWL_MAXD,
-            host_budget=_CRAWL_HB,
-            check_robots=True,
-            scorer=scorer,
-        ),
-    )
-    for _ in range(_CRAWL_K):
-        run.run_iteration()
-    res = run.results()
-    return res.select(
-        "url",
-        F.col("depth").cast("long").alias("depth"),
-        "parent_url",
-        F.col("status_code").cast("long").alias("status_code"),
-        F.col("visit_order").cast("long").alias("visit_order"),
-        F.col("iteration").cast("long").alias("iteration"),
-    )
+    # the crawl's tables live in the workdir, so the rows are collected
+    # before it is removed and returned under the selected schema
+    with _tf.TemporaryDirectory(prefix=f"c4ai_{mode}_") as workdir:
+        run = CrawlRun(
+            spark,
+            build_pages(spark, sf_dir),
+            build_robots(spark),
+            build_seeds(spark, 20),
+            workdir,
+            CrawlConfig(
+                mode=mode,
+                max_pages=1_000_000,
+                max_depth=_CRAWL_MAXD,
+                host_budget=_CRAWL_HB,
+                check_robots=True,
+                scorer=scorer,
+            ),
+        )
+        for _ in range(_CRAWL_K):
+            run.run_iteration()
+        res = run.results().select(
+            "url",
+            F.col("depth").cast("long").alias("depth"),
+            "parent_url",
+            F.col("status_code").cast("long").alias("status_code"),
+            F.col("visit_order").cast("long").alias("visit_order"),
+            F.col("iteration").cast("long").alias("iteration"),
+        )
+        return spark.createDataFrame(res.collect(), res.schema)
 
 
 @q("crawl_bfs", _crawl_oracle("bfs"))

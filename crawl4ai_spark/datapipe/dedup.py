@@ -1,23 +1,30 @@
 """Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard.
 
 All Catalyst-native (higher-order array functions + hash joins). The scale
-path is the standard shingle→minhash→band→bucket-join pipeline:
+path is the standard shingle→minhash→band→bucket-join pipeline, and every
+LSH dedup — in-session, from the bucketed tables, incremental, and the
+embedding twins in ``similarity`` — runs it through the same steps:
 
-- signatures are computed per row with no shuffle;
-- the ONLY shuffle is the band-bucket self-join, an equi-join on
-  (band_id, band_key). Hash-DISTINCT band keys are uniform, but the
-  band key VALUES are not: real web corpora carry huge sets of
+- ``_minhash_frames`` builds the shingle and band frames (the only check
+  of num_hashes against bands); signatures are computed per row with no
+  shuffle;
+- ``_guarded_band_candidates`` is the ONLY shuffle, the band-bucket
+  self-join on the band key. Hash-DISTINCT band keys are uniform, but
+  the band key VALUES are not: real web corpora carry huge sets of
   byte-identical pages (empty, boilerplate) that all land in one bucket,
   where the self-join would go quadratic — so buckets above
   HOT_BUCKET_CAP are diverted to a linear star expansion (see the
   constant below);
-- candidate pairs are then verified with the exact Jaccard, so LSH false
-  positives never survive (false negatives are the usual LSH trade-off,
-  tunable via bands×rows).
+- ``_scored_pairs`` verifies the candidates with the exact score
+  (Jaccard here, cosine for embeddings), so LSH false positives never
+  survive (false negatives are the usual LSH trade-off, tunable via
+  bands×rows).
 
-At 10^10 docs the band explode is num_bands× the corpus — you'd bucket the
-join (repartition by band_key) and write band tables once, amortized across
-dedup runs. The operators below express that plan shape.
+At 10^10 docs the band explode is num_bands× the corpus, so
+``write_minhash_tables`` writes the shingle and band tables once, bucketed
+on their join keys (``_save_bucketed``), amortized across dedup runs;
+``append_minhash_tables`` adds one write generation and
+``compact_minhash_tables`` folds the generations back into one.
 
 Hashing: the default ``hash_fn`` is ``portable_hash`` (md5-based) so every
 operator here has an exact DuckDB oracle. At production scale pass
@@ -152,16 +159,16 @@ def jaccard_col(a: Column, b: Column) -> Column:
 def _guarded_band_candidates(
     banded: DataFrame, join_keys: list[str], cap: int | None, cache: bool = True
 ) -> DataFrame:
-    """Candidate pairs from a (doc_id, sig_fp, *join_keys) band table with
-    the hot-bucket guard (see HOT_BUCKET_CAP). One window pass over the
-    join keys tags every row with its bucket size, the bucket's min
-    doc_id, and the min doc_id of its exact-SIGNATURE group (sig_fp); the
-    windows' required distribution is satisfied by the self-join's hash
-    partitioning (and by the bucketed table layout), so the guard adds no
-    exchange beyond what the join needed anyway.
+    """Candidate pairs (id_a < id_b) from a (doc_id, sig_fp, *join_keys)
+    band table with the hot-bucket guard (see HOT_BUCKET_CAP). One window
+    pass over the join keys tags every row with its bucket size, the
+    bucket's min doc_id, and the min doc_id of its exact-SIGNATURE group
+    (sig_fp); the windows' required distribution is satisfied by the
+    self-join's hash partitioning (and by the bucketed table layout), so
+    the guard adds no exchange beyond what the join needed anyway.
 
-    Buckets at or under ``cap`` self-join as before. Bigger ones emit two
-    linear star layers instead of the quadratic clique:
+    Buckets at or under ``cap`` self-join as a clique. Bigger ones emit
+    two linear star layers instead:
     - (group_rep, member) within each identical-signature group — the
       byte-identical/boilerplate docs that CREATE hot buckets share a
       full signature and verify at jaccard 1.0, so the downstream filter
@@ -174,64 +181,81 @@ def _guarded_band_candidates(
       clique edges among non-identical members of a diverted bucket (the
       documented recall bound; ``hot_bucket_stats`` reports the buckets).
 
-    The windowed band table is consumed by FOUR branches (two self-join
-    sides + two star layers); ``cache=True`` (default) materializes it
-    once — measured 2.4× faster on the 100k bucketed-pairs bench than
-    recomputing per branch, at the cost of a MEMORY_AND_DISK entry the
-    size of the narrow 4-column band table (spills, never OOMs; pass
-    ``cache=False`` to trade time for zero block-manager footprint).
-    Like the shingle cache in ``minhash_dedup_pairs``, the entry lives
-    until the caller is done with the RETURNED (lazy) DataFrame — there
-    is no safe point inside this function to unpersist it; long-lived
-    sessions looping over many corpora should run
-    ``spark.catalog.clearCache()`` between corpora or pass
-    ``cache=False``.
+    ``cap=None`` turns the guard off: every row is a normal row, so there
+    is no window pass and no star layer — the plain quadratic self-join,
+    for corpora the CALLER can bound well under any degenerate-bucket
+    size (the two window sorts cost ~1 s on a 1k-doc corpus, which is
+    pure overhead there).
 
-    ``cap=None`` bypasses the guard entirely (no window pass, the plain
-    quadratic self-join) — for corpora the CALLER can bound well under
-    any degenerate-bucket size; the two window sorts cost ~1 s on a
-    1k-doc corpus, which is pure overhead there."""
-    if cap is None:
-        b = banded.cache() if cache else banded
-        cond = F.col("a.doc_id") < F.col("b.doc_id")
-        for kcol in join_keys:
-            cond = (F.col(f"a.{kcol}") == F.col(f"b.{kcol}")) & cond
-        return (
-            b.alias("a")
-            .join(b.alias("b"), cond)
-            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
+    The (tagged) band table feeds both self-join sides and the star
+    layers; ``cache=True`` (default) materializes it once — measured 2.4×
+    faster on the 100k bucketed-pairs bench than recomputing per branch,
+    at the cost of a MEMORY_AND_DISK entry the size of the narrow band
+    table (spills, never OOMs; pass ``cache=False`` to trade time for
+    zero block-manager footprint). The entry lives until the caller is
+    done with the RETURNED (lazy) DataFrame — there is no safe point
+    inside this function to unpersist it; long-lived sessions looping
+    over many corpora should run ``spark.catalog.clearCache()`` between
+    corpora or pass ``cache=False``."""
+    tagged = banded
+    if cap is not None:
+        w = Window.partitionBy(*join_keys)
+        tagged = (
+            banded.withColumn("_n", F.count(F.lit(1)).over(w))
+            .withColumn("_rep", F.min("doc_id").over(w))
+            .withColumn(
+                "_grp_rep",
+                F.min("doc_id").over(Window.partitionBy(*join_keys, "sig_fp")),
+            )
         )
-    w = Window.partitionBy(*join_keys)
-    wg = Window.partitionBy(*join_keys, "sig_fp")
-    tagged = (
-        banded.withColumn("_n", F.count(F.lit(1)).over(w))
-        .withColumn("_rep", F.min("doc_id").over(w))
-        .withColumn("_grp_rep", F.min("doc_id").over(wg))
-    )
     if cache:
         tagged = tagged.cache()
-    normal = tagged.filter(F.col("_n") <= cap)
+    normal = tagged if cap is None else tagged.filter(F.col("_n") <= cap)
     cond = F.col("a.doc_id") < F.col("b.doc_id")
     for kcol in join_keys:
         cond = (F.col(f"a.{kcol}") == F.col(f"b.{kcol}")) & cond
-    clique = (
+    pairs = (
         normal.alias("a")
         .join(normal.alias("b"), cond)
         .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
     )
-    hot = tagged.filter(F.col("_n") > cap)
-    star_same_sig = hot.filter(F.col("doc_id") != F.col("_grp_rep")).select(
-        F.col("_grp_rep").alias("id_a"), F.col("doc_id").alias("id_b")
-    )
-    star_reps = hot.filter(
-        (F.col("doc_id") == F.col("_grp_rep")) & (F.col("_grp_rep") != F.col("_rep"))
-    ).select(F.col("_rep").alias("id_a"), F.col("_grp_rep").alias("id_b"))
-    return (
-        clique.unionByName(star_same_sig)
-        .unionByName(star_reps)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    if cap is not None:
+        hot = tagged.filter(F.col("_n") > cap)
+        star_same_sig = hot.filter(F.col("doc_id") != F.col("_grp_rep")).select(
+            F.col("_grp_rep").alias("id_a"), F.col("doc_id").alias("id_b")
+        )
+        star_reps = hot.filter(
+            (F.col("doc_id") == F.col("_grp_rep"))
+            & (F.col("_grp_rep") != F.col("_rep"))
+        ).select(F.col("_rep").alias("id_a"), F.col("_grp_rep").alias("id_b"))
+        pairs = pairs.unionByName(star_same_sig).unionByName(star_reps)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
+def _scored_pairs(
+    cand: DataFrame,
+    values: DataFrame,
+    value_col: str,
+    score: Callable[[Column, Column], Column],
+    name: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The verify step of every LSH dedup: join each side of the (id_a,
+    id_b) candidates to its ``value_col`` in ``values`` (keyed by doc_id)
+    and score the pair into column ``name``; the ``carry`` columns ride
+    along from the id_a side. The caller applies its own keep-predicate,
+    so each keeps the exact boundary rows of its oracle."""
+    out = cand
+    for side, extra in (("id_a", carry), ("id_b", ())):
+        out = out.join(
+            values.select(
+                F.col("doc_id").alias(side),
+                F.col(value_col).alias(f"_v_{side}"),
+                *extra,
+            ),
+            side,
+        )
+    return out.withColumn(name, score(F.col("_v_id_a"), F.col("_v_id_b")))
 
 
 def _sig_fp_col(sig: Column) -> Column:
@@ -242,48 +266,70 @@ def _sig_fp_col(sig: Column) -> Column:
     return F.xxhash64(F.concat_ws(",", F.transform(sig, lambda x: x.cast("string"))))
 
 
-def _shingle_frame(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(doc_id, shingles) projection — the ONE spelling of the shingle
-    stage shared by the pair join, the table writer, and the diagnostics
-    (a cast or column change lands everywhere at once)."""
-    return df.select(
+def _minhash_frames(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    num_hashes: int,
+    bands: int,
+    hash_fn: Callable[[Column], Column] | None,
+    folded: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """(shingles, banded) for a doc frame — the ONE construction of the
+    MinHash stages, shared by the in-session pairs, the diagnostics, the
+    table writer, the appender and the increment, so a diagnostic can
+    never describe, and an increment never join against, a band table
+    built differently from the dedup's:
+
+    - shingles: (doc_id, shingles);
+    - banded: (doc_id, sig_fp, band_id, band_key) — md5 band keys when
+      ``hash_fn`` is None (the oracle layout); ``folded=True`` folds
+      band_id into the key (xxhash64 of band_id:slice-key) for the
+      persisted single-column bucketed layout, (doc_id, sig_fp,
+      band_key). Cross-band fold collisions are harmless: every candidate
+      pair is verified by exact Jaccard.
+
+    The band frame carries ONLY narrow columns, so the self-join never
+    shuffles the shingle arrays. The docs are spread over all cores
+    first: the per-row stages are CPU-bound, and a single small parquet
+    file is one partition otherwise. Callers with several consumers of
+    the shingle frame cache it; the band frame then reads the cache."""
+    if bands < 1 or num_hashes % bands != 0:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a positive multiple of "
+            f"bands ({bands}) — a remainder silently drops signature values"
+        )
+    sc = df.sparkSession.sparkContext
+    nparts = max(df.rdd.getNumPartitions(), sc.defaultParallelism)
+    sh = df.repartition(nparts).select(
         F.col(id_col).cast("long").alias("doc_id"),
         shingles_col(text_col, k).alias("shingles"),
     )
-
-
-def _signatures_from_shingles(
-    sh: DataFrame, num_hashes: int, hash_fn: Callable[[Column], Column]
-) -> DataFrame:
-    """(doc_id, sig) from a shingle frame. Kept as its OWN projection step:
-    inlining the signature into downstream expressions would evaluate the
-    num_hashes-pass minhash once per consumer (CollapseProject declines to
-    merge, keeping it single-evaluation)."""
-    return sh.select(
+    # the signature is its OWN projection step: inlined into the band
+    # expressions, the num_hashes-pass minhash would be evaluated once
+    # per consumer (CollapseProject declines to merge, keeping it
+    # single-evaluation)
+    sig = F.col("sig")
+    banded = sh.select(
         "doc_id",
-        minhash_signature_col(F.col("shingles"), num_hashes, hash_fn=hash_fn).alias(
-            "sig"
-        ),
-    )
-
-
-def _banded_from_signatures(
-    sig_df: DataFrame,
-    bands: int,
-    rows: int,
-    hash_fn: Callable[[Column], Column] | None,
-) -> DataFrame:
-    """(doc_id, sig_fp, band_id, band_key) band table from a
-    (doc_id, sig) frame — the ONE construction minhash_dedup_pairs,
-    write_minhash_tables, and hot_bucket_stats all share, so a diagnostic
-    can never describe a different band table than the dedup ran."""
-    return sig_df.select(
+        minhash_signature_col(
+            F.col("shingles"), num_hashes, hash_fn=hash_fn or portable_hash
+        ).alias("sig"),
+    ).select(
         "doc_id",
-        _sig_fp_col(F.col("sig")).alias("sig_fp"),
-        F.posexplode(band_keys_col(F.col("sig"), bands, rows, hash_fn=hash_fn)).alias(
-            "band_id", "band_key"
-        ),
+        _sig_fp_col(sig).alias("sig_fp"),
+        F.posexplode(
+            band_keys_col(sig, bands, num_hashes // bands, hash_fn=hash_fn)
+        ).alias("band_id", "band_key"),
     )
+    if folded:
+        banded = banded.select(
+            "doc_id",
+            "sig_fp",
+            F.xxhash64(F.concat_ws(":", "band_id", "band_key")).alias("band_key"),
+        )
+    return sh, banded
 
 
 def hot_bucket_stats(
@@ -300,24 +346,18 @@ def hot_bucket_stats(
     """Diversion visibility: one row per OVER-CAP band bucket
     (band_id, band_key, n_docs). Run this alongside a dedup pass to report
     how much of the corpus took the star path — silent diversion would
-    read as full pair coverage when it isn't. Pass ``banded`` (the
-    ``_banded_from_signatures`` frame a dedup pass already built, or a
-    ``<prefix>_bands`` table read with band_id selected) to skip
-    recomputing the shingle+signature stage — the expensive part — and
-    guarantee the diagnostic describes the exact band table the dedup ran.
-    A ``write_minhash_tables`` bands table folds band_id into band_key and
-    carries no band_id column; it is accepted as-is (band_id reported
-    as 0, the same convention as ``embedding_hot_bucket_stats``)."""
+    read as full pair coverage when it isn't. Pass ``banded`` (the band
+    frame a dedup pass already built, or a ``<prefix>_bands`` table read
+    with band_id selected) to skip recomputing the shingle+signature
+    stage — the expensive part — and guarantee the diagnostic describes
+    the exact band table the dedup ran. A ``write_minhash_tables`` bands
+    table folds band_id into band_key and carries no band_id column; it
+    is accepted as-is (band_id reported as 0, the same convention as
+    ``embedding_hot_bucket_stats``)."""
     if banded is None:
-        if bands < 1 or num_hashes % bands != 0:
-            raise ValueError(
-                f"num_hashes ({num_hashes}) must be a positive multiple of "
-                f"bands ({bands}) — a remainder silently drops signature values"
-            )
-        rows = num_hashes // bands
-        sh = _shingle_frame(df, id_col, text_col, k)
-        sig_df = _signatures_from_shingles(sh, num_hashes, hash_fn or portable_hash)
-        banded = _banded_from_signatures(sig_df, bands, rows, hash_fn)
+        _, banded = _minhash_frames(
+            df, id_col, text_col, k, num_hashes, bands, hash_fn
+        )
     if "band_id" not in banded.columns:
         banded = banded.withColumn("band_id", F.lit(0))
     return (
@@ -348,37 +388,21 @@ def minhash_dedup_pairs(
     quadratic self-join (see HOT_BUCKET_CAP; ``hot_bucket_stats`` reports
     the diverted buckets; ``hot_bucket_cap=None`` skips the guard for
     corpora the caller can bound)."""
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of "
-            f"bands ({bands}) — a remainder silently drops signature values"
-        )
-    rows = num_hashes // bands
-    sig_hash = hash_fn or portable_hash
-    # CPU-bound per-row stage: spread it over all cores even when the
-    # input is a single small parquet file (one partition otherwise)
-    sc = df.sparkSession.sparkContext
-    nparts = max(df.rdd.getNumPartitions(), sc.defaultParallelism)
-    # shingle table computed ONCE and cached: it feeds both the signature
+    sh, banded = _minhash_frames(
+        df, id_col, text_col, k, num_hashes, bands, hash_fn
+    )
+    # shingle frame computed ONCE and cached: it feeds both the signature
     # build and (twice) the verification join — without the cache, Spark
     # re-derives the full shingle+hash plan on every self-join branch.
-    sh = _shingle_frame(df.repartition(nparts), id_col, text_col, k).cache()
-    sig_df = _signatures_from_shingles(sh, num_hashes, sig_hash)
-    # band table carries ONLY (doc_id, sig_fp, band_id, band_key): the
-    # self-join shuffles 4 narrow columns, never the shingle arrays. (The
-    # guard caches the windowed band table, so the signature build — the
-    # expensive stage — still runs once, not once per self-join side.)
-    banded = _banded_from_signatures(sig_df, bands, rows, hash_fn)
+    # (The guard caches the band table, so the signature build — the
+    # expensive stage — also runs once, not once per self-join side.)
+    sh = sh.cache()
     cand = _guarded_band_candidates(banded, ["band_id", "band_key"], hot_bucket_cap)
-    verified = (
-        cand.join(sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")), "id_b")
-        .withColumn("jaccard", jaccard_col(F.col("sh_a"), F.col("sh_b")))
+    return (
+        _scored_pairs(cand, sh, "shingles", jaccard_col, "jaccard")
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return verified
-
 
 
 def _table_location(spark, name: str) -> str:
@@ -526,16 +550,21 @@ def _check_minhash_params(
     buckets: int | None = None,
 ) -> None:
     """Fail loud when a caller's minhash parameters disagree with the
-    sidecar the tables were written under. Without this, a bands or
-    hash_fn mismatch does not error — batch band keys simply never match
-    corpus band keys, so an increment silently reports (near) zero pairs
-    and duplicates leak into the corpus; an append would bake
-    differently-banded rows into the tables. Tables from before the
-    sidecar (no params file) are accepted unchecked — rewrite with the
-    current ``write_minhash_tables`` to get the protection. ``hash_fn``
-    is compared by name and, where the sidecar records it, by the
-    expression it builds (sidecars written before the fingerprint compare
-    by name only)."""
+    sidecar the tables were written under. Both tables are resolved
+    (``_minhash_table``) first: a compaction that crashed between its
+    renames has taken the shingle directory away, and the sidecar with
+    it, so a check that ran before the recovery would read "no sidecar"
+    and pass. Without the check, a bands or hash_fn mismatch does not
+    error — batch band keys simply never match corpus band keys, so an
+    increment silently reports (near) zero pairs and duplicates leak into
+    the corpus; an append would bake differently-banded rows into the
+    tables. Tables from before the sidecar (no params file) are accepted
+    unchecked — rewrite with the current ``write_minhash_tables`` to get
+    the protection. ``hash_fn`` is compared by name and, where the
+    sidecar records it, by the expression it builds (sidecars written
+    before the fingerprint compare by name only)."""
+    for table in _MINHASH_KEYS:
+        _minhash_table(spark, name_prefix, table)
     try:
         stored = read_sidecar(
             _table_location(spark, f"{name_prefix}_shingles"), "minhash_params"
@@ -598,43 +627,14 @@ def write_minhash_tables(
     real cluster this is the same layout as Iceberg's bucket partition
     transform."""
     spark = df.sparkSession
-    for suffix in ("_shingles", "_bands"):
-        _drop_table(spark, f"{name_prefix}{suffix}")
-    sh = _shingle_frame(df, id_col, text_col, k)
-    # repartition on the bucket column first: a bucketed write otherwise
-    # emits (#input-partitions × buckets) files — the shuffle costs one
-    # exchange at write time and buys 1 file/bucket forever after
-    (
-        sh.repartition(buckets, F.col("doc_id"))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(f"{name_prefix}_shingles")
+    # build (and so check) the frames before the old tables are dropped:
+    # a bad parameter must leave them as they were
+    sh, banded = _minhash_frames(
+        df, id_col, text_col, k, num_hashes, bands, hash_fn, folded=True
     )
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of "
-            f"bands ({bands}) — a remainder silently drops signature values"
-        )
-    rows = num_hashes // bands
-    spark = df.sparkSession
-    sig_df = _signatures_from_shingles(
-        spark.table(f"{name_prefix}_shingles"), num_hashes, hash_fn
-    )
-    # band_id FOLDED into the key (single-column bucketed equi-join);
-    # sig_fp rides along for the reader's hot-bucket guard
-    banded = _fold_band_select(
-        _banded_from_signatures(sig_df, bands, rows, hash_fn)
-    )
-    (
-        banded.repartition(buckets, F.col("band_key"))
-        .write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(buckets, "band_key")
-        .sortBy("band_key")
-        .saveAsTable(f"{name_prefix}_bands")
-    )
+    for table in _MINHASH_KEYS:
+        _drop_table(spark, f"{name_prefix}_{table}")
+    _write_generation(sh, banded, name_prefix, buckets)
     # persist the construction parameters beside the shingle table: the
     # caller-side copy is losable state (same failure mode the ANN tables
     # guard with _ivf_centroids/_lsh_planes sidecars), and an increment or
@@ -644,50 +644,60 @@ def write_minhash_tables(
     _write_minhash_params(spark, name_prefix, k, num_hashes, bands, buckets, hash_fn)
 
 
-def _folded_bands(
+def _save_bucketed(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    num_hashes: int,
-    bands: int,
-    hash_fn: Callable[[Column], Column],
-) -> tuple[DataFrame, DataFrame]:
-    """(shingle frame, folded band frame) for a doc batch — the exact
-    construction ``write_minhash_tables`` persists, shared so the
-    incremental path can never band differently than the tables it joins
-    against. The band_id is FOLDED into the key (xxhash64 of
-    band_id:slice-key) to match the single-column bucketed layout;
-    cross-band fold collisions are harmless (every candidate pair is
-    verified by exact Jaccard)."""
-    if bands < 1 or num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be a positive multiple of "
-            f"bands ({bands}) — a remainder silently drops signature values"
-        )
-    rows = num_hashes // bands
-    sh = _shingle_frame(df, id_col, text_col, k)
-    banded = _fold_band_select(
-        _banded_from_signatures(
-            _signatures_from_shingles(sh, num_hashes, hash_fn), bands, rows, hash_fn
-        )
+    name: str,
+    key: str,
+    buckets: int,
+    mode: str = "append",
+    path: str | None = None,
+) -> None:
+    """Write ``df`` to catalog table ``name`` bucketed and sorted by
+    ``key`` — the ONE bucketed write (table build, append, compaction);
+    an append to a missing table creates it. Repartitioning on the bucket
+    column first puts each bucket on one task, so the write emits one
+    file per bucket instead of (#input-partitions × buckets); the source
+    must not carry the same bucket spec, or the optimizer elides that
+    repartition as redundant. ``bucketBy`` writes only through the
+    catalog; ``path`` makes the table an external one there."""
+    writer = (
+        df.repartition(buckets, F.col(key))
+        .write.mode(mode)
+        .format("parquet")
+        .bucketBy(buckets, key)
+        .sortBy(key)
     )
-    return sh, banded
+    if path is not None:
+        writer = writer.option("path", path)
+    writer.saveAsTable(name)
 
 
-def _fold_band_select(banded: DataFrame) -> DataFrame:
-    """Fold band_id into the key (xxhash64 of band_id:slice-key) — the ONE
-    spelling of the persisted single-column bucketed layout, shared by the
-    table writer, the appender, and the incremental path so they can never
-    band differently. Cross-band fold collisions are harmless: every
-    candidate pair is verified by exact Jaccard."""
-    return banded.select(
-        "doc_id",
-        "sig_fp",
-        F.xxhash64(F.concat_ws(":", F.col("band_id"), F.col("band_key"))).alias(
-            "band_key"
-        ),
-    )
+def _write_generation(
+    sh: DataFrame, banded: DataFrame, name_prefix: str, buckets: int
+) -> None:
+    """Append one write generation of a doc batch's ``_minhash_frames``
+    (folded) to both MinHash tables, creating missing ones. The band
+    frame re-reads the shingle subplan, so the shingle frame is cached
+    across the two writes."""
+    sh = sh.cache()
+    try:
+        for table, frame in (("shingles", sh), ("bands", banded)):
+            _save_bucketed(
+                frame, f"{name_prefix}_{table}", _MINHASH_KEYS[table], buckets
+            )
+    finally:
+        sh.unpersist()
+
+
+def _corpus_bands(spark, name_prefix: str) -> DataFrame:
+    """The corpus band table. Tables written before the hot-bucket guard
+    carry no ``sig_fp`` column; they degrade to ``sig_fp = doc_id``, the
+    single-layer star (every hot-bucket member links straight to the
+    bucket rep), instead of crashing the amortized-table workflow."""
+    banded = spark.table(_minhash_table(spark, name_prefix, "bands"))
+    if "sig_fp" not in banded.columns:
+        banded = banded.withColumn("sig_fp", F.col("doc_id"))
+    return banded
 
 
 def minhash_pairs_increment(
@@ -740,23 +750,21 @@ def minhash_pairs_increment(
         spark, name_prefix, k=k, num_hashes=num_hashes, bands=bands,
         hash_fn=hash_fn,
     )
-    sc = spark.sparkContext
-    nparts = max(new_docs.rdd.getNumPartitions(), sc.defaultParallelism)
-    sh_new, banded_new = _folded_bands(
-        new_docs.repartition(nparts), id_col, text_col, k, num_hashes, bands,
-        hash_fn,
+    sh_new, banded_new = _minhash_frames(
+        new_docs, id_col, text_col, k, num_hashes, bands, hash_fn, folded=True
     )
     # multiple consumers (touched-bucket semi-join, union guard pass,
     # verify joins, batch-side restriction) — cache both batch frames
     sh_new = sh_new.cache()
     banded_new = banded_new.cache()
-    corpus_bands = spark.table(_minhash_table(spark, name_prefix, "bands"))
-    if "sig_fp" not in corpus_bands.columns:  # pre-guard table layout
-        corpus_bands = corpus_bands.withColumn("sig_fp", F.col("doc_id"))
-    touched = corpus_bands.select("doc_id", "sig_fp", "band_key").join(
-        F.broadcast(banded_new.select("band_key").distinct()),
-        "band_key",
-        "left_semi",
+    touched = (
+        _corpus_bands(spark, name_prefix)
+        .select("doc_id", "sig_fp", "band_key")
+        .join(
+            F.broadcast(banded_new.select("band_key").distinct()),
+            "band_key",
+            "left_semi",
+        )
     )
     union_bands = touched.unionByName(
         banded_new.select("doc_id", "sig_fp", "band_key")
@@ -766,29 +774,15 @@ def minhash_pairs_increment(
     # left joins + an OR filter) — a semi-join per side would consume
     # cand_all twice and duplicate the whole union+guard subtree in the
     # plan; batch ids are distinct, so the left joins multiply no rows
-    new_ids = sh_new.select("doc_id")
-    cand = (
-        cand_all.join(
-            F.broadcast(
-                new_ids.select(
-                    F.col("doc_id").alias("id_a"), F.lit(True).alias("_new_a")
-                )
-            ),
-            "id_a",
-            "left",
+    cand = cand_all
+    for side in ("id_a", "id_b"):
+        new_ids = sh_new.select(
+            F.col("doc_id").alias(side), F.lit(True).alias(f"_new_{side}")
         )
-        .join(
-            F.broadcast(
-                new_ids.select(
-                    F.col("doc_id").alias("id_b"), F.lit(True).alias("_new_b")
-                )
-            ),
-            "id_b",
-            "left",
-        )
-        .filter(F.col("_new_a").isNotNull() | F.col("_new_b").isNotNull())
-        .drop("_new_a", "_new_b")
-    )
+        cand = cand.join(F.broadcast(new_ids), side, "left")
+    cand = cand.filter(
+        F.col("_new_id_a").isNotNull() | F.col("_new_id_b").isNotNull()
+    ).drop("_new_id_a", "_new_id_b")
     # verify: resolve each side's shingles from EITHER store — the corpus
     # table (bucketed by doc_id, co-located join) or the cached batch
     # frame (small ⇒ broadcast) — without unioning them, which would
@@ -860,7 +854,7 @@ def append_minhash_tables(
     signature work and one narrow batch-side exchange per table, after
     which the next ``minhash_pairs_increment``/``minhash_pairs_from_tables``
     sees the union corpus on the same exchange-free layout. Uses the
-    bucket-spec'd append (``bucketBy(...).mode("append").saveAsTable``) so
+    bucket-spec'd append (``_save_bucketed``: bucketBy + saveAsTable) so
     the new files land correctly bucketed — NOT ``insertInto``, which
     silently ignores the bucket spec and would corrupt every later
     bucket-aligned join. Call AFTER consuming the increment's pairs (its
@@ -888,38 +882,13 @@ def append_minhash_tables(
         "the shingle/band tables may be torn (docs with shingles but no "
         "bands never surface as candidates; retrying would double-append).",
     )
-    tables = {t: _minhash_table(spark, name_prefix, t) for t in _MINHASH_KEYS}
-    sc = spark.sparkContext
-    nparts = max(new_docs.rdd.getNumPartitions(), sc.defaultParallelism)
-    sh, banded = _folded_bands(
-        new_docs.repartition(nparts), id_col, text_col, k, num_hashes, bands,
-        hash_fn,
+    sh, banded = _minhash_frames(
+        new_docs, id_col, text_col, k, num_hashes, bands, hash_fn, folded=True
     )
-    # the band frame re-reads the shingle subplan — cache it so the
-    # num_hashes-pass signature stage runs once across the two writes
-    sh = sh.cache()
-    try:
-        with open(marker, "w") as f:
-            f.write("append in progress")
-        (
-            sh.repartition(buckets, F.col("doc_id"))
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(buckets, "doc_id")
-            .sortBy("doc_id")
-            .saveAsTable(tables["shingles"])
-        )
-        (
-            banded.repartition(buckets, F.col("band_key"))
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(buckets, "band_key")
-            .sortBy("band_key")
-            .saveAsTable(tables["bands"])
-        )
-        os.remove(marker)
-    finally:
-        sh.unpersist()
+    with open(marker, "w") as f:
+        f.write("append in progress")
+    _write_generation(sh, banded, name_prefix, buckets)
+    os.remove(marker)
 
 
 def _bucket_count(spark, name: str) -> int:
@@ -948,20 +917,10 @@ def _compact_bucketed_table(spark, name: str, key: str, buckets: int) -> dict:
     def write_copy(tmp: str) -> None:
         # read the files, not the catalog entry: after the swap recovered
         # a crash, the entry's cached file listing names files that the
-        # recovery renamed away. Repartition on the writer's BUCKET-ID
-        # expression, which keeps whole buckets on one task (≤ ``buckets``
-        # output files total) and, unlike a repartition(buckets, key)
-        # over a source bucketed the same way, cannot be elided as
-        # redundant
-        (
-            spark.read.parquet(loc)
-            .repartition(buckets, F.pmod(F.hash(F.col(key)), F.lit(buckets)))
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .option("path", tmp)
-            .saveAsTable(staging)
+        # recovery renamed away (and a file read carries no bucket spec
+        # that would let the writer's repartition be elided)
+        _save_bucketed(
+            spark.read.parquet(loc), staging, key, buckets, "overwrite", tmp
         )
         spark.sql(f"DROP TABLE {staging}")
 
@@ -1000,13 +959,13 @@ def compact_minhash_tables(
     disagree — compacting would bake the tear in). Returns
     {"shingles": stats, "bands": stats}, each {rows, files_before,
     files_after}."""
-    _refuse_torn_append(
-        spark, name_prefix, "compacting now would bake the torn state in."
-    )
     specs = {
         t: _bucket_count(spark, _minhash_table(spark, name_prefix, t))
         for t in _MINHASH_KEYS
     }
+    _refuse_torn_append(
+        spark, name_prefix, "compacting now would bake the torn state in."
+    )
     if buckets is not None and set(specs.values()) != {buckets}:
         raise ValueError(
             f"{name_prefix}: buckets={buckets} disagrees with the value "
@@ -1035,27 +994,16 @@ def minhash_pairs_from_tables(
     exchange-free too; at 10^10 docs the only shuffle left is the
     candidate-pair dropDuplicates.
 
-    Backward compatibility: band tables written before the guard carried
-    no ``sig_fp`` column — those degrade to ``sig_fp = doc_id``, i.e. the
-    single-layer star (every hot-bucket member links straight to the
-    bucket rep), instead of crashing the amortized-table workflow; rewrite
+    Band tables written before the guard carried no ``sig_fp`` column;
+    those degrade to the single-layer star (``_corpus_bands``) — rewrite
     the tables with the current ``write_minhash_tables`` to get the
     identical-signature layer."""
-    banded = spark.table(_minhash_table(spark, name_prefix, "bands"))
-    if "sig_fp" not in banded.columns:
-        banded = banded.withColumn("sig_fp", F.col("doc_id"))
-    cand = _guarded_band_candidates(banded, ["band_key"], hot_bucket_cap)
+    cand = _guarded_band_candidates(
+        _corpus_bands(spark, name_prefix), ["band_key"], hot_bucket_cap
+    )
     sh = spark.table(_minhash_table(spark, name_prefix, "shingles"))
     return (
-        cand.join(
-            sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b")),
-            "id_b",
-        )
-        .withColumn("jaccard", jaccard_col(F.col("sh_a"), F.col("sh_b")))
+        _scored_pairs(cand, sh, "shingles", jaccard_col, "jaccard")
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

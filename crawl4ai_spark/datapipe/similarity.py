@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from crawl4ai_spark.datapipe.dedup import (
     HOT_BUCKET_CAP,
     _guarded_band_candidates,
+    _scored_pairs,
     _sig_fp_col,
 )
 from crawl4ai_spark.storage import (
@@ -674,14 +675,35 @@ def ann_ivf_topk(
     return _per_query_topk(scored, query_id_col, id_col, k)
 
 
-def _vec_fp_col(vec: Column) -> Column:
-    """Collision-resistant fingerprint of an embedding array — equal
-    vectors ⇔ equal fingerprints. Distinct vectors colliding here still
-    pass through the exact cosine verify, so a collision can never create
-    a false pair. Delegates to ``dedup._sig_fp_col`` so the minhash and
-    embedding guards share ONE fingerprint definition (a separator or
-    cast change lands in both or neither)."""
-    return _sig_fp_col(vec)
+def _cosine_pairs(
+    df: DataFrame,
+    planes: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    hot_bucket_cap: int | None,
+    cache: bool,
+) -> tuple[DataFrame, DataFrame]:
+    """(base, scored) — the ONE construction ``embedding_dedup_pairs`` and
+    ``cosine_cluster`` share. ``base`` is (doc_id, vec, bucket), cached
+    unless ``cache=False``; ``scored`` is every guarded candidate pair of
+    a bucket, (id_a, id_b, bucket, cosine), unfiltered. The guard reads a
+    (doc_id, sig_fp, bucket) frame whose sig_fp is the vector's
+    fingerprint — ``dedup._sig_fp_col``, the minhash guard's own
+    definition: equal vectors ⇔ equal fingerprints, and distinct vectors
+    colliding there still meet the exact cosine verify, so a collision
+    can never create a false pair."""
+    base = _spread(df).select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(vec_col).alias("vec"),
+        lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
+    )
+    if cache:
+        base = base.cache()
+    banded = base.select("doc_id", _sig_fp_col(F.col("vec")).alias("sig_fp"), "bucket")
+    cand = _guarded_band_candidates(banded, ["bucket"], hot_bucket_cap, cache=cache)
+    return base, _scored_pairs(
+        cand, base, "vec", cosine_col, "cosine", carry=("bucket",)
+    )
 
 
 def embedding_dedup_pairs(
@@ -696,41 +718,21 @@ def embedding_dedup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
     threshold) among LSH-bucket cohabitants — the vector twin of
     minhash_dedup_pairs, with the same candidate-then-verify shape AND
-    the same hot-bucket guard (it literally reuses
-    dedup._guarded_band_candidates over a (vid, vector-fingerprint,
-    bucket) frame): buckets above ``hot_bucket_cap`` emit two linear star
-    layers instead of the quadratic clique — byte-identical embeddings
-    (the boilerplate clones that create hot buckets) share a fingerprint
-    and verify at cosine 1, so they stay connected; cross-group clique
-    edges among non-identical members of a diverted bucket are the
-    documented recall trade. ``hot_bucket_cap=None`` skips the guard
-    (repo-wide convention), for corpora the caller can bound.
-    ``cache=False`` trades the base/guard cache entries for zero
-    block-manager footprint (see _guarded_band_candidates) — for sessions
-    looping over many corpora without spark.catalog.clearCache()."""
-    base = _spread(df).select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_bucket_col(F.col(vec_col), planes).alias("_bucket"),
-    )
-    if cache:
-        base = base.cache()
-    banded = base.select(
-        F.col("vid").alias("doc_id"),
-        _vec_fp_col(F.col("vec")).alias("sig_fp"),
-        "_bucket",
-    )
-    cand = _guarded_band_candidates(banded, ["_bucket"], hot_bucket_cap, cache=cache)
-    return (
-        cand.join(
-            base.select(F.col("vid").alias("id_a"), F.col("vec").alias("_va")), "id_a"
-        )
-        .join(
-            base.select(F.col("vid").alias("id_b"), F.col("vec").alias("_vb")), "id_b"
-        )
-        .withColumn("cosine", cosine_col(F.col("_va"), F.col("_vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    the same hot-bucket guard (it runs dedup's candidate join and verify
+    step over a (doc_id, vector-fingerprint, bucket) frame): buckets above
+    ``hot_bucket_cap`` emit two linear star layers instead of the
+    quadratic clique — byte-identical embeddings (the boilerplate clones
+    that create hot buckets) share a fingerprint and verify at cosine 1,
+    so they stay connected; cross-group clique edges among non-identical
+    members of a diverted bucket are the documented recall trade.
+    ``hot_bucket_cap=None`` skips the guard (repo-wide convention), for
+    corpora the caller can bound. ``cache=False`` trades the base/guard
+    cache entries for zero block-manager footprint (see
+    _guarded_band_candidates) — for sessions looping over many corpora
+    without spark.catalog.clearCache()."""
+    _, scored = _cosine_pairs(df, planes, id_col, vec_col, hot_bucket_cap, cache)
+    return scored.filter(F.col("cosine") >= threshold).select(
+        "id_a", "id_b", "cosine"
     )
 
 
@@ -799,13 +801,6 @@ def cosine_cluster(
     cluster_label = min vec_id of the component."""
     import pandas as pd
 
-    base = _spread(df).select(
-        F.col(id_col).cast("long").alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
-    if cache:
-        base = base.cache()
     # ε-edge candidates through the SAME guarded kernel as
     # embedding_dedup_pairs: buckets above hot_bucket_cap emit two linear
     # star layers instead of the quadratic clique. For the union-find
@@ -814,32 +809,13 @@ def cosine_cluster(
     # the trade is cross-group edges among NON-identical members of a
     # diverted bucket — the same documented recall bound as the minhash
     # path. hot_bucket_cap=None skips the guard (repo-wide convention).
-    banded = base.select(
-        F.col("vid").alias("doc_id"),
-        _vec_fp_col(F.col("vec")).alias("sig_fp"),
-        "bucket",
+    base, scored = _cosine_pairs(df, planes, id_col, vec_col, hot_bucket_cap, cache)
+    edges = scored.filter(F.lit(1.0) - F.col("cosine") <= max_dist).select(
+        "bucket", F.col("id_a").alias("vid"), F.col("id_b").alias("other")
     )
-    cand = _guarded_band_candidates(banded, ["bucket"], hot_bucket_cap, cache=cache)
-    edges = (
-        cand.join(
-            base.select(
-                F.col("vid").alias("id_a"), F.col("vec").alias("_va"), "bucket"
-            ),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("vid").alias("id_b"), F.col("vec").alias("_vb")),
-            "id_b",
-        )
-        .withColumn("cosine", cosine_col(F.col("_va"), F.col("_vb")))
-        .filter(F.lit(1.0) - F.col("cosine") <= max_dist)
-        .select(
-            "bucket",
-            F.col("id_a").alias("vid"),
-            F.col("id_b").alias("other"),
-        )
+    nodes = base.select(
+        "bucket", F.col("doc_id").alias("vid"), F.lit(None).cast("long").alias("other")
     )
-    nodes = base.select("bucket", "vid", F.lit(None).cast("long").alias("other"))
     both = nodes.unionByName(edges)
 
     def components(pdf: pd.DataFrame) -> pd.DataFrame:

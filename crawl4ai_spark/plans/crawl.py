@@ -134,7 +134,8 @@ class CrawlConfig:
     # extra shuffle rounds than the skew they prevent — use plain windows
     # (the frontier count is known from the manifest, so this is free)
     salt_bypass_rows: int = 100_000
-    # extra filter Columns applied to discovered candidate urls
+    # the reference's filter_chain: callables from the url Column to a
+    # boolean Column; a discovered candidate url is kept where all hold
     filter_conditions: list = field(default_factory=list)
     # scorer: callable(url Column) -> score Column; default 0.0 (BFS order)
     scorer: Callable | None = None

@@ -152,6 +152,50 @@ def test_politeness_budget_enforced(spark, pages, tmp_path):
     assert worst <= 5
 
 
+def test_filter_conditions_drop_discovered_urls(spark, pages, tmp_path):
+    """A ``filter_conditions`` entry maps the url Column to a boolean
+    Column (the reference's filter_chain): discovered urls it rejects are
+    never seen nor fetched, while the same crawl without it reaches them.
+    The seeds (hosts 0 and 2) do not carry the token."""
+    token = "://host3."
+    robots = build_robots(spark)
+    seeds = build_seeds(spark, 3)
+
+    def crawl(wd, conditions):
+        cfg = CrawlConfig(
+            mode="bfs", max_pages=100000, max_depth=3, host_budget=100000,
+            include_external=True, filter_conditions=conditions,
+        )
+        run = CrawlRun(spark, pages, robots, seeds, str(wd), cfg)
+        run.run(max_iterations=4)
+        return [
+            t.filter(F.col(col).contains(token)).count()
+            for t, col in ((run.results(), "url"), (run.seen(), "url_norm"))
+        ]
+
+    assert min(crawl(tmp_path / "open", [])) > 0
+    assert crawl(
+        tmp_path / "filtered", [lambda url: ~url.contains(token)]
+    ) == [0, 0]
+
+
+def test_contract_crawl_row_removes_its_workdir(spark, sf_dir):
+    """The crawl_bfs contract row crawls in a temporary workdir and
+    returns its collected rows, so no ``c4ai_bfs_*`` workdir stays in
+    the temp dir."""
+    import os
+    import tempfile
+
+    from crawl4ai_spark.contract import QUERIES
+
+    def workdirs():
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("c4ai_bfs_")}
+
+    before = workdirs()
+    assert QUERIES["crawl_bfs"](spark, sf_dir).collect()
+    assert workdirs() <= before
+
+
 def test_resume_equivalence(spark, pages, tmp_path):
     """Running 4 iterations in one go == 2 + (new CrawlRun) + 2 over the
     same workdir — snapshot checkpointing makes the crawl resumable."""

@@ -1903,3 +1903,89 @@ def test_minhash_params_sidecar_fingerprints_hash_fn(spark, sf_dir):
     with open(path, "w") as f:
         json.dump(stored, f)
     _check_minhash_params(spark, "t_fp", hash_fn=salted, **params)
+
+
+def test_write_minhash_tables_bad_params_keep_old_tables(spark, sf_dir):
+    """A rebuild under num_hashes not divisible by bands raises before it
+    drops anything: the old tables, their sidecar and their pairs stay."""
+    import uuid
+
+    from crawl4ai_spark.datapipe.dedup import (
+        _drop_table,
+        minhash_pairs_from_tables,
+        read_minhash_params,
+        write_minhash_tables,
+    )
+
+    prefix = f"t_badw_{uuid.uuid4().hex[:8]}"
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .filter("doc_id < 40")
+    )
+    try:
+        write_minhash_tables(docs, "doc_id", "text", prefix, hash_fn=F.xxhash64,
+                             buckets=2)
+        params = read_minhash_params(spark, prefix)
+        before = {tuple(r) for r in minhash_pairs_from_tables(spark, prefix).collect()}
+        assert before
+        with pytest.raises(ValueError, match="positive multiple of bands"):
+            write_minhash_tables(docs, "doc_id", "text", prefix,
+                                 hash_fn=F.xxhash64, bands=5, buckets=2)
+        assert read_minhash_params(spark, prefix) == params
+        after = minhash_pairs_from_tables(spark, prefix).collect()
+        assert {tuple(r) for r in after} == before
+    finally:
+        for table in ("shingles", "bands"):
+            _drop_table(spark, f"{prefix}_{table}")
+
+
+def test_minhash_params_checked_after_window_b_recovery(spark, sf_dir):
+    """A compaction that crashed in window B has renamed the shingle
+    directory, and the params sidecar with it, away. An increment under
+    mismatched bands must recover the table before it checks the
+    parameters, and so raise instead of silently returning no pairs."""
+    import json
+    import os
+    import shutil
+    import uuid
+
+    from crawl4ai_spark.datapipe.dedup import (
+        _drop_table,
+        _table_location,
+        minhash_pairs_increment,
+        read_minhash_params,
+        write_minhash_tables,
+    )
+    from crawl4ai_spark.storage import _marker_path
+
+    prefix = f"t_winb_{uuid.uuid4().hex[:8]}"
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .filter("doc_id < 40")
+    )
+    batch = docs.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.lit(" "), "text").alias("text"),
+    )
+    try:
+        write_minhash_tables(docs, "doc_id", "text", prefix, hash_fn=F.xxhash64,
+                             buckets=2)
+        loc = _table_location(spark, f"{prefix}_shingles")
+        tmp, old = loc + ".compacting-b", loc + ".precompact-b"
+        os.rename(loc, old)
+        shutil.copytree(old, tmp)
+        with open(_marker_path(loc), "w") as f:
+            json.dump({"tmp": tmp, "old": old}, f)
+        with pytest.raises(ValueError, match="bands"):
+            minhash_pairs_increment(spark, batch, prefix, bands=8,
+                                    hash_fn=F.xxhash64).count()
+        assert read_minhash_params(spark, prefix)["bands"] == 4
+        assert minhash_pairs_increment(
+            spark, batch, prefix, hash_fn=F.xxhash64
+        ).count() > 0
+    finally:
+        spark.catalog.clearCache()
+        for table in ("shingles", "bands"):
+            _drop_table(spark, f"{prefix}_{table}")
